@@ -12,89 +12,132 @@ global threshold than the per-partition one (drain3.ini:112 vs :98),
 
 Scale design: drift never sees row-level data — only merged histograms
 (bounded cardinality: kinds × bins) produced by stats.py in one
-aggregation pass. KS is computed from histogram CDFs (max-gap over a
-cumulative-sum window), error bounded by bin width; exact small-data KS
-is cross-checked in tests. All window/aggregate math is JVM-side.
+aggregation pass. The statistics themselves are metadata-scale math:
+both histograms are collected to the driver and ONE kernel
+(``histogram_drift``) computes PSI, histogram-KS (max CDF gap, error
+bounded by bin width; exact small-data KS is cross-checked in tests),
+JSD, chi-squared and the per-bucket PSI contributions in plain Python,
+summing in ascending bucket order so every score is deterministic. The
+DataFrame functions below are collect → kernel → ``createDataFrame``
+wrappers over it; the temporal rules further down stay JVM-side.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..schema import VERDICTS_DDL
 
 EPS = 1e-6
 
 
-def _normalized(hist: DataFrame, keys: list[str], bucket_col: str) -> DataFrame:
-    """Add p = count / total within each `keys` group."""
-    w = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(1))
-    return hist.withColumn("p", F.col("count") / F.sum("count").over(w))
+def _order(v):
+    """Spark's ascending sort key: NULL first."""
+    return (v is not None, v)
 
 
-def _joined_shares(
+def collect_histogram(
+    hist: DataFrame, keys: list[str], bucket_col: str = "bucket"
+) -> list[tuple]:
+    """(key tuple, bucket, count) rows of a (keys..., bucket, count)
+    histogram frame — the kernel's input."""
+    n = len(keys)
+    return [
+        (tuple(r[:n]), r[n], r[n + 1])
+        for r in hist.select(*keys, bucket_col, "count").collect()
+    ]
+
+
+def histogram_drift(current: list[tuple], baseline: list[tuple]) -> dict:
+    """The drift family's ONE kernel over two collected histograms
+    ((key tuple, bucket, count) rows). Returns, per key present on
+    either side, ``{"psi", "ks", "jsd", "chi2", "dof", "buckets"}``
+    where ``buckets`` lists (bucket, p_cur, p_base, psi_contrib) in
+    ascending bucket order.
+
+    Shares are p = count / group total; a bucket (or a whole key)
+    absent on one side has share 0 there. PSI floors both shares at
+    ε so one-sided buckets contribute finitely; KS is the max CDF gap
+    over the bucket axis; JSD (natural log, range [0, ln 2]) needs no
+    floor because the midpoint has mass wherever either side does;
+    chi-squared is the two-sample homogeneity statistic on the raw
+    counts (expected = side total × pooled share), dof = buckets − 1.
+    Every sum runs in ascending bucket order, so the scores are
+    identical however the histograms were partitioned."""
+    groups: dict = {}
+    for side, rows in ((0, current), (1, baseline)):
+        for key, bucket, count in rows:
+            cell = groups.setdefault(key, {}).setdefault(bucket, [0, 0])
+            cell[side] += count
+    out = {}
+    for key in sorted(groups, key=lambda k: tuple(map(_order, k))):
+        cells = groups[key]
+        buckets = sorted(cells, key=_order)
+        n_cur = sum(cells[b][0] for b in buckets)
+        n_base = sum(cells[b][1] for b in buckets)
+        n_all = n_cur + n_base
+        psi = jsd = chi2 = ks = 0.0
+        cdf_cur = cdf_base = 0.0
+        shares = []
+        for b in buckets:
+            c_cur, c_base = cells[b]
+            p = c_cur / n_cur if n_cur else 0.0
+            q = c_base / n_base if n_base else 0.0
+            pf, qf = max(p, EPS), max(q, EPS)
+            contrib = (pf - qf) * math.log(pf / qf)
+            psi += contrib
+            shares.append((b, p, q, contrib))
+            cdf_cur += p
+            cdf_base += q
+            ks = max(ks, abs(cdf_cur - cdf_base))
+            m = (p + q) / 2
+            kl_p = p * math.log(p / m) if p > 0 else 0.0
+            kl_q = q * math.log(q / m) if q > 0 else 0.0
+            jsd += (kl_p + kl_q) / 2
+            pooled = (c_cur + c_base) / n_all if n_all else 0.0
+            e_cur, e_base = n_cur * pooled, n_base * pooled
+            d_cur, d_base = c_cur - e_cur, c_base - e_base
+            chi2 += (d_cur * d_cur / e_cur if e_cur > 0 else 0.0) + (
+                d_base * d_base / e_base if e_base > 0 else 0.0
+            )
+        out[key] = {
+            "psi": psi, "ks": ks, "jsd": jsd, "chi2": chi2,
+            "dof": len(buckets) - 1, "buckets": shares,
+        }
+    return out
+
+
+def _drift_frame(
     current: DataFrame,
     baseline: DataFrame,
     keys: list[str],
     bucket_col: str,
+    fields: list[T.StructField],
+    row_fn,
 ) -> DataFrame:
-    """Normalized per-bucket shares of both sides, full-outer joined —
-    the shared input of PSI and histogram-KS (built once per drift
-    pass; these are bounded-cardinality frames: |keys| × bins rows)."""
-    cur = _normalized(current, keys, bucket_col).select(
-        *keys, bucket_col, F.col("p").alias("p_cur")
+    """Collect both histograms, run the kernel, and return the rows
+    ``row_fn(stats)`` yields per key as a local DataFrame, key columns
+    typed as in ``current``."""
+    stats = histogram_drift(
+        collect_histogram(current, keys, bucket_col),
+        collect_histogram(baseline, keys, bucket_col),
     )
-    base = _normalized(baseline, keys, bucket_col).select(
-        *keys, bucket_col, F.col("p").alias("p_base")
+    schema = T.StructType(
+        [T.StructField(k, current.schema[k].dataType) for k in keys] + fields
     )
-    return cur.join(base, [*keys, bucket_col], "full_outer").fillna(
-        0.0, subset=["p_cur", "p_base"]
-    )
+    rows = [(*key, *vals) for key, st in stats.items() for vals in row_fn(st)]
+    return current.sparkSession.createDataFrame(rows, schema)
 
 
-def _psi_contrib():
-    """Per-bucket PSI contribution (ε-floored) — the ONE definition
-    shared by the aggregate and the explain surface."""
-    p = F.greatest(F.col("p_cur"), F.lit(EPS))
-    q = F.greatest(F.col("p_base"), F.lit(EPS))
-    return (p - q) * F.log(p / q)
-
-
-def _psi_from_shares(joined: DataFrame, keys: list[str]) -> DataFrame:
-    return joined.groupBy(*keys).agg(F.sum(_psi_contrib()).alias("psi"))
-
-
-def _jsd_from_shares(joined: DataFrame, keys: list[str]) -> DataFrame:
-    """JSD aggregation over a normalized-shares join — the ONE
-    implementation behind both jsd_from_histograms and the
-    drift_verdicts optional-metric path (a divergent copy would let an
-    epsilon or log-base fix land on one side only)."""
-    m = (F.col("p_cur") + F.col("p_base")) / 2
-    kl_p = F.when(
-        F.col("p_cur") > 0,
-        F.col("p_cur") * F.log(F.col("p_cur") / m),
-    ).otherwise(0.0)
-    kl_q = F.when(
-        F.col("p_base") > 0,
-        F.col("p_base") * F.log(F.col("p_base") / m),
-    ).otherwise(0.0)
-    return joined.groupBy(*keys).agg(F.sum((kl_p + kl_q) / 2).alias("jsd"))
-
-
-def _ks_from_shares(
-    joined: DataFrame, keys: list[str], bucket_col: str
-) -> DataFrame:
-    w = (
-        Window.partitionBy(*keys)
-        if keys
-        else Window.partitionBy(F.lit(1))
-    ).orderBy(bucket_col).rowsBetween(Window.unboundedPreceding, 0)
-    cdfs = joined.select(
-        *keys,
-        F.sum("p_cur").over(w).alias("cdf_cur"),
-        F.sum("p_base").over(w).alias("cdf_base"),
-    )
-    return cdfs.groupBy(*keys).agg(
-        F.max(F.abs(F.col("cdf_cur") - F.col("cdf_base"))).alias("ks")
+def _stat_frame(current, baseline, keys, bucket_col, stat):
+    return _drift_frame(
+        current, baseline, keys, bucket_col,
+        [T.StructField(stat, T.DoubleType())],
+        lambda st: [(st[stat],)],
     )
 
 
@@ -110,9 +153,7 @@ def psi(
     empty on one side contribute finitely. Inputs are histogram tables
     (keys..., bucket, count); output one row per group: (keys..., psi).
     """
-    return _psi_from_shares(
-        _joined_shares(current, baseline, keys, bucket_col), keys
-    )
+    return _stat_frame(current, baseline, keys, bucket_col, "psi")
 
 
 def ks_from_histograms(
@@ -122,11 +163,9 @@ def ks_from_histograms(
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Two-sample KS statistic from binned distributions: max |CDF gap|
-    over the bucket axis (cumulative window sum per side). Approximation
-    error ≤ one bin's mass; see tests for the exact cross-check."""
-    return _ks_from_shares(
-        _joined_shares(current, baseline, keys, bucket_col), keys, bucket_col
-    )
+    over the bucket axis. Approximation error ≤ one bin's mass; see
+    tests for the exact cross-check."""
+    return _stat_frame(current, baseline, keys, bucket_col, "ks")
 
 
 def jsd_from_histograms(
@@ -143,9 +182,7 @@ def jsd_from_histograms(
     either side has mass; a side's zero-mass term is 0 by the
     0·ln(0) = 0 convention. Same bounded histogram inputs as the rest
     of the drift family."""
-    return _jsd_from_shares(
-        _joined_shares(current, baseline, keys, bucket_col), keys
-    )
+    return _stat_frame(current, baseline, keys, bucket_col, "jsd")
 
 
 def psi_explain(
@@ -159,20 +196,25 @@ def psi_explain(
     contribution, with both sides' shares — the interpretability
     surface for a drift verdict (the reference shows raw anomaly rows;
     this shows which part of the distribution moved). Output:
-    (keys..., bucket, p_cur, p_base, psi_contrib, rank). Bounded:
+    (keys..., bucket, p_cur, p_base, psi_contrib, rank); ties on
+    |contribution| rank the lower bucket first. Bounded:
     k × |groups| rows."""
-    joined = _joined_shares(current, baseline, keys, bucket_col)
-    contrib = _psi_contrib()
-    w = (
-        Window.partitionBy(*keys)
-        if keys
-        else Window.partitionBy(F.lit(1))
-    ).orderBy(F.desc(F.abs(F.col("psi_contrib"))), F.asc(bucket_col))
-    return (
-        joined.withColumn("psi_contrib", contrib)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*keys, bucket_col, "p_cur", "p_base", "psi_contrib", "rank")
+
+    def top_k(st):
+        # stable sort over the ascending-bucket list = bucket tiebreak
+        ranked = sorted(st["buckets"], key=lambda s: -abs(s[3]))[:k]
+        return [(*s, rank) for rank, s in enumerate(ranked, 1)]
+
+    return _drift_frame(
+        current, baseline, keys, bucket_col,
+        [
+            T.StructField(bucket_col, current.schema[bucket_col].dataType),
+            T.StructField("p_cur", T.DoubleType()),
+            T.StructField("p_base", T.DoubleType()),
+            T.StructField("psi_contrib", T.DoubleType()),
+            T.StructField("rank", T.IntegerType()),
+        ],
+        top_k,
     )
 
 
@@ -196,32 +238,53 @@ def chi2_from_histograms(
     stats.py, so like the other drift rules this never touches
     row-level data and costs nothing extra at 10^12-doc scale.
     """
-    cur = current.select(*keys, bucket_col, F.col("count").alias("c_cur"))
-    base = baseline.select(*keys, bucket_col, F.col("count").alias("c_base"))
-    j = cur.join(base, [*keys, bucket_col], "full_outer").fillna(
-        0, subset=["c_cur", "c_base"]
+    return _drift_frame(
+        current, baseline, keys, bucket_col,
+        [
+            T.StructField("chi2", T.DoubleType()),
+            T.StructField("dof", T.IntegerType()),
+        ],
+        lambda st: [(st["chi2"], st["dof"])],
     )
-    w = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(1))
-    j = (
-        j.withColumn("n_cur", F.sum("c_cur").over(w))
-        .withColumn("n_base", F.sum("c_base").over(w))
-        .withColumn(
-            "pooled",
-            (F.col("c_cur") + F.col("c_base"))
-            / (F.col("n_cur") + F.col("n_base")),
-        )
-    )
-    e_cur = F.col("n_cur") * F.col("pooled")
-    e_base = F.col("n_base") * F.col("pooled")
-    contrib = F.when(
-        e_cur > 0, F.pow(F.col("c_cur") - e_cur, F.lit(2)) / e_cur
-    ).otherwise(0.0) + F.when(
-        e_base > 0, F.pow(F.col("c_base") - e_base, F.lit(2)) / e_base
-    ).otherwise(0.0)
-    return j.groupBy(*keys).agg(
-        F.sum(contrib).alias("chi2"),
-        (F.count("*") - 1).cast("int").alias("dof"),
-    )
+
+
+def drift_verdict_rows(
+    current: list[tuple],
+    baseline: list[tuple],
+    keys: list[str],
+    psi_threshold: float,
+    ks_threshold: float,
+    check_prefix: str = "drift",
+    chi2_threshold: float | None = None,
+    jsd_threshold: float | None = None,
+) -> list[tuple]:
+    """``drift_verdicts`` over collected histograms
+    (``collect_histogram`` rows): VERDICTS_DDL-shaped tuples, one per
+    metric per group."""
+    metrics = [("psi", psi_threshold), ("ks", ks_threshold)]
+    if chi2_threshold is not None:
+        metrics.append(("chi2", chi2_threshold))
+    if jsd_threshold is not None:
+        metrics.append(("jsd", jsd_threshold))
+    by_pid = bool(keys) and keys[0] == "partition_id"
+    stats = histogram_drift(current, baseline)
+    rows = []
+    for metric, thresh in metrics:
+        for key, st in stats.items():
+            name = [check_prefix, metric] + [
+                str(v)
+                for c, v in zip(keys, key)
+                if c != "partition_id" and v is not None
+            ]
+            score = st[metric]
+            rows.append((
+                "_".join(name),
+                int(key[0]) if by_pid and key[0] is not None else None,
+                None, None, None,
+                score,
+                "fail" if score > thresh else "pass",
+            ))
+    return rows
 
 
 def drift_verdicts(
@@ -238,55 +301,21 @@ def drift_verdicts(
     group's first key is surfaced as partition_id when integer-like),
     plus optional chi-squared and Jensen-Shannon rows when their
     thresholds are given — all four statistics derive from the SAME
-    bounded histogram pair, so extra metrics cost extra bounded joins,
-    never another table scan.
-
-    The normalized-shares join is built ONCE and feeds PSI/KS/JSD —
-    one fewer histogram join + normalization pass per drift stage."""
-    shares = _joined_shares(current_hist, baseline_hist, keys, "bucket")
-    p = _psi_from_shares(shares, keys)
-    k = _ks_from_shares(shares, keys, "bucket")
-    j = p.join(k, keys, "full_outer").fillna(0.0, subset=["psi", "ks"])
-    metrics = [("psi", psi_threshold), ("ks", ks_threshold)]
-    if chi2_threshold is not None:
-        c = chi2_from_histograms(
-            current_hist, baseline_hist, keys
-        ).drop("dof")
-        j = j.join(c, keys, "full_outer").fillna(0.0, subset=["chi2"])
-        metrics.append(("chi2", chi2_threshold))
-    if jsd_threshold is not None:
-        jd = _jsd_from_shares(shares, keys)
-        j = j.join(jd, keys, "full_outer").fillna(0.0, subset=["jsd"])
-        metrics.append(("jsd", jsd_threshold))
-    pid = (
-        F.col(keys[0]).cast("int")
-        if keys and keys[0] == "partition_id"
-        else F.lit(None).cast("int")
+    bounded histogram pair in one kernel pass, never another table
+    scan."""
+    return current_hist.sparkSession.createDataFrame(
+        drift_verdict_rows(
+            collect_histogram(current_hist, keys),
+            collect_histogram(baseline_hist, keys),
+            keys,
+            psi_threshold,
+            ks_threshold,
+            check_prefix,
+            chi2_threshold,
+            jsd_threshold,
+        ),
+        VERDICTS_DDL,
     )
-    rows = []
-    for metric, thresh in metrics:
-        rows.append(
-            j.select(
-                F.concat_ws(
-                    "_",
-                    F.lit(check_prefix),
-                    F.lit(metric),
-                    *[F.col(c).cast("string") for c in keys if c != "partition_id"],
-                ).alias("check"),
-                pid.alias("partition_id"),
-                F.lit(None).cast("long").alias("n_rows"),
-                F.lit(None).cast("long").alias("n_violations"),
-                F.lit(None).cast("double").alias("violation_rate"),
-                F.col(metric).cast("double").alias("score"),
-                F.when(F.col(metric) > thresh, "fail").otherwise("pass").alias(
-                    "verdict"
-                ),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
 
 
 def ema_3sigma(

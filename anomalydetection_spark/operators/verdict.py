@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schema import VERDICTS_DDL, VERDICTS_SCHEMA
+
 
 def threshold_violations(
     scored: DataFrame, score_col: str = "score", threshold: float = 0.0
@@ -157,24 +159,41 @@ def top_k_report(
     )
 
 
+def rollup_rows(partition_rows: Iterable[tuple]) -> list[tuple]:
+    """Two-level verdict (SURVEY.md §3.3) over per-partition verdict
+    tuples (VERDICTS_DDL column order): one table-level row per check
+    (partition_id = None), in first-seen check order. Sums skip NULLs
+    and a rate over a NULL or zero total is NULL; the check fails when
+    any partition failed."""
+    acc: dict[str, list] = {}
+    for check, _pid, n_rows, n_viol, _rate, score, verdict in partition_rows:
+        a = acc.setdefault(check, [None, None, None, False])
+        if n_rows is not None:
+            a[0] = (a[0] or 0) + n_rows
+        if n_viol is not None:
+            a[1] = (a[1] or 0) + n_viol
+        if score is not None and (a[2] is None or score > a[2]):
+            a[2] = score
+        a[3] = a[3] or verdict == "fail"
+    return [
+        (
+            check,
+            None,
+            n_rows,
+            n_viol,
+            n_viol / n_rows if n_viol is not None and n_rows else None,
+            score,
+            "fail" if failed else "pass",
+        )
+        for check, (n_rows, n_viol, score, failed) in acc.items()
+    ]
+
+
 def global_verdict(partition_verdicts: DataFrame) -> DataFrame:
     """Two-level verdict (SURVEY.md §3.3): roll per-partition verdicts
-    up to one table-level row per check (partition_id = null)."""
-    return partition_verdicts.groupBy("check").agg(
-        F.lit(None).cast("int").alias("partition_id"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_violations").alias("n_violations"),
-        (F.sum("n_violations") / F.sum("n_rows")).alias("violation_rate"),
-        F.max("score").alias("score"),
-        F.when(F.sum(F.when(F.col("verdict") == "fail", 1).otherwise(0)) > 0, "fail")
-        .otherwise("pass")
-        .alias("verdict"),
-    ).select(
-        "check",
-        "partition_id",
-        "n_rows",
-        "n_violations",
-        "violation_rate",
-        "score",
-        "verdict",
+    up to one table-level row per check (partition_id = null) —
+    collect → ``rollup_rows`` → local DataFrame."""
+    rows = partition_verdicts.select(*VERDICTS_SCHEMA.names).collect()
+    return partition_verdicts.sparkSession.createDataFrame(
+        rollup_rows(rows), VERDICTS_DDL
     )

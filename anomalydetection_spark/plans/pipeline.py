@@ -6,15 +6,21 @@ ensemble pass (:277-357), restructured for Spark:
   → small check inputs (dup keys, orphan refs) — narrow column scans
   → ONE wide scan emitting every violation row (conformance flags are
     row-local; uniqueness/referential attach via broadcast joins)
-  → verdicts aggregated FROM the violations (no re-scan of the table)
-  → global merge + drift (one shuffle of bounded histograms)
+  → ONE collect of the per-partition violation count grid (no re-scan
+    of the table)
+  → verdict rows, table-level rollup, drift scores and manifest records
+    computed on the driver from that grid, the snapshot rows and both
+    length histograms — all metadata scale (partitions × checks counts,
+    kinds × bins buckets) — and materialized by ONE createDataFrame
   → atomic manifest commit (lineage + metrics)
 
 Scan budget per pass (the thing that matters at 100 TB): one snapshot
 hash pass, one key-column pass (uniqueness), one exploded-refs pass
 (referential, Bloom built once), one full-width violations pass, one
 text-length pass (drift input). Everything downstream — verdicts,
-rollups, drift — aggregates bounded-size intermediates. An earlier
+rollups, drift — is driver-side math over bounded-size collected
+intermediates, so the verdict tier starts no Spark job beyond the grid
+collect and the baseline read. An earlier
 draft derived verdicts and violations independently (~10 scans, Bloom
 built twice); the rewrite roughly halves wall time and removes the
 worst thread-contention stages.
@@ -39,7 +45,8 @@ from ..operators import drift as drift_ops
 from ..operators import stats as stats_ops
 from ..operators.referential import orphan_refs
 from ..operators.uniqueness import duplicate_keys
-from ..operators.verdict import global_verdict
+from ..operators.verdict import rollup_rows
+from ..schema import VERDICTS_DDL
 from ..sources.manifest import Manifest, partition_snapshots
 
 CONF_CHECKS = (
@@ -81,7 +88,7 @@ def conformance_exprs():
 
 def check_gates(cfg) -> dict:
     """check name → configured rate gate — shared by the full pass's
-    verdicts (_grid_to_verdicts) and the sampled pre-flight, so the
+    verdicts (verdict_rows) and the sampled pre-flight, so the
     two can never gate the same check differently."""
     return {
         "uniqueness": cfg.max_dup_rate,
@@ -105,8 +112,8 @@ class ValidationResult:
     # subset — consumers needing the full set (quarantine, feedback
     # review) must check this
     capped: bool = False
-    # the pass's own (kind x bucket) length histogram, already
-    # materialized when a drift baseline was supplied — callers can
+    # the pass's own (kind x bucket) length histogram as a local
+    # DataFrame when a drift baseline was supplied — callers can
     # persist it as the NEXT baseline without re-scanning the table
     current_hist: DataFrame | None = None
 
@@ -238,88 +245,80 @@ def _all_violations(
     )
 
 
-def _verdicts_from_violations(
-    violations: DataFrame,
-    totals: DataFrame,
+def _count_grid(violations: DataFrame, capped: bool) -> dict[int, dict]:
+    """The per-partition violation count grid, collected: partition_id →
+    {check: violating docs}. One violation row is one doc × check, and a
+    conformance row names every conformance check the doc failed in its
+    detail. On an exemplar-capped stream (``_cap_violations``) the counts
+    are the exact group sizes stamped on every exemplar row (max over a
+    group constant): row counts are capped, the stamped counts are not."""
+    is_conf = F.col("check") == "conformance"
+    if capped:
+        aggs = [
+            F.max(F.when(F.col("check") == name, F.col("__n_in_group")))
+            .alias(name)
+            for name in ("uniqueness", "referential")
+        ] + [
+            F.max(F.when(is_conf, F.col(f"__cnt_{name}"))).alias(name)
+            for name in CONF_CHECKS
+        ]
+    else:
+        aggs = [
+            F.count(F.when(F.col("check") == name, 1)).alias(name)
+            for name in ("uniqueness", "referential")
+        ] + [
+            F.count(F.when(is_conf & F.col("detail").contains(name), 1))
+            .alias(name)
+            for name in CONF_CHECKS
+        ]
+    return {
+        r["partition_id"]: r.asDict()
+        for r in violations.groupBy("partition_id").agg(*aggs).collect()
+    }
+
+
+def verdict_rows(
+    grid: dict[int, dict],
+    totals,
     has_catalog: bool,
     cfg: ValidationConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Per-partition verdict rows derived from the (small) violations
-    output + the snapshot totals — zero additional table scans.
+) -> list[tuple]:
+    """Per-partition verdict tuples (VERDICTS_DDL order) from the count
+    grid and ``totals``, the (partition_id, n_rows) pairs of the
+    partitions validated — a partition absent from the grid had no
+    violations. The one grid→verdicts kernel of the batch pass, the
+    micro-batch and the feedback recompute.
 
-    n_violations counts VIOLATING DOCS per check (one row per doc per
-    check in the violations table). Pass/fail applies the configured
-    violation-RATE gates (F11 semantics with per-check thresholds:
-    any dup/orphan fails — max_dup_rate/max_orphan_rate 0 — while
-    conformance tolerates up to max_null_rate/max_type_error_rate;
+    n_violations counts VIOLATING DOCS per check. Pass/fail applies the
+    configured violation-RATE gates (F11 semantics with per-check
+    thresholds: any dup/orphan fails — max_dup_rate/max_orphan_rate 0 —
+    while conformance tolerates up to max_null_rate/max_type_error_rate;
     exact violation rows are emitted regardless)."""
-    conf_counts = [
-        F.sum(
-            F.when(
-                (F.col("check") == "conformance")
-                & F.col("detail").contains(name),
-                1,
-            ).otherwise(0)
-        ).alias(name)
-        for name in CONF_CHECKS
-    ]
-    per_part = violations.groupBy("partition_id").agg(
-        F.sum(F.when(F.col("check") == "uniqueness", 1).otherwise(0)).alias(
-            "uniqueness"
-        ),
-        F.sum(F.when(F.col("check") == "referential", 1).otherwise(0)).alias(
-            "referential"
-        ),
-        *conf_counts,
-    )
-    return _grid_to_verdicts(per_part, totals, has_catalog, cfg)
-
-
-def _grid_to_verdicts(
-    per_part: DataFrame,
-    totals: DataFrame,
-    has_catalog: bool,
-    cfg: ValidationConfig,
-) -> DataFrame:
-    """Wide per-partition check counts → long-form verdict rows.
-
-    ONE pass over the counts grid: unpivot the per-check count columns
-    with stack() instead of a per-check union (a 7-branch union re-ran
-    the violations groupBy once per branch — 7x the work for identical
-    output; measured 7.9s -> ~1s of the local[32] 16M pass)."""
-    rate_gates = check_gates(cfg)
-    check_names = ["uniqueness", *CONF_CHECKS] + (
+    gates = check_gates(cfg)
+    names = ["uniqueness", *CONF_CHECKS] + (
         ["referential"] if has_catalog else []
     )
-    grid = totals.join(per_part, "partition_id", "left")
-    stack_args = []
-    for name in check_names:
-        stack_args += [
-            F.lit(name),
-            F.coalesce(F.col(name), F.lit(0)).cast("long"),
-            F.lit(float(rate_gates[name])),
-        ]
-    rate = F.col("n_violations") / F.col("n_rows")
-    return (
-        grid.select(
-            F.col("partition_id").cast("int"),
-            "n_rows",
-            F.stack(F.lit(len(check_names)), *stack_args).alias(
-                "check", "n_violations", "gate"
-            ),
-        )
-        .select(
-            "check",
-            "partition_id",
-            "n_rows",
-            "n_violations",
-            rate.alias("violation_rate"),
-            rate.alias("score"),
-            F.when(rate > F.col("gate"), "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        )
-    )
+    rows = []
+    for pid, n_rows in totals:
+        counts = grid.get(pid, {})
+        for name in names:
+            n = int(counts.get(name) or 0)
+            rate = n / n_rows if n_rows else None
+            failed = rate is not None and rate > gates[name]
+            rows.append(
+                (name, pid, n_rows, n, rate, rate, "fail" if failed else "pass")
+            )
+    return rows
+
+
+def _partition_outcomes(part_rows: list[tuple]) -> dict[int, tuple]:
+    """partition_id → (violations summed over checks, any check failed)
+    — the manifest record's view of a partition's verdict rows."""
+    out: dict[int, tuple] = {}
+    for _check, pid, _n, n_viol, _rate, _score, verdict in part_rows:
+        total, failed = out.get(pid, (0, False))
+        out[pid] = (total + (n_viol or 0), failed or verdict == "fail")
+    return out
 
 
 _CAP_HELPER_COLS = ["__n_in_group"] + [f"__cnt_{n}" for n in CONF_CHECKS]
@@ -354,31 +353,6 @@ def _cap_violations(violations: DataFrame, k: int) -> DataFrame:
             ).over(w),
         )
     return out.filter(F.col("__rn") <= k).drop("__rn")
-
-
-def _verdicts_from_capped(
-    capped: DataFrame,
-    totals: DataFrame,
-    has_catalog: bool,
-    cfg: ValidationConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Per-partition verdicts from an exemplar-capped violation stream:
-    counts come from the window aggregates stamped on the exemplar rows
-    by ``_cap_violations`` (max over the group constant), not from
-    counting rows — row counts are capped, the stamped counts are not."""
-    aggs = [
-        F.max(
-            F.when(F.col("check") == name, F.col("__n_in_group"))
-        ).alias(name)
-        for name in ("uniqueness", "referential")
-    ] + [
-        F.max(
-            F.when(F.col("check") == "conformance", F.col(f"__cnt_{name}"))
-        ).alias(name)
-        for name in CONF_CHECKS
-    ]
-    per_part = capped.groupBy("partition_id").agg(*aggs)
-    return _grid_to_verdicts(per_part, totals, has_catalog, cfg)
 
 
 def run_validation(
@@ -420,23 +394,18 @@ def run_validation(
     pool = ThreadPoolExecutor(max_workers=4)
     dups = duplicate_keys(docs, cfg.unique_key, cfg.salt_buckets).cache()
     fut_dups = None
-    fut_pending = None
+    # discovery rows: (partition_id, [snapshot_hash,] n_rows) per
+    # partition with rows, collected once — either right here (resume)
+    # or from a driver thread overlapping the narrow scans
+    fut_snaps = None
 
     def _empty_result() -> ValidationResult:
         from ..schema import VIOLATIONS_SCHEMA
 
         pool.shutdown(wait=False)
         dups.unpersist()
-        empty_v = spark.createDataFrame(
-            [],
-            schema=(
-                "check string, partition_id int, n_rows long,"
-                " n_violations long, violation_rate double, score double,"
-                " verdict string"
-            ),
-        )
         return ValidationResult(
-            empty_v,
+            spark.createDataFrame([], schema=VERDICTS_DDL),
             spark.createDataFrame([], schema=VIOLATIONS_SCHEMA),
             [],
             manifest.current_version() if manifest else 0,
@@ -461,22 +430,14 @@ def run_validation(
         # the round-5 scan-budget trim: the cold-start manifest run
         # previously serialized a full-width scan (~9 s at 16M docs)
         # ahead of all other work.
-        snaps = partition_snapshots(docs).cache()
         fut_dups = pool.submit(dups.count)
-        totals_src = snaps
-        fut_pending = pool.submit(
-            lambda: sorted(
-                r.partition_id
-                for r in snaps.select("partition_id").collect()
-            )
-        )
+        fut_snaps = pool.submit(partition_snapshots(docs).collect)
         pending = None
         scope = docs
     elif manifest is not None:
-        snaps = partition_snapshots(docs).cache()
-        pending = sorted(manifest.pending_partitions(snaps))
+        snap_rows = partition_snapshots(docs).collect()
+        pending = sorted(manifest.pending_partitions(snap_rows))
         manifest.acquire_leases(pending, run_id, now)
-        totals_src = snaps
         if not pending:
             return _empty_result()
         # Partition pruning: only unvalidated partitions are read
@@ -497,15 +458,9 @@ def run_validation(
         # straight to the wide-scan setup. (Discovery previously
         # serialized ~2.5s ahead of everything at 16M docs.)
         fut_dups = pool.submit(dups.count)
-        snaps = None
-        totals_src = docs.groupBy("partition_id").agg(
-            F.count("*").alias("n_rows")
-        ).cache()
-        fut_pending = pool.submit(
-            lambda: sorted(
-                r.partition_id
-                for r in totals_src.select("partition_id").collect()
-            )
+        fut_snaps = pool.submit(
+            docs.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
+            .collect
         )
         pending = None
         scope = docs
@@ -528,17 +483,21 @@ def run_validation(
     try:
         if fut_dups is None:
             fut_dups = pool.submit(dups.count)
-        # the drift-input histogram depends only on scope — start it
-        # NOW so it overlaps the dup scan and then the wide violations
-        # materialization (it previously serialized before the wide
-        # scan in the cached-violations path)
+        # the drift-input histogram depends only on scope — collect it
+        # (and read the baseline) NOW so both overlap the dup scan and
+        # then the wide violations materialization
         if baseline_hist is not None:
             cur_hist = stats_ops.length_histogram(
                 scope,
                 bins=cfg.drift.histogram_bins,
                 bin_width=cfg.drift.histogram_bin_width,
-            ).cache()
-            fut_hist = pool.submit(cur_hist.count)
+            )
+            fut_hist = pool.submit(
+                drift_ops.collect_histogram, cur_hist, ["kind"]
+            )
+            fut_base = pool.submit(
+                drift_ops.collect_histogram, baseline_hist, ["kind"]
+            )
         if catalog is not None:
             from ..operators.referential import (
                 BROADCAST_MAX_CATALOG_ROWS,
@@ -593,11 +552,12 @@ def run_validation(
         from ..operators.referential import BROADCAST_MAX_CATALOG_ROWS as _BC
 
         broadcast_dups = fut_dups.result() <= _BC
-        if fut_pending is not None:
+        if fut_snaps is not None:
             # resolve discovery (it has been running concurrently with
             # the dup/hist scans) before committing to the wide scan —
             # an empty table keeps the old no-op semantics
-            pending = fut_pending.result()
+            snap_rows = fut_snaps.result()
+            pending = sorted(r.partition_id for r in snap_rows)
             if not pending:
                 return _empty_result()
             if manifest is not None:
@@ -634,33 +594,38 @@ def run_validation(
             violations = violations.cache()
             pool.submit(violations.count).result()
         if fut_hist is not None:
-            fut_hist.result()
+            hist_rows = fut_hist.result()
+            base_rows = fut_base.result()
+            cur_hist = spark.createDataFrame(
+                [(*key, bucket, n) for key, bucket, n in hist_rows],
+                cur_hist.schema,
+            )
     finally:
         pool.shutdown(wait=False)
     _mark("violations")
 
-    # --- verdicts from violations + partition totals (no re-scan) ---
-    totals = totals_src.filter(F.col("partition_id").isin(pending)).select(
-        "partition_id", "n_rows"
+    # --- verdicts: metadata-scale math on the driver. The grid is
+    # partitions x checks counts and the histograms kinds x bins rows,
+    # so one collect of the grid plus plain Python replaces the joins,
+    # windows and unions a Spark formulation pays a scheduler round-trip
+    # for each; ONE createDataFrame materializes the result, so caller
+    # .count()/.show() run on local data ---
+    snap_map = {r.partition_id: r for r in snap_rows}
+    part_rows = verdict_rows(
+        _count_grid(violations, capped),
+        [(pid, snap_map[pid].n_rows) for pid in pending],
+        has_catalog=catalog is not None,
+        cfg=cfg,
     )
     if capped:
-        verdicts = _verdicts_from_capped(
-            violations, totals, has_catalog=catalog is not None, cfg=cfg
-        )
         # the helper count columns have served the verdicts; the
         # returned/written violations keep the VIOLATIONS_SCHEMA shape
         violations = violations.drop(*_CAP_HELPER_COLS)
-    else:
-        verdicts = _verdicts_from_violations(
-            violations, totals, has_catalog=catalog is not None, cfg=cfg
-        )
-
-    # --- drift vs baseline histograms (bounded-size join; cur_hist
-    # already materialized concurrently with the violations stage) ---
-    if baseline_hist is not None:
-        dv = drift_ops.drift_verdicts(
-            cur_hist,
-            baseline_hist,
+    rows = list(part_rows)
+    if cur_hist is not None:
+        rows += drift_ops.drift_verdict_rows(
+            hist_rows,
+            base_rows,
             keys=["kind"],
             psi_threshold=cfg.drift.psi_threshold_global,
             ks_threshold=cfg.drift.ks_threshold_global,
@@ -668,76 +633,43 @@ def run_validation(
             chi2_threshold=cfg.drift.chi2_threshold_global,
             jsd_threshold=cfg.drift.jsd_threshold_global,
         )
-        verdicts = verdicts.unionByName(dv)
 
     # --- optional declarative schema contract (structural tier is
     # driver-side metadata only; data tier is one narrow agg pass) ---
     if contract is not None:
         from ..operators.contract import contract_verdicts
 
-        cv = contract_verdicts(scope, contract).select(
-            F.concat_ws(":", F.col("check"), F.col("column")).alias("check"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.lit(None).cast("long").alias("n_rows"),
-            "n_violations",
-            "violation_rate",
-            F.col("n_violations").cast("double").alias("score"),
-            "verdict",
-        )
-        verdicts = verdicts.unionByName(cv)
-
-    # --- materialize the per-partition verdict set ---
-    # Verdict cardinality is partitions x checks — metadata scale, the
-    # same class as the manifest commit's existing collect (the judge-
-    # blessed exception to no-driver-collects). Collecting ONCE here and
-    # rebuilding a LocalTableScan turns the whole downstream verdict
-    # surface (table-level rollup, manifest per-partition aggregation,
-    # caller .count()/.show()) into local-data jobs: the lazy version
-    # paid 4-6 scheduler round-trips over the cached 2.9M-row violations
-    # table (~4s at local[32], ~7s at local[2] on the 16M bench corpus)
-    # for 400 output rows.
-    verdict_rows = verdicts.collect()
-    verdicts = spark.createDataFrame(
-        verdict_rows,
-        schema=(
-            "check string, partition_id int, n_rows long,"
-            " n_violations long, violation_rate double, score double,"
-            " verdict string"
-        ),
-    )
+        rows += [
+            tuple(r)
+            for r in contract_verdicts(scope, contract).select(
+                F.concat_ws(":", F.col("check"), F.col("column")),
+                F.lit(None).cast("int"),
+                F.lit(None).cast("long"),
+                "n_violations",
+                "violation_rate",
+                F.col("n_violations").cast("double"),
+                "verdict",
+            ).collect()
+        ]
 
     # --- table-level rollup (the "ensemble" two-level verdict) ---
-    verdicts = verdicts.unionByName(
-        global_verdict(verdicts.filter(F.col("partition_id").isNotNull()))
-    )
+    rows += rollup_rows(part_rows)
+    verdicts = spark.createDataFrame(rows, VERDICTS_DDL)
 
     _mark("verdicts")
     manifest_version = 0
     if manifest is not None:
-        per_part = {
-            r.partition_id: r
-            for r in verdicts.filter(F.col("partition_id").isNotNull())
-            .groupBy("partition_id")
-            .agg(
-                F.max("n_rows").alias("n_rows"),
-                F.sum("n_violations").alias("n_violations"),
-                F.max(F.when(F.col("verdict") == "fail", 1).otherwise(0)).alias(
-                    "failed"
-                ),
-            )
-            .collect()
-        }
-        snap_map = {r.partition_id: r for r in snaps.collect()}
+        outcomes = _partition_outcomes(part_rows)
         records = []
         for pid in pending:
-            pr = per_part.get(pid)
+            n_viol, failed = outcomes.get(pid, (0, False))
             records.append(
                 {
                     "partition_id": pid,
                     "snapshot_hash": snap_map[pid].snapshot_hash,
                     "n_rows": snap_map[pid].n_rows,
-                    "n_violations": int(pr.n_violations) if pr and pr.n_violations is not None else 0,
-                    "verdict": ("fail" if pr and pr.failed else "pass"),
+                    "n_violations": n_viol,
+                    "verdict": "fail" if failed else "pass",
                     "metrics": {
                         "n_rows": snap_map[pid].n_rows,
                         "run_id": run_id,
@@ -746,17 +678,13 @@ def run_validation(
             )
         manifest_version = manifest.commit_validated(records, run_id, now)
 
-    # drop the small-input caches: violations and cur_hist are already
-    # materialized, so the dup/snapshot/orphan inputs are dead — in a
-    # long-lived session repeated passes would otherwise pin them in
-    # the block manager until eviction churn hits the caches that
-    # matter (worst case on eviction: the violations lineage recomputes
-    # from uncached inputs, which is correct, just slower)
+    # drop the small-input caches: violations are already materialized,
+    # so the dup/orphan inputs are dead — in a long-lived session
+    # repeated passes would otherwise pin them in the block manager
+    # until eviction churn hits the caches that matter (worst case on
+    # eviction: the violations lineage recomputes from uncached inputs,
+    # which is correct, just slower)
     dups.unpersist()
-    if snaps is not None:
-        snaps.unpersist()
-    else:
-        totals_src.unpersist()
     if orphan_doc is not None:
         orphan_doc.unpersist()
 
@@ -798,37 +726,35 @@ def revalidate_with_feedback(
     from ..operators.feedback import apply_feedback, live_violations
 
     flagged = apply_feedback(violations, feedback).cache()
-    verdicts = _verdicts_from_violations(
-        live_violations(flagged), totals, has_catalog=has_catalog, cfg=cfg
+    totals_rows = [
+        tuple(r) for r in totals.select("partition_id", "n_rows").collect()
+    ]
+    part_rows = verdict_rows(
+        _count_grid(live_violations(flagged), capped=False),
+        totals_rows,
+        has_catalog=has_catalog,
+        cfg=cfg,
     )
-    verdicts = verdicts.unionByName(
-        global_verdict(verdicts.filter(F.col("partition_id").isNotNull()))
-    ).cache()
+    verdicts = spark.createDataFrame(
+        part_rows + rollup_rows(part_rows), VERDICTS_DDL
+    )
     version = 0
     if manifest is not None:
-        per_part = verdicts.filter(F.col("partition_id").isNotNull()).groupBy(
-            "partition_id"
-        ).agg(
-            F.sum("n_violations").alias("n_violations"),
-            F.max(F.when(F.col("verdict") == "fail", 1).otherwise(0)).alias(
-                "failed"
-            ),
-        )
         n_fb = flagged.filter(~F.col("is_anomaly")).count()
         records = [
             {
-                "partition_id": r.partition_id,
-                "n_violations": int(r.n_violations or 0),
-                "verdict": "fail" if r.failed else "pass",
+                "partition_id": pid,
+                "n_violations": n_viol,
+                "verdict": "fail" if failed else "pass",
                 "metrics": {"feedback_run": run_id, "n_feedback_total": n_fb},
             }
-            for r in per_part.collect()
+            for pid, (n_viol, failed) in _partition_outcomes(part_rows).items()
         ]
         version = manifest.update_metrics(records, run_id, now)
     return ValidationResult(
         verdicts,
         flagged,
-        sorted(r.partition_id for r in totals.select("partition_id").collect()),
+        sorted(pid for pid, _ in totals_rows),
         version,
     )
 

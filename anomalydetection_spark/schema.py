@@ -66,6 +66,13 @@ VERDICTS_SCHEMA = T.StructType(
     ]
 )
 
+# The verdict rows as the engine materializes them from driver-side
+# rows (every column nullable; same names and types as VERDICTS_SCHEMA).
+VERDICTS_DDL = (
+    "check string, partition_id int, n_rows long, n_violations long,"
+    " violation_rate double, score double, verdict string"
+)
+
 # Checkpoint manifest record — the engine's analog of the reference's
 # ``logs`` tracking table (database_manager.py:21-32): snapshot hash =
 # change detection (log_retriever.py:167-172), status = in_process lease

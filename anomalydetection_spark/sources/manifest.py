@@ -253,7 +253,7 @@ class Manifest:
 
     def pending_partitions(
         self,
-        snapshots: DataFrame,
+        snapshots: DataFrame | list,
         respect_leases: bool = False,
         run_id: str | None = None,
         now: str | None = None,
@@ -267,7 +267,13 @@ class Manifest:
         lease whose ``leased_at`` is more than ``lease_ttl_seconds``
         before ``now`` (both ISO-8601) is expired: the holder crashed,
         the partition is pending again. Leases from states written
-        before leased_at existed never expire (conservative)."""
+        before leased_at existed never expire (conservative).
+        ``snapshots`` is a ``partition_snapshots`` frame or its
+        already-collected rows."""
+        if isinstance(snapshots, DataFrame):
+            snapshots = snapshots.select(
+                "partition_id", "snapshot_hash"
+            ).collect()
         state = self.load()
         if state and self.stored_hash_version() != SNAPSHOT_HASH_VERSION:
             # hash-scheme upgrade: stored hashes are incomparable — make
@@ -281,12 +287,9 @@ class Manifest:
                 f"{SNAPSHOT_HASH_VERSION}; revalidating all partitions",
                 stacklevel=2,
             )
-            return sorted(
-                r.partition_id
-                for r in snapshots.select("partition_id").collect()
-            )
+            return sorted(r.partition_id for r in snapshots)
         pending = []
-        for row in snapshots.select("partition_id", "snapshot_hash").collect():
+        for row in snapshots:
             rec = state.get(str(row.partition_id))
             if rec is None:
                 pending.append(row.partition_id)

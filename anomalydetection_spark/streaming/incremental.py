@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 from ..operators import stats as stats_ops
 from ..operators.referential import orphan_refs
 from ..operators.uniqueness import duplicate_keys
-from ..schema import DOCUMENTS_SCHEMA
+from ..schema import DOCUMENTS_SCHEMA, VERDICTS_DDL
 
 
 def read_documents_stream(
@@ -77,15 +77,16 @@ def _batch_verdicts(
     mode=overwrite so a replayed micro-batch is idempotent, and verdict
     counts are derived from the materialized output instead of
     re-running the wide scan."""
+    from ..operators.drift import collect_histogram, drift_verdict_rows
     from ..plans.pipeline import (
         _CAP_HELPER_COLS,
         _all_violations,
         _cap_violations,
-        _verdicts_from_capped,
-        _verdicts_from_violations,
+        _count_grid,
+        verdict_rows,
     )
 
-    totals = batch.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
+    spark = batch.sparkSession
     dups = duplicate_keys(batch, "doc_id")
     orphan_doc = None
     if catalog is not None and orphan_udf is None:
@@ -96,7 +97,7 @@ def _batch_verdicts(
         orphans = orphan_refs(
             batch,
             catalog,
-            batch.sparkSession,
+            spark,
             use_bloom=bloom is not None,
             catalog_size_hint=catalog_size_hint,
             bloom=bloom,
@@ -107,66 +108,60 @@ def _batch_verdicts(
             F.count("*").alias("n_orphans"),
         )
     violations = _all_violations(batch, dups, orphan_doc, orphan_udf=orphan_udf)
-    if max_violation_exemplars is not None:
+    capped = max_violation_exemplars is not None
+    if capped:
         # capped stream is bounded (≤K rows per check × partition) —
         # cache it, derive exact verdict counts from the stamped window
         # aggregates, then write the exemplars in VIOLATIONS_SCHEMA
         # shape (helper columns dropped)
-        capped = _cap_violations(violations, max_violation_exemplars).cache()
+        violations = _cap_violations(
+            violations, max_violation_exemplars
+        ).cache()
         if violations_out is not None:
             # deterministic per-batch path + overwrite = idempotent on
             # micro-batch replay (foreachBatch may re-run a batch id
             # after failure; append would double the rows)
-            capped.drop(*_CAP_HELPER_COLS).write.mode("overwrite").parquet(
+            violations.drop(*_CAP_HELPER_COLS).write.mode("overwrite").parquet(
                 violations_out
             )
-        # verdict cardinality is partitions × checks — metadata scale;
-        # localize it (same judge-blessed pattern as run_validation) so
-        # the per-batch cache can be released deterministically
-        rows = _verdicts_from_capped(
-            capped, totals, has_catalog=catalog is not None
-        ).collect()
-        capped.unpersist()
-        out = batch.sparkSession.createDataFrame(
-            rows,
-            schema=(
-                "check string, partition_id int, n_rows long,"
-                " n_violations long, violation_rate double, score double,"
-                " verdict string"
-            ),
-        )
-    else:
-        if violations_out is not None:
-            violations.write.mode("overwrite").parquet(violations_out)
-            violations = batch.sparkSession.read.parquet(violations_out)
-        out = _verdicts_from_violations(
-            violations, totals, has_catalog=catalog is not None
-        )
+    elif violations_out is not None:
+        violations.write.mode("overwrite").parquet(violations_out)
+        violations = spark.read.parquet(violations_out)
+    # verdict cardinality is partitions × checks — metadata scale: the
+    # count grid and the batch totals are collected and the verdict rows
+    # built on the driver by the batch pass's own kernel
+    totals = batch.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
+    rows = verdict_rows(
+        _count_grid(violations, capped),
+        sorted(tuple(r) for r in totals.collect()),
+        has_catalog=catalog is not None,
+    )
+    if capped:
+        violations.unpersist()
     # a micro-batch only asserts WITHIN-batch uniqueness (cross-batch
     # dup detection is the periodic batch pass over the manifest) —
     # keep the check name honest about that scope
-    out = out.withColumn(
-        "check",
-        F.when(F.col("check") == "uniqueness", "uniqueness_batch").otherwise(
-            F.col("check")
-        ),
-    )
+    rows = [
+        ("uniqueness_batch", *r[1:]) if r[0] == "uniqueness" else r
+        for r in rows
+    ]
     if baseline_hist is not None:
         # distribution drift per micro-batch against the STORED
         # baseline: the batch reduces to a bounded (kind x bucket)
-        # histogram before any join, so the per-trigger cost is a
-        # map-side partial agg + a histogram-sized join regardless of
-        # batch size
-        from ..operators import drift as drift_ops
-
-        # the batch histogram MUST use the same binning the stored
+        # histogram before it is collected, so the per-trigger cost is
+        # a map-side partial agg plus driver math on histogram-sized
+        # rows regardless of batch size.
+        # The batch histogram MUST use the same binning the stored
         # baseline was built with — a 64-bin batch against a 128-bin
         # baseline zero-fills half the buckets and fires phantom drift
-        dv = drift_ops.drift_verdicts(
-            stats_ops.length_histogram(
-                batch, bins=histogram_bins, bin_width=histogram_bin_width
+        rows += drift_verdict_rows(
+            collect_histogram(
+                stats_ops.length_histogram(
+                    batch, bins=histogram_bins, bin_width=histogram_bin_width
+                ),
+                ["kind"],
             ),
-            baseline_hist,
+            collect_histogram(baseline_hist, ["kind"]),
             keys=["kind"],
             psi_threshold=psi_threshold,
             ks_threshold=ks_threshold,
@@ -174,8 +169,7 @@ def _batch_verdicts(
             chi2_threshold=chi2_threshold,
             jsd_threshold=jsd_threshold,
         )
-        out = out.unionByName(dv)
-    return out
+    return spark.createDataFrame(rows, VERDICTS_DDL)
 
 
 def stream_validate(
@@ -274,8 +268,9 @@ def stream_validate(
         # drift sink: foreachBatch may re-run a batch id after a crash
         # between the write and the checkpoint commit, and append to a
         # flat dir would double that batch's verdict rows. batch_id is
-        # reconstructed from the partition path on read.
-        v.write.mode("overwrite").parquet(
+        # reconstructed from the partition path on read. The verdict
+        # rows are partitions × checks, so one file per batch.
+        v.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(verdicts_dir, f"batch_id={batch_id}")
         )
         if contract is not None:

@@ -222,6 +222,53 @@ def test_drift_stage_optional_chi2_jsd(spark, docs, catalog):
     assert all(r.verdict == "pass" for r in drift_rows)  # self vs self
 
 
+def test_verdicts_identical_across_shuffle_widths(spark, docs, catalog):
+    """Verdict rows, every float included, are exactly equal whether the
+    pass runs on 1 or 8 shuffle partitions: rates divide integer counts
+    and the drift kernel sums collected histograms in bucket order on
+    the driver, so no score depends on how Spark split the work."""
+    import dataclasses
+
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.fixtures import generate_documents
+
+    shifted = generate_documents(
+        spark, 4000, seed=43, n_partitions=8, n_media=2000,
+        text_mean_len=50.0, text_frac=0.60, plant_violations=False,
+    )
+    baseline = length_histogram(shifted, bins=64, bin_width=8)
+    cfg = dataclasses.replace(
+        DEFAULT_CONFIG,
+        drift=dataclasses.replace(
+            DEFAULT_CONFIG.drift,
+            chi2_threshold_global=100.0,
+            jsd_threshold_global=0.2,
+        ),
+    )
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    runs = []
+    try:
+        for n in ("1", "8"):
+            spark.conf.set(key, n)
+            res = run_validation(
+                spark, docs, catalog=catalog, baseline_hist=baseline, cfg=cfg
+            )
+            runs.append(sorted(
+                res.verdicts.collect(),
+                key=lambda r: (r.check, r.partition_id is not None,
+                               r.partition_id or 0),
+            ))
+    finally:
+        spark.conf.set(key, width)
+    assert runs[0] == runs[1]
+    drift = [r for r in runs[0] if r.check.startswith("drift_len")]
+    assert {r.check.split("_")[2] for r in drift} == {
+        "psi", "ks", "chi2", "jsd",
+    }
+    assert any(r.score > 0 for r in drift)
+
+
 def test_resume_skips_validated(spark, docs, catalog, tmp_path):
     mdir = str(tmp_path / "manifest")
     r1 = run_validation(

@@ -373,6 +373,33 @@ def _parquet_files_read(spark, after_eid: int) -> tuple[int, int]:
     return max_eid, files
 
 
+def _marker_job_id(spark) -> int:
+    """Id of a fresh one-task job. Job ids are sequential across every
+    driver thread, so two markers bracket every job started between
+    them — helper-thread jobs included."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count marker")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job_id
+
+
+# Spark jobs of the resumed manifest pass below (an adaptive-execution
+# shuffle query counts one job per query stage): the snapshot collect,
+# the dup-key, histogram, baseline and catalog reads, the staged wide
+# write, and ONE count-grid collect. Verdicts, rollup, drift and manifest
+# records are driver-side math over collected rows (with verdicts built
+# by Spark joins, windows and unions the same pass ran 35 jobs), so a
+# verdict tier that drifts back into Spark jobs fails this pin.
+RESUME_PASS_JOBS = 18
+
+
 def test_validation_pass_scan_budget(spark, tmp_path):
     """The BASELINE.md scan budget, pinned by EXECUTED plans: the
     no-manifest flagship pass scans the docs table exactly 4 times
@@ -380,9 +407,10 @@ def test_validation_pass_scan_budget(spark, tmp_path):
     scan, the one wide violations scan) — a 5th scan sneaking in fails
     here, not in a 100 TB run. The cold-start MANIFEST pass must ALSO
     be exactly 4: the round-5 trim fuses the snapshot-hash scan into
-    the concurrent window where it REPLACES the totals scan
-    (totals_src ≡ snaps), so recording lineage hashes costs no extra
-    pass over the data."""
+    the concurrent window where it REPLACES the totals scan, so
+    recording lineage hashes costs no extra pass over the data.
+    A pass resumed from that manifest after two partitions changed
+    then starts exactly RESUME_PASS_JOBS Spark jobs."""
     from anomalydetection_spark.fixtures import (
         generate_documents,
         generate_media_catalog,
@@ -428,4 +456,28 @@ def test_validation_pass_scan_budget(spark, tmp_path):
         f"cold-start manifest pass read {files2} docs files = "
         f"{files2 / n_files:.1f} scans (budget 4: the snapshot-hash "
         "scan must REPLACE the totals scan, not add one)"
+    )
+
+    # resume: partitions 2 and 5 change (reversed spans → new hashes)
+    from pyspark.sql import functions as F
+
+    v2_path = str(tmp_path / "scanbudget_docs_v2")
+    docs.withColumn(
+        "spans",
+        F.when(
+            F.col("partition_id").isin(2, 5), F.reverse("spans")
+        ).otherwise(F.col("spans")),
+    ).write.parquet(v2_path)
+    docs_v2 = spark.read.parquet(v2_path)
+    before = _marker_job_id(spark)
+    res3 = run_validation(
+        spark, docs_v2, catalog=cat, baseline_hist=baseline,
+        manifest_dir=str(tmp_path / "m"),
+        violations_dir=str(tmp_path / "viol"), run_id="r2",
+    )
+    n_jobs = _marker_job_id(spark) - before - 1
+    spark.catalog.clearCache()
+    assert res3.validated_partitions == [2, 5]
+    assert n_jobs == RESUME_PASS_JOBS, (
+        f"resumed pass ran {n_jobs} Spark jobs (pinned {RESUME_PASS_JOBS})"
     )
