@@ -1,11 +1,11 @@
 """Engine configuration.
 
 Mirrors the reference's drain3.ini tunables (/root/reference/drain3.ini:84-114)
-as an explicit dataclass: the individual-vs-ensemble anomaly-threshold split
-(:112 vs :98), similarity thresholds (:114, :104), polling cadence (:86), and
-feature caps (:110, :102) map onto the engine's per-partition vs table-level
-drift thresholds, similarity-grouping thresholds, incremental-round cadence,
-and histogram/vocab cardinality caps.
+as an explicit dataclass: the ensemble anomaly threshold (:98) maps onto
+the table-level drift thresholds and the feature caps (:110, :102) onto
+the histogram cardinality caps. The batch pass (``run_validation``) and
+every stream micro-batch (``stream_validate``) read the same config; a
+config file naming any other key fails loudly (``config_from_dict``).
 """
 
 from __future__ import annotations
@@ -18,42 +18,20 @@ class DriftConfig:
     """Distribution-drift thresholds.
 
     The reference flags an anomaly when ``prediction == -1 AND score <
-    threshold`` with threshold -0.04 per-file and 0.00 globally
-    (/root/reference/model_manager.py:222, ensemble_model.py:386,
-    drain3.ini:112,:98). We keep the two-level split: a per-partition
-    threshold and a stricter table-level (global) threshold.
+    threshold`` with threshold 0.00 globally (ensemble_model.py:386,
+    drain3.ini:98); here a drift statistic above its threshold fails
+    the table-level drift check.
     """
 
-    psi_threshold_partition: float = 0.25   # industry-standard "major shift"
-    psi_threshold_global: float = 0.10      # stricter at table level
-    ks_threshold_partition: float = 0.15
+    psi_threshold_global: float = 0.10
     ks_threshold_global: float = 0.10
     # optional extra statistics over the SAME histogram pair (None =
     # off, the default — chi2 scales with sample size, so its
     # threshold is deployment-specific; jsd ∈ [0, ln 2])
     chi2_threshold_global: float | None = None
     jsd_threshold_global: float | None = None
-    ema_alpha: float = 0.3                  # EMA smoothing for metric history
-    sigma_k: float = 3.0                    # the 3-sigma rule
-    min_history: int = 5                    # windows needed before 3-sigma fires
     histogram_bins: int = 64                # bounded like drain3 max_clusters=1024
     histogram_bin_width: int = 8            # chars per length bucket
-
-
-@dataclass(frozen=True)
-class SimilarityConfig:
-    """Violation similarity-grouping thresholds.
-
-    Mirrors SIMILARITY_THRESHOLD 0.85 (individual, drain3.ini:114) /
-    0.90 (ensemble, :104) used by the greedy Levenshtein grouping
-    (model_manager.py:252-267, ensemble_model.py:411-426).
-    """
-
-    ratio_threshold_partition: float = 0.85
-    ratio_threshold_global: float = 0.90
-    max_group_candidates: int = 1000        # bound for the exact greedy pass
-    minhash_rows: int = 128                 # MinHash signature length
-    lsh_bands: int = 32                     # 32 bands x 4 rows
 
 
 @dataclass(frozen=True)
@@ -61,7 +39,6 @@ class ValidationConfig:
     """Top-level engine config."""
 
     drift: DriftConfig = field(default_factory=DriftConfig)
-    similarity: SimilarityConfig = field(default_factory=SimilarityConfig)
 
     # Constraint-check thresholds: a partition FAILS a check when the
     # violation *rate* exceeds these (exact violation rows are always
@@ -71,13 +48,14 @@ class ValidationConfig:
     max_dup_rate: float = 0.0               # uniqueness: any dup fails
     max_orphan_rate: float = 0.0            # referential: any orphan fails
 
-    # Incremental processing (reference: 60s poll + 1-min recheck,
-    # main.py:414, database_manager.py:84)
-    recheck_minutes: int = 1
+    # Manifest lease lifetime (reference: the in_process flag,
+    # database_manager.py:66-76). Not read yet: run_validation takes
+    # leases but does not honour them (Manifest.pending_partitions'
+    # respect_leases/lease_ttl_seconds)
     lease_timeout_minutes: int = 30
 
     # Scale knobs
-    salt_buckets: int = 16                  # two-phase agg / salted join fanout
+    salt_buckets: int = 8                   # salted anti-join catalog fanout
     # Violations-sink exemplar cap: the violations table is the ONLY
     # engine output that scales with table size (a 1% violation rate at
     # 10^12 docs is 10^10 full-width rows). When set, at most this many
@@ -87,12 +65,9 @@ class ValidationConfig:
     # _cap_violations). None = emit every violation row (reference
     # parity default; K1 semantics).
     max_violation_exemplars: int | None = None
-    truncate_chars: int = 100               # report truncation (main.py:120-130)
-    top_k_report: int = 20
 
-    # Columns checked for uniqueness / referential integrity
+    # Column (or list of columns) checked for uniqueness
     unique_key: str = "doc_id"
-    ref_column: str = "media_ref"
 
 
 DEFAULT_CONFIG = ValidationConfig()
@@ -120,9 +95,6 @@ def _build(cls, d: dict, nested: dict | None = None):
 
 def config_from_dict(d: dict) -> ValidationConfig:
     """ValidationConfig from a plain dict (e.g. a parsed JSON file):
-    top-level keys are ValidationConfig fields; ``drift`` and
-    ``similarity`` may be nested dicts. Unknown keys raise."""
-    return _build(
-        ValidationConfig, d,
-        nested={"drift": DriftConfig, "similarity": SimilarityConfig},
-    )
+    top-level keys are ValidationConfig fields; ``drift`` may be a
+    nested dict. Unknown keys raise."""
+    return _build(ValidationConfig, d, nested={"drift": DriftConfig})

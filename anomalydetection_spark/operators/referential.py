@@ -4,7 +4,9 @@ Engine generalization of the reference's metadata joins (J1-J4,
 /root/reference/database_manager.py:188-233): every non-null
 ``spans.media_ref`` must exist in the media catalog; violating docs are
 emitted with their full original span sequence (span-sequence equality
-invariant) and per-partition pass/fail verdicts.
+invariant); per-partition verdicts come from the pipeline's count grid.
+``ReferentialCheck`` is the one builder of the machinery below for the
+batch pass, the pre-flight and the stream.
 
 Scale design:
 1. ``explode`` spans → distinct (doc, ref) pairs. Distinct-by-ref first:
@@ -22,6 +24,8 @@ Scale design:
 """
 
 from __future__ import annotations
+
+from functools import cached_property
 
 import numpy as np
 import pyarrow as pa
@@ -264,44 +268,76 @@ def orphan_refs(
     return out.dropDuplicates(dedup_cols)
 
 
-def referential_violations(
-    docs: DataFrame,
-    catalog: DataFrame,
-    spark: SparkSession | None = None,
-    **kwargs,
-) -> DataFrame:
-    """Violation rows: original doc rows (full span sequence) + the
-    orphan ref(s) that failed, one row per (doc, orphan ref)."""
-    orphans = orphan_refs(docs, catalog, spark, **kwargs)
-    per_doc = orphans.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set("media_ref")).alias("orphan_refs")
-    )
-    return docs.join(per_doc, "doc_id", "inner").select(
-        "doc_id", "partition_id", "spans", "orphan_refs"
-    )
+class ReferentialCheck:
+    """The referential machinery for one catalog, built once and reused
+    by every pass, pre-flight or micro-batch that probes it:
 
+    * ``udf`` — catalog within ``BROADCAST_MAX_CATALOG_ROWS``: the key
+      set is collected and broadcast once, and the check is the
+      row-local membership UDF inside the wide scan;
+    * ``udf is None`` — bigger catalog: ``orphan_doc`` runs the salted
+      anti-join, with a Bloom prefilter built once (``bloom``) above
+      ``BLOOM_MIN_CATALOG_ROWS``.
 
-def referential_verdicts(
-    docs: DataFrame,
-    catalog: DataFrame,
-    spark: SparkSession | None = None,
-    **kwargs,
-) -> DataFrame:
-    orphans = orphan_refs(docs, catalog, spark, **kwargs)
-    per_part = orphans.groupBy("partition_id").agg(
-        F.count("*").alias("n_violations")
-    )
-    totals = docs.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
-    return totals.join(per_part, "partition_id", "left").select(
-        F.lit("referential").alias("check"),
-        F.col("partition_id").cast("int"),
-        "n_rows",
-        F.coalesce("n_violations", F.lit(0)).alias("n_violations"),
-        (F.coalesce("n_violations", F.lit(0)) / F.col("n_rows")).alias(
-            "violation_rate"
-        ),
-        F.coalesce("n_violations", F.lit(0)).cast("double").alias("score"),
-        F.when(F.coalesce("n_violations", F.lit(0)) > 0, "fail")
-        .otherwise("pass")
-        .alias("verdict"),
-    )
+    The catalog work (size, key collect, Bloom build) runs on first use,
+    so a pass can overlap it with its other narrow scans; ``build()``
+    forces it up front (a stream does, so no micro-batch pays it)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        catalog: DataFrame,
+        size_hint: int | None = None,
+        salt_buckets: int = 8,
+    ):
+        self.spark, self.catalog = spark, catalog
+        self.size_hint, self.salt_buckets = size_hint, salt_buckets
+
+    @cached_property
+    def n(self) -> int:
+        if self.size_hint is not None:
+            return self.size_hint
+        return self.catalog.count()
+
+    @cached_property
+    def udf(self):
+        if self.n > BROADCAST_MAX_CATALOG_ROWS:
+            return None
+        return orphan_refs_rowlocal_udf(
+            self.spark, collect_catalog_keys(self.catalog)
+        )
+
+    @cached_property
+    def bloom(self) -> tuple | None:
+        if self.n <= BLOOM_MIN_CATALOG_ROWS:
+            return None
+        return build_bloom(self.catalog, "media_ref", self.n)
+
+    def build(self) -> "ReferentialCheck":
+        """Run the one-time catalog work now instead of on first use."""
+        if self.udf is None:
+            _ = self.bloom
+        return self
+
+    def orphan_doc(self, docs: DataFrame) -> DataFrame:
+        """Per-physical-row orphan aggregate (doc_id, partition_id,
+        row_fp, orphan_refs, n_orphans) from the salted anti-join —
+        ``row_fp`` keeps duplicate doc_ids with differing spans apart,
+        matching the row-local path's semantics exactly."""
+        return (
+            orphan_refs(
+                docs,
+                self.catalog,
+                self.spark,
+                use_bloom=self.bloom is not None,
+                catalog_size_hint=self.n,
+                salt_buckets=self.salt_buckets,
+                bloom=self.bloom,
+                row_fingerprint=True,
+            )
+            .groupBy("doc_id", "partition_id", "row_fp")
+            .agg(
+                F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
+                F.count("*").alias("n_orphans"),
+            )
+        )

@@ -1,29 +1,24 @@
-"""Per-column / per-span-kind statistics profiler.
+"""Conformance check definitions and span statistics.
 
 The engine's analog of the reference's feature-extraction stage (A1,
 /root/reference/model_manager.py:154-198) re-expressed as declarative
-aggregations: instead of a TF-IDF matrix on the driver, per-partition
-distributed stats that (a) feed conformance verdicts directly and (b)
-are the histogram inputs to drift detection.
+column expressions: instead of a TF-IDF matrix on the driver, row-local
+flags that feed the conformance verdicts directly, and the length
+histograms that are the drift input.
 
-Everything here is built-in JVM aggregation (whole-stage codegen, map-
-side partial agg) — no Python in the hot path. HLL sketches use the
-DataSketches-backed ``hll_sketch_agg`` (PySpark 4.x) so partition
-partials merge losslessly with ``hll_union_agg`` at the table level.
+Everything here is built-in JVM expressions and aggregation (whole-stage
+codegen, map-side partial agg) — no Python in the hot path.
 
-Stats computed (SURVEY.md §2.2 F1-F6 analogs):
-- null / empty rates: spans null, spans empty, span.kind null,
-  text empty (F1 empty-line filter analog)
-- type conformance: offset monotonicity per doc (the F4/F5
-  timestamp-parse-rate analog for the interleaved shape)
-- per-kind span counts + text-length stats + equi-width length
-  histograms (drift input)
-- distinct doc_id / media_ref via HLL sketches
+- conformance (SURVEY.md §2.2 F1-F6 analogs): null / empty spans,
+  offset monotonicity per doc (the F4/F5 timestamp-parse-rate analog for
+  the interleaved shape), null span kinds, kind<->media_ref coherence
+- equi-width per-kind text-length histograms (drift input)
+- pairwise distinct-set overlap from HLL sketches
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MONOTONE_EXPR = (
@@ -42,63 +37,6 @@ def incoherent_span_filter(s):
     return s["kind"].isNotNull() & (
         ((s["kind"] == "text") & s["media_ref"].isNotNull())
         | ((s["kind"] != "text") & s["media_ref"].isNull())
-    )
-
-
-def doc_conformance(docs: DataFrame) -> DataFrame:
-    """Per-doc conformance flags — one narrow projection, no shuffle."""
-    return docs.select(
-        "doc_id",
-        "partition_id",
-        F.col("spans").isNull().alias("null_spans"),
-        (F.col("spans").isNotNull() & (F.size("spans") == 0)).alias("empty_spans"),
-        F.when(
-            F.col("spans").isNull(), F.lit(False)
-        ).otherwise(~F.expr(MONOTONE_EXPR)).alias("nonmonotone_offsets"),
-        F.coalesce(
-            F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
-        ).alias("n_null_kind"),
-        F.coalesce(
-            F.size(F.filter("spans", incoherent_span_filter)), F.lit(0)
-        ).alias("n_incoherent"),
-        F.coalesce(F.size("spans"), F.lit(0)).alias("n_spans"),
-    )
-
-
-def partition_stats(docs: DataFrame) -> DataFrame:
-    """Per-partition column stats (one shuffle, partial-agg combined)."""
-    c = doc_conformance(docs)
-    return c.groupBy("partition_id").agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.col("null_spans").cast("long")).alias("n_null_spans"),
-        F.sum(F.col("empty_spans").cast("long")).alias("n_empty_spans"),
-        F.sum(F.col("nonmonotone_offsets").cast("long")).alias("n_nonmonotone"),
-        F.sum("n_null_kind").alias("n_null_kind"),
-        F.sum("n_incoherent").alias("n_incoherent"),
-        F.sum("n_spans").alias("n_spans"),
-        F.expr("hll_sketch_agg(doc_id)").alias("doc_id_hll"),
-    )
-
-
-def span_kind_stats(docs: DataFrame) -> DataFrame:
-    """Per (partition, kind): counts, text-length stats, media distinct."""
-    s = docs.select(
-        "partition_id", F.explode("spans").alias("s")
-    ).select(
-        "partition_id",
-        F.coalesce(F.col("s.kind"), F.lit("__null__")).alias("kind"),
-        F.length(F.coalesce(F.col("s.text"), F.lit(""))).alias("text_len"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
-    return s.groupBy("partition_id", "kind").agg(
-        F.count("*").alias("n_spans"),
-        F.avg("text_len").alias("avg_text_len"),
-        F.min("text_len").alias("min_text_len"),
-        F.max("text_len").alias("max_text_len"),
-        F.percentile_approx("text_len", [0.5, 0.9, 0.99], 10000).alias(
-            "len_quantiles"
-        ),
-        F.expr("hll_sketch_agg(media_ref)").alias("media_ref_hll"),
     )
 
 
@@ -128,50 +66,40 @@ def length_histogram(
     )
 
 
-def kind_histogram(docs: DataFrame, by_partition: bool = False) -> DataFrame:
-    """Span-kind mix histogram (PSI input for kind drift)."""
-    keys = (["partition_id"] if by_partition else []) + ["kind"]
-    return (
-        docs.select("partition_id", F.explode("spans").alias("s"))
-        .select(
-            "partition_id",
-            F.coalesce(F.col("s.kind"), F.lit("__null__")).alias("kind"),
-        )
-        .groupBy(*keys)
-        .agg(F.count("*").alias("count"))
+CONF_CHECKS = (
+    "null_spans", "empty_spans", "offset_monotonicity", "null_span_kind",
+    "span_coherence",
+)
+
+
+def conformance_exprs() -> dict:
+    """The five row-local conformance flags — the ONE place the check
+    definitions live: every CONF_CHECKS name → its boolean Column, in
+    CONF_CHECKS order. Shared by the full pass's wide scan, the sampled
+    pre-flight and ``conformance_violations``, so a tightened definition
+    cannot make any of them disagree."""
+    null_spans = F.col("spans").isNull()
+    return {
+        "null_spans": null_spans,
+        "empty_spans": F.col("spans").isNotNull() & (F.size("spans") == 0),
+        "offset_monotonicity": F.when(null_spans, F.lit(False)).otherwise(
+            ~F.expr(MONOTONE_EXPR)
+        ),
+        "null_span_kind": F.coalesce(
+            F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
+        ) > 0,
+        "span_coherence": F.coalesce(
+            F.size(F.filter("spans", incoherent_span_filter)), F.lit(0)
+        ) > 0,
+    }
+
+
+def conformance_detail() -> Column:
+    """Comma-joined names of the conformance checks a row fails ("" when
+    it passes all of them) — the violation rows' detail string."""
+    return F.concat_ws(
+        ",", *[F.when(flag, name) for name, flag in conformance_exprs().items()]
     )
-
-
-def conformance_verdicts(
-    docs: DataFrame,
-    max_null_rate: float = 0.01,
-    max_type_error_rate: float = 0.01,
-) -> DataFrame:
-    """Per-partition verdict rows for null-rate + offset-monotonicity
-    conformance (VERDICTS_SCHEMA shape, one row per check)."""
-    ps = partition_stats(docs).cache()
-    checks = [
-        ("null_spans", "n_null_spans", max_null_rate),
-        ("empty_spans", "n_empty_spans", max_null_rate),
-        ("offset_monotonicity", "n_nonmonotone", max_type_error_rate),
-        ("null_span_kind", "n_null_kind", max_type_error_rate),
-        ("span_coherence", "n_incoherent", max_type_error_rate),
-    ]
-    out = None
-    for name, colname, thresh in checks:
-        v = ps.select(
-            F.lit(name).alias("check"),
-            F.col("partition_id").cast("int"),
-            "n_rows",
-            F.col(colname).alias("n_violations"),
-            (F.col(colname) / F.col("n_rows")).alias("violation_rate"),
-            (F.col(colname) / F.col("n_rows")).alias("score"),
-            F.when(F.col(colname) / F.col("n_rows") > thresh, "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        )
-        out = v if out is None else out.unionByName(v)
-    return out
 
 
 def conformance_violations(docs: DataFrame) -> DataFrame:
@@ -180,28 +108,10 @@ def conformance_violations(docs: DataFrame) -> DataFrame:
 
     Flags are row-local → computed inline, no join (a self-join on
     doc_id would fan out across planted duplicate ids)."""
-    null_spans = F.col("spans").isNull()
-    empty_spans = F.col("spans").isNotNull() & (F.size("spans") == 0)
-    nonmono = F.when(null_spans, F.lit(False)).otherwise(~F.expr(MONOTONE_EXPR))
-    n_null_kind = F.coalesce(
-        F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
-    )
-    n_incoherent = F.coalesce(
-        F.size(F.filter("spans", incoherent_span_filter)), F.lit(0)
-    )
     return (
         docs.select(
-            "doc_id",
-            "partition_id",
-            "spans",
-            F.concat_ws(
-                ",",
-                F.when(null_spans, "null_spans"),
-                F.when(empty_spans, "empty_spans"),
-                F.when(nonmono, "nonmonotone_offsets"),
-                F.when(n_null_kind > 0, "null_span_kind"),
-                F.when(n_incoherent > 0, "span_coherence"),
-            ).alias("detail"),
+            "doc_id", "partition_id", "spans",
+            conformance_detail().alias("detail"),
         )
         .filter(F.col("detail") != "")
     )

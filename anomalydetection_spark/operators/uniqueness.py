@@ -6,14 +6,11 @@ emitted exactly once with its score" (K1 sink semantics,
 /root/reference/log_parser.py:301-327).
 
 Scale design (100 TB): a plain ``groupBy(key).count()`` already does
-map-side partial aggregation (two-phase), so uniform key skew is a
-non-issue. The explicit salted variant here covers the pathological
-case — a single key duplicated millions of times — by pre-aggregating
-on ``(key, salt)`` where salt is derived from the executor partition,
-then re-aggregating on ``key``; the hot key's partial counts then
-arrive at the final reducer as ≤ ``salt_buckets`` rows instead of
-millions. Violation rows are recovered by joining the (small) dup-key
-set back to the table — broadcast when it fits, AQE otherwise.
+map-side partial aggregation (two-phase), so even a single key
+duplicated millions of times reaches the final reducer as at most one
+partial-count row per map task. Violation rows are recovered by joining
+the (small) dup-key set back to the table — broadcast when it fits,
+a shuffle join otherwise (plans/pipeline.py::validate_scope).
 """
 
 from __future__ import annotations
@@ -22,13 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _keys(key) -> list[str]:
-    return [key] if isinstance(key, str) else list(key)
-
-
-def duplicate_keys(
-    df: DataFrame, key="doc_id", salt_buckets: int = 16
-) -> DataFrame:
+def duplicate_keys(df: DataFrame, key="doc_id") -> DataFrame:
     """Keys appearing more than once → (key..., dup_cnt). ``key`` may
     be one column name or a list (composite key) — the plan is the same
     single partial-agg groupBy either way.
@@ -40,81 +31,12 @@ def duplicate_keys(
     (key, salt) pre-aggregation would deliver. An earlier draft salted
     explicitly with ``spark_partition_id() % salt_buckets``; that added
     a second full shuffle of near-unique keys for zero skew benefit
-    (benchmarked ~1.7x slower) — ``salt_buckets`` is retained for API
-    stability but partial agg makes it unnecessary.
+    (benchmarked ~1.7x slower).
     """
-    cols = _keys(key)
+    cols = [key] if isinstance(key, str) else list(key)
     return (
         df.select(*cols)
         .groupBy(*cols)
         .agg(F.count("*").alias("dup_cnt"))
         .filter(F.col("dup_cnt") > 1)
-    )
-
-
-def uniqueness_violations(
-    df: DataFrame,
-    key="doc_id",
-    salt_buckets: int = 16,
-    broadcast_dups: bool = True,
-    key_scope: DataFrame | None = None,
-) -> DataFrame:
-    """Full violation rows for duplicated keys (original columns + dup_cnt).
-
-    The dup-key set is usually tiny relative to the table → broadcast it
-    for a shuffle-free probe of the big side. With ``broadcast_dups=False``
-    AQE picks the strategy (use when dup rate is pathological).
-
-    ``key_scope``: frame to detect duplicate keys over (defaults to
-    ``df``). Incremental runs pass the FULL table here while ``df`` is
-    only the pending partitions — a duplicate pair straddling a
-    validated and a pending partition is still caught (the key-only
-    scan over the full table is one narrow column; violation rows are
-    attributed only within ``df``).
-    """
-    dups = duplicate_keys(key_scope if key_scope is not None else df, key, salt_buckets)
-    if broadcast_dups:
-        dups = F.broadcast(dups)
-    return df.join(dups, _keys(key), "inner")
-
-
-def uniqueness_verdicts(
-    df: DataFrame,
-    key="doc_id",
-    partition_col: str = "partition_id",
-    salt_buckets: int = 16,
-    key_scope: DataFrame | None = None,
-) -> DataFrame:
-    """Per-partition pass/fail for the uniqueness check.
-
-    A duplicate pair may straddle partitions; every partition containing
-    at least one row of a duplicated key fails (matches the reference's
-    per-file verdict granularity: the file containing the anomalous line
-    gets the anomaly, /root/reference/model_manager.py:200-228).
-
-    ``key_scope`` (see ``uniqueness_violations``): detect dup keys over
-    the full table even when ``df`` is an incremental slice.
-    """
-    dups = F.broadcast(
-        duplicate_keys(key_scope if key_scope is not None else df, key, salt_buckets)
-    )
-    per_part = df.join(dups, _keys(key), "inner").groupBy(partition_col).agg(
-        F.count("*").alias("n_violations")
-    )
-    totals = df.groupBy(partition_col).agg(F.count("*").alias("n_rows"))
-    return (
-        totals.join(per_part, partition_col, "left")
-        .select(
-            F.lit("uniqueness").alias("check"),
-            F.col(partition_col).cast("int").alias("partition_id"),
-            "n_rows",
-            F.coalesce("n_violations", F.lit(0)).alias("n_violations"),
-            (F.coalesce("n_violations", F.lit(0)) / F.col("n_rows")).alias(
-                "violation_rate"
-            ),
-            F.coalesce("n_violations", F.lit(0)).cast("double").alias("score"),
-            F.when(F.coalesce("n_violations", F.lit(0)) > 0, "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        )
     )

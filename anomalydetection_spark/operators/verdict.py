@@ -1,20 +1,13 @@
-"""Verdict assembly: threshold filter, score normalization, similarity
-grouping, top-k report.
+"""Verdict assembly: similarity grouping and the two-level rollup.
 
 Mirrors the reference's output stage semantics:
-- F11 threshold predicate (``prediction == -1 AND score < threshold``,
-  /root/reference/model_manager.py:222, ensemble_model.py:386)
-- A5 min/max score normalization to an "anomaly probability %"
-  (``100 - (score-min)/(max-min)*100``, model_manager.py:255,
-  ensemble_model.py:414) — reference carries global min/max across
-  batches imperatively (:213-215); here it's a single unpartitioned
-  window / 1-row-agg cross join.
 - A11 greedy similarity grouping (model_manager.py:252-267): order-
   dependent and non-associative, so exact parity holds only *within* a
   deterministically ordered bounded group — we first group by an exact
   key (check, partition), then run the greedy pass per group in
   ``applyInPandas``; the cross-group semantic delta is documented.
-- A12 top-k ordered report (model_manager.py:269-280).
+- the two-level verdict (SURVEY.md §3.3): per-partition verdict rows
+  rolled up to one table-level row per check.
 """
 
 from __future__ import annotations
@@ -23,45 +16,10 @@ import difflib
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import VERDICTS_DDL, VERDICTS_SCHEMA
-
-
-def threshold_violations(
-    scored: DataFrame, score_col: str = "score", threshold: float = 0.0
-) -> DataFrame:
-    """F11: rows whose score falls below the threshold are violations."""
-    return scored.filter(F.col(score_col) < F.lit(threshold))
-
-
-def normalize_scores(
-    df: DataFrame, score_col: str = "score", out_col: str = "anomaly_pct"
-) -> DataFrame:
-    """A5: 100 - (score-min)/(max-min)*100 over the whole frame.
-
-    Computed via a 1-row global aggregate cross-joined back (cheaper
-    than an unpartitioned window: no single-reducer sort, and the agg
-    is partial-aggregated map-side)."""
-    mm = df.agg(
-        F.min(score_col).alias("_mn"), F.max(score_col).alias("_mx")
-    )
-    return (
-        df.crossJoin(F.broadcast(mm))
-        .withColumn(
-            out_col,
-            F.when(
-                F.col("_mx") == F.col("_mn"), F.lit(0.0)
-            ).otherwise(
-                F.lit(100.0)
-                - (F.col(score_col) - F.col("_mn"))
-                / (F.col("_mx") - F.col("_mn"))
-                * 100.0
-            ),
-        )
-        .drop("_mn", "_mx")
-    )
 
 
 def _greedy_group(pdf: pd.DataFrame, text_col: str, ratio_threshold: float,
@@ -136,26 +94,6 @@ def similarity_groups(
     return prepared.groupBy("group_key").applyInPandas(
         run,
         schema="group_key string, exemplar string, best_score double, n_members long",
-    )
-
-
-def top_k_report(
-    groups: DataFrame,
-    order_col: str = "best_score",
-    k: int = 20,
-    truncate_chars: int = 100,
-    text_col: str = "exemplar",
-) -> DataFrame:
-    """A12 + F7: top-k groups by score, exemplar truncated to 100 chars
-    with '...' (main.py:120-130)."""
-    truncated = F.when(
-        F.length(text_col) > truncate_chars,
-        F.concat(F.substring(text_col, 1, truncate_chars), F.lit("...")),
-    ).otherwise(F.col(text_col))
-    return (
-        groups.withColumn(text_col, truncated)
-        .orderBy(F.desc(order_col), text_col)
-        .limit(k)
     )
 
 

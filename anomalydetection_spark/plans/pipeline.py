@@ -3,11 +3,13 @@ reference's per-file poll loop (/root/reference/main.py:136-275) →
 ensemble pass (:277-357), restructured for Spark:
 
   manifest anti-join (partition discovery, S5)        — driver + 1 agg
-  → small check inputs (dup keys, orphan refs) — narrow column scans
-  → ONE wide scan emitting every violation row (conformance flags are
-    row-local; uniqueness/referential attach via broadcast joins)
-  → ONE collect of the per-partition violation count grid (no re-scan
-    of the table)
+  → ``validate_scope``, the validation core the batch pass and every
+    stream micro-batch share:
+    small check inputs (dup keys, orphan refs) — narrow column scans
+    → ONE wide scan emitting every violation row (conformance flags are
+      row-local; uniqueness/referential attach via broadcast joins)
+    → ONE collect of the per-partition violation count grid (no re-scan
+      of the table)
   → verdict rows, table-level rollup, drift scores and manifest records
     computed on the driver from that grid, the snapshot rows and both
     length histograms — all metadata scale (partitions × checks counts,
@@ -16,14 +18,11 @@ ensemble pass (:277-357), restructured for Spark:
 
 Scan budget per pass (the thing that matters at 100 TB): one snapshot
 hash pass, one key-column pass (uniqueness), one exploded-refs pass
-(referential, Bloom built once), one full-width violations pass, one
-text-length pass (drift input). Everything downstream — verdicts,
-rollups, drift — is driver-side math over bounded-size collected
-intermediates, so the verdict tier starts no Spark job beyond the grid
-collect and the baseline read. An earlier
-draft derived verdicts and violations independently (~10 scans, Bloom
-built twice); the rewrite roughly halves wall time and removes the
-worst thread-contention stages.
+(referential, only beyond the broadcast cap), one full-width violations
+pass, one text-length pass (drift input). Everything downstream —
+verdicts, rollups, drift — is driver-side math over bounded-size
+collected intermediates, so the verdict tier starts no Spark job beyond
+the grid collect and the baseline read.
 
 Resume semantics: a crash before the manifest commit leaves CURRENT
 pointing at the previous version; the next run's pending set is
@@ -35,6 +34,7 @@ database_manager.py:84-103).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,47 +43,16 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, ValidationConfig
 from ..operators import drift as drift_ops
 from ..operators import stats as stats_ops
-from ..operators.referential import orphan_refs
+from ..operators.referential import (
+    BROADCAST_MAX_CATALOG_ROWS,
+    ReferentialCheck,
+    span_refs_column,
+)
+from ..operators.stats import CONF_CHECKS
 from ..operators.uniqueness import duplicate_keys
 from ..operators.verdict import rollup_rows
 from ..schema import VERDICTS_DDL
 from ..sources.manifest import Manifest, partition_snapshots
-
-CONF_CHECKS = (
-    "null_spans", "empty_spans", "offset_monotonicity", "null_span_kind",
-    "span_coherence",
-)
-
-
-def conformance_exprs():
-    """The five row-local conformance expressions — the ONE place the
-    check definitions live. Returns (flags, n_null_kind, n_incoherent):
-    ``flags`` maps every CONF_CHECKS name to its boolean Column (in
-    CONF_CHECKS order); the two counts are exposed separately because
-    the violation rows report them in their detail strings. Shared by
-    the full pass (_all_violations) and the sampled pre-flight
-    (preflight_estimate) so a tightened definition cannot make the
-    pre-flight disagree with the pass it predicts."""
-    null_spans = F.col("spans").isNull()
-    empty_spans = F.col("spans").isNotNull() & (F.size("spans") == 0)
-    nonmono = F.when(null_spans, F.lit(False)).otherwise(
-        ~F.expr(stats_ops.MONOTONE_EXPR)
-    )
-    n_null_kind = F.coalesce(
-        F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
-    )
-    n_incoherent = F.coalesce(
-        F.size(F.filter("spans", stats_ops.incoherent_span_filter)),
-        F.lit(0),
-    )
-    flags = {
-        "null_spans": null_spans,
-        "empty_spans": empty_spans,
-        "offset_monotonicity": nonmono,
-        "null_span_kind": n_null_kind > 0,
-        "span_coherence": n_incoherent > 0,
-    }
-    return flags, n_null_kind, n_incoherent
 
 
 def check_gates(cfg) -> dict:
@@ -134,7 +103,7 @@ def _all_violations(
 
     Conformance flags are row-local expressions; uniqueness attaches
     via a broadcast join on the (tiny) dup-key set. Referential comes
-    in two shapes, chosen by catalog size in ``run_validation``:
+    in two shapes, chosen by catalog size (``ReferentialCheck``):
 
     * ``orphan_udf`` (broadcastable catalog — the common case): a
       vectorized membership check over each row's projected refs array
@@ -150,14 +119,7 @@ def _all_violations(
       (``broadcast_orphans``).
 
     Each violating doc emits one row per failed check, spans verbatim."""
-    flags, n_null_kind, n_incoherent = conformance_exprs()
-    conf_detail = F.concat_ws(
-        ",", *[F.when(expr, name) for name, expr in flags.items()]
-    )
-    null_spans = flags["null_spans"]
-    empty_spans = flags["empty_spans"]
-    nonmono = flags["offset_monotonicity"]
-
+    conf_detail = stats_ops.conformance_detail()
     dups_b = F.broadcast(dups) if broadcast_dups else dups
     # attach on the CONFIGURED uniqueness key — duplicate_keys returns
     # (key..., dup_cnt), so the join columns must mirror cfg.unique_key
@@ -167,8 +129,6 @@ def _all_violations(
     )
     flagged = scope.join(dups_b, key_cols, "left")
     if orphan_udf is not None:
-        from ..operators.referential import span_refs_column
-
         # one ArrowEvalPython stage; the empty→null rewrite happens on
         # the column ref so the UDF runs once per row
         flagged = (
@@ -311,6 +271,25 @@ def verdict_rows(
     return rows
 
 
+def drift_rows(
+    hist_rows, base_rows, cfg: ValidationConfig, check_prefix: str
+) -> list[tuple]:
+    """Length-drift verdict tuples of a collected (kind, bucket)
+    histogram against the collected baseline, at the configured drift
+    thresholds — shared by the batch pass and the micro-batch."""
+    d = cfg.drift
+    return drift_ops.drift_verdict_rows(
+        hist_rows,
+        base_rows,
+        keys=["kind"],
+        psi_threshold=d.psi_threshold_global,
+        ks_threshold=d.ks_threshold_global,
+        check_prefix=check_prefix,
+        chi2_threshold=d.chi2_threshold_global,
+        jsd_threshold=d.jsd_threshold_global,
+    )
+
+
 def _partition_outcomes(part_rows: list[tuple]) -> dict[int, tuple]:
     """partition_id → (violations summed over checks, any check failed)
     — the manifest record's view of a partition's verdict rows."""
@@ -355,6 +334,87 @@ def _cap_violations(violations: DataFrame, k: int) -> DataFrame:
     return out.filter(F.col("__rn") <= k).drop("__rn")
 
 
+def validate_scope(
+    scope: DataFrame,
+    key_scope: DataFrame,
+    ref: ReferentialCheck | None,
+    cfg: ValidationConfig = DEFAULT_CONFIG,
+    out_dir: str | None = None,
+    mark=None,
+) -> tuple[DataFrame, dict[int, dict]]:
+    """The validation core of the batch pass and of every stream
+    micro-batch: all violation rows of ``scope`` from ONE wide scan,
+    materialized, plus the collected per-partition count grid.
+
+    Duplicate ``cfg.unique_key`` values are detected over ``key_scope``
+    (the full table for an incremental pass, so pairs straddling
+    validated and pending partitions stay visible; the batch itself for
+    a stream) and attributed within ``scope``; referential uses ``ref``.
+    The small inputs are cached and counted first — the dup-key count
+    on a helper thread, overlapping ``ref``'s one-time catalog work —
+    and each is broadcast only within its size guard, beyond which the
+    attach is a shuffle join rather than an executor-OOM risk;
+    ``mark("small_scans")`` follows. Violations are written to
+    ``out_dir`` (overwrite: re-runs and replayed micro-batches stay
+    idempotent) and read back, or cached when it is None; with
+    ``cfg.max_violation_exemplars`` they are capped, the grid keeping
+    the exact counts."""
+    spark = scope.sparkSession
+    dups = duplicate_keys(key_scope, cfg.unique_key).cache()
+    orphan_doc = None
+    broadcast_orphans = True
+    with ThreadPoolExecutor(max_workers=1) as helper:
+        n_dups = helper.submit(dups.count)
+        orphan_udf = ref.udf if ref is not None else None
+        if ref is not None and orphan_udf is None:
+            orphan_doc = ref.orphan_doc(scope).cache()
+            # materializing the cache also tells whether this side is
+            # still broadcast-sized — at a high violation rate it is not
+            broadcast_orphans = orphan_doc.count() <= BROADCAST_MAX_ROWS
+        # (key, count) rows are catalog-key-sized: same ceiling as the
+        # catalog broadcast
+        broadcast_dups = n_dups.result() <= BROADCAST_MAX_CATALOG_ROWS
+    if mark is not None:
+        mark("small_scans")
+
+    violations = _all_violations(
+        scope,
+        dups,
+        orphan_doc,
+        broadcast_orphans,
+        orphan_udf=orphan_udf,
+        broadcast_dups=broadcast_dups,
+        unique_key=cfg.unique_key,
+    )
+    if cfg.max_violation_exemplars is None:
+        if out_dir is None:
+            violations = violations.cache()  # the grid collect fills it
+        else:
+            violations.write.mode("overwrite").parquet(out_dir)
+            violations = spark.read.parquet(out_dir)
+        grid = _count_grid(violations, capped=False)
+    else:
+        # the capped stream is bounded (≤ K rows per check × partition):
+        # cache it, take the exact counts from its stamped window
+        # aggregates, and hand out the rows without the helper columns
+        capped = _cap_violations(
+            violations, cfg.max_violation_exemplars
+        ).cache()
+        grid = _count_grid(capped, capped=True)
+        violations = capped.drop(*_CAP_HELPER_COLS)
+        if out_dir is not None:
+            violations.write.mode("overwrite").parquet(out_dir)
+            violations = spark.read.parquet(out_dir)
+            capped.unpersist()
+    # the small inputs are dead once the violations are materialized —
+    # in a long-lived session they would otherwise pin block-manager
+    # memory the caches that matter need
+    dups.unpersist()
+    if orphan_doc is not None:
+        orphan_doc.unpersist()
+    return violations, grid
+
+
 def run_validation(
     spark: SparkSession,
     docs: DataFrame,
@@ -389,21 +449,9 @@ def run_validation(
 
     manifest = Manifest(manifest_dir) if manifest_dir else None
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=4)
-    dups = duplicate_keys(docs, cfg.unique_key, cfg.salt_buckets).cache()
-    fut_dups = None
-    # discovery rows: (partition_id, [snapshot_hash,] n_rows) per
-    # partition with rows, collected once — either right here (resume)
-    # or from a driver thread overlapping the narrow scans
-    fut_snaps = None
-
     def _empty_result() -> ValidationResult:
         from ..schema import VIOLATIONS_SCHEMA
 
-        pool.shutdown(wait=False)
-        dups.unpersist()
         return ValidationResult(
             spark.createDataFrame([], schema=VERDICTS_DDL),
             spark.createDataFrame([], schema=VIOLATIONS_SCHEMA),
@@ -411,81 +459,49 @@ def run_validation(
             manifest.current_version() if manifest else 0,
         )
 
-    # Snapshot hashing (full-width pass) only pays when a manifest
-    # exists to compare against — without one, partition discovery is a
-    # narrow count scan.
-    if manifest is not None and manifest.current_version() == 0:
-        # EMPTY manifest (cold start): change detection has nothing to
-        # compare against, so every partition with rows is pending by
-        # construction — the snapshot-hash scan still has to run (the
-        # commit records the hashes) but it no longer needs to GATE
-        # the pass. Fuse it into the concurrent narrow-scan window
-        # exactly like the no-manifest path: scope ≡ docs, the dup
-        # scan and drift histogram launch immediately, and the hash
-        # scan materializes from a driver thread. Leases are acquired
-        # as soon as the partition list lands (before the wide scan
-        # materializes — the expensive, restart-worthy part); a crash
-        # before that point leaves no manifest record, which is the
-        # same clean re-run a pre-pass crash produces today. This was
-        # the round-5 scan-budget trim: the cold-start manifest run
-        # previously serialized a full-width scan (~9 s at 16M docs)
-        # ahead of all other work.
-        fut_dups = pool.submit(dups.count)
-        fut_snaps = pool.submit(partition_snapshots(docs).collect)
-        pending = None
-        scope = docs
-    elif manifest is not None:
-        snap_rows = partition_snapshots(docs).collect()
-        pending = sorted(manifest.pending_partitions(snap_rows))
-        manifest.acquire_leases(pending, run_id, now)
-        if not pending:
-            return _empty_result()
-        # Partition pruning: only unvalidated partitions are read
-        # further. Deliberately NOT cached: each stage projects a
-        # narrow column subset, so parquet re-scans (vectorized,
-        # column-pruned) beat a full-row block-manager cache — caching
-        # the spans column in object form benchmarked 2-10x slower at
-        # high core counts (GC + eviction churn) and is a non-starter
-        # at 100 TB anyway.
-        scope = docs.filter(F.col("partition_id").isin(pending))
-    else:
-        # No manifest → every partition with rows is pending by
-        # construction, so (a) scope ≡ docs — no isin() filter in any
-        # downstream plan — and (b) NOTHING depends on the discovery
-        # collect until verdict time: the dup-key scan, the drift
-        # histogram, AND the per-partition totals collect all run
-        # concurrently from driver threads while the driver proceeds
-        # straight to the wide-scan setup. (Discovery previously
-        # serialized ~2.5s ahead of everything at 16M docs.)
-        fut_dups = pool.submit(dups.count)
-        fut_snaps = pool.submit(
-            docs.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
-            .collect
-        )
-        pending = None
-        scope = docs
-    _mark("discovery")
-
-    # --- small check inputs (narrow scans; tiny cached outputs) ---
-    # key_scope=docs: duplicate *detection* scans the full table's key
-    # column so cross-partition dups stay visible to incremental runs;
-    # attribution stays within scope via the broadcast join.
-    # The dup-key scan and the orphan-refs scan are independent narrow
-    # jobs — submit the dup materialization from a second driver thread
-    # so the two overlap instead of serializing (Spark schedules
-    # concurrent jobs fine; this was the dominant sequential small-stage
-    # latency in the N→4N scaling profile).
-    orphan_doc = None
-    orphan_udf = None
-    broadcast_orphans = True
-    fut_hist = None
-    cur_hist = None
+    # discovery rows: (partition_id, [snapshot_hash,] n_rows) per
+    # partition with rows, collected once — before the scans on resume,
+    # from a driver thread overlapping them otherwise
+    pool = ThreadPoolExecutor(max_workers=4)
     try:
-        if fut_dups is None:
-            fut_dups = pool.submit(dups.count)
+        fut_snaps = None
+        if manifest is not None and manifest.current_version() > 0:
+            # resume: the pending list must exist before the scope does
+            snap_rows = partition_snapshots(docs).collect()
+            pending = sorted(manifest.pending_partitions(snap_rows))
+            manifest.acquire_leases(pending, run_id, now)
+            if not pending:
+                return _empty_result()
+            # Partition pruning: only unvalidated partitions are read
+            # further. Deliberately NOT cached: each stage projects a
+            # narrow column subset, so parquet re-scans (vectorized,
+            # column-pruned) beat a full-row block-manager cache —
+            # caching the spans column in object form benchmarked 2-10x
+            # slower at high core counts (GC + eviction churn).
+            scope = docs.filter(F.col("partition_id").isin(pending))
+        else:
+            # cold start or no manifest: every partition with rows is
+            # pending by construction, so scope ≡ docs (no isin() filter
+            # in any downstream plan) and nothing needs the discovery
+            # rows until verdict time. The collect runs on a driver
+            # thread beside the dup-key, histogram and wide scans; only
+            # a manifest needs the snapshot hashes (the commit records
+            # them), otherwise a narrow count scan suffices.
+            discovery = (
+                partition_snapshots(docs)
+                if manifest is not None
+                else docs.groupBy("partition_id").agg(
+                    F.count("*").alias("n_rows")
+                )
+            )
+            fut_snaps = pool.submit(discovery.collect)
+            scope = docs
+        _mark("discovery")
+
         # the drift-input histogram depends only on scope — collect it
-        # (and read the baseline) NOW so both overlap the dup scan and
-        # then the wide violations materialization
+        # (and read the baseline) NOW so both overlap the small scans
+        # and then the wide violations materialization
+        cur_hist = None
         if baseline_hist is not None:
             cur_hist = stats_ops.length_histogram(
                 scope,
@@ -498,108 +514,39 @@ def run_validation(
             fut_base = pool.submit(
                 drift_ops.collect_histogram, baseline_hist, ["kind"]
             )
-        if catalog is not None:
-            from ..operators.referential import (
-                BROADCAST_MAX_CATALOG_ROWS,
-                collect_catalog_keys,
-                orphan_refs_rowlocal_udf,
+        ref = (
+            ReferentialCheck(
+                spark, catalog, catalog_size_hint, cfg.salt_buckets
             )
-
-            n_cat = (
-                catalog_size_hint
-                if catalog_size_hint is not None
-                else catalog.count()
-            )
-            if n_cat <= BROADCAST_MAX_CATALOG_ROWS:
-                # broadcastable catalog → referential is a row-local
-                # membership check inside the wide scan: no exploded-
-                # refs pre-scan and no shuffle of the wide scope
-                orphan_udf = orphan_refs_rowlocal_udf(
-                    spark, collect_catalog_keys(catalog)
-                )
-            else:
-                # row_fingerprint keeps the aggregate per-PHYSICAL-row
-                # (dup doc_ids with differing spans stay separate),
-                # matching the row-local path's semantics exactly
-                orphans = orphan_refs(
-                    scope,
-                    catalog,
-                    spark,
-                    salt_buckets=cfg.salt_buckets,
-                    catalog_size_hint=n_cat,
-                    row_fingerprint=True,
-                )
-                orphan_doc = (
-                    orphans.groupBy("doc_id", "partition_id", "row_fp")
-                    .agg(
-                        F.sort_array(F.collect_set("media_ref")).alias(
-                            "orphan_refs"
-                        ),
-                        F.count("*").alias("n_orphans"),
-                    )
-                    .cache()
-                )
-                # materializing the cache also tells us whether this
-                # side is still broadcast-sized — at a high violation
-                # rate it is not, and a forced driver-serial broadcast
-                # would dominate the pass
-                broadcast_orphans = orphan_doc.count() <= BROADCAST_MAX_ROWS
-        # a pathological table could have more dup keys than fit a
-        # forced broadcast — same serialized-size ceiling as the
-        # catalog broadcast ((key, count) rows are catalog-key-sized);
-        # beyond it the attach degrades to a shuffle join rather than
-        # OOMing executors
-        from ..operators.referential import BROADCAST_MAX_CATALOG_ROWS as _BC
-
-        broadcast_dups = fut_dups.result() <= _BC
-        if fut_snaps is not None:
-            # resolve discovery (it has been running concurrently with
-            # the dup/hist scans) before committing to the wide scan —
-            # an empty table keeps the old no-op semantics
-            snap_rows = fut_snaps.result()
-            pending = sorted(r.partition_id for r in snap_rows)
-            if not pending:
-                return _empty_result()
-            if manifest is not None:
-                # cold-start manifest path: lease the (all-pending)
-                # partitions now that the concurrent snapshot scan has
-                # produced the list — still ahead of the wide-scan
-                # materialization, which is the part worth protecting
-                manifest.acquire_leases(pending, run_id, now)
-        _mark("small_scans")
-
-        # --- ONE wide scan → all violation rows, staged under run_id.
-        # Materialized HERE (write or cache+count) so the histogram job
-        # above genuinely overlaps it; downstream verdict/violation
-        # consumers then read the materialized result. ---
-        violations = _all_violations(
-            scope,
-            dups,
-            orphan_doc,
-            broadcast_orphans,
-            orphan_udf=orphan_udf,
-            broadcast_dups=broadcast_dups,
-            unique_key=cfg.unique_key,
+            if catalog is not None
+            else None
         )
-        capped = cfg.max_violation_exemplars is not None
-        if capped:
-            violations = _cap_violations(
-                violations, cfg.max_violation_exemplars
-            )
-        if violations_dir is not None:
-            staged = os.path.join(violations_dir, f"_staged_{run_id}")
-            violations.write.mode("overwrite").parquet(staged)
-            violations = spark.read.parquet(staged)
-        else:
-            violations = violations.cache()
-            pool.submit(violations.count).result()
-        if fut_hist is not None:
+        violations, grid = validate_scope(
+            scope,
+            docs,
+            ref,
+            cfg,
+            out_dir=(
+                os.path.join(violations_dir, f"_staged_{run_id}")
+                if violations_dir is not None
+                else None
+            ),
+            mark=_mark,
+        )
+        if cur_hist is not None:
             hist_rows = fut_hist.result()
             base_rows = fut_base.result()
             cur_hist = spark.createDataFrame(
                 [(*key, bucket, n) for key, bucket, n in hist_rows],
                 cur_hist.schema,
             )
+        if fut_snaps is not None:
+            snap_rows = fut_snaps.result()
+            pending = sorted(r.partition_id for r in snap_rows)
+            if not pending:
+                return _empty_result()
+            if manifest is not None:
+                manifest.acquire_leases(pending, run_id, now)
     finally:
         pool.shutdown(wait=False)
     _mark("violations")
@@ -612,27 +559,14 @@ def run_validation(
     # .count()/.show() run on local data ---
     snap_map = {r.partition_id: r for r in snap_rows}
     part_rows = verdict_rows(
-        _count_grid(violations, capped),
+        grid,
         [(pid, snap_map[pid].n_rows) for pid in pending],
         has_catalog=catalog is not None,
         cfg=cfg,
     )
-    if capped:
-        # the helper count columns have served the verdicts; the
-        # returned/written violations keep the VIOLATIONS_SCHEMA shape
-        violations = violations.drop(*_CAP_HELPER_COLS)
     rows = list(part_rows)
     if cur_hist is not None:
-        rows += drift_ops.drift_verdict_rows(
-            hist_rows,
-            base_rows,
-            keys=["kind"],
-            psi_threshold=cfg.drift.psi_threshold_global,
-            ks_threshold=cfg.drift.ks_threshold_global,
-            check_prefix="drift_len",
-            chi2_threshold=cfg.drift.chi2_threshold_global,
-            jsd_threshold=cfg.drift.jsd_threshold_global,
-        )
+        rows += drift_rows(hist_rows, base_rows, cfg, "drift_len")
 
     # --- optional declarative schema contract (structural tier is
     # driver-side metadata only; data tier is one narrow agg pass) ---
@@ -678,18 +612,9 @@ def run_validation(
             )
         manifest_version = manifest.commit_validated(records, run_id, now)
 
-    # drop the small-input caches: violations are already materialized,
-    # so the dup/orphan inputs are dead — in a long-lived session
-    # repeated passes would otherwise pin them in the block manager
-    # until eviction churn hits the caches that matter (worst case on
-    # eviction: the violations lineage recomputes from uncached inputs,
-    # which is correct, just slower)
-    dups.unpersist()
-    if orphan_doc is not None:
-        orphan_doc.unpersist()
-
     return ValidationResult(
-        verdicts, violations, pending, manifest_version, capped=capped,
+        verdicts, violations, pending, manifest_version,
+        capped=cfg.max_violation_exemplars is not None,
         current_hist=cur_hist,
     )
 
@@ -818,7 +743,7 @@ def preflight_estimate(
 
     # --- exact narrow tier: dup keys over the full key column ---
     n_total = docs.count()
-    dups = duplicate_keys(docs, cfg.unique_key, cfg.salt_buckets)
+    dups = duplicate_keys(docs, cfg.unique_key)
     n_dup_docs = int(
         dups.agg(F.coalesce(F.sum("dup_cnt"), F.lit(0))).first()[0]
     )
@@ -839,50 +764,29 @@ def preflight_estimate(
         sample = docs.filter(F.col("partition_id").isin(chosen))
     else:
         sample = docs.sample(fraction=fraction, seed=seed)
-    flags, _, _ = conformance_exprs()
+    flags = stats_ops.conformance_exprs()
     proj = [v.cast("long").alias(k) for k, v in flags.items()]
-    ref_joined = None
-    ref_in_agg = False
-    if catalog is not None:
-        from ..operators.referential import (
-            BROADCAST_MAX_CATALOG_ROWS,
-            collect_catalog_keys,
-            orphan_refs_rowlocal_udf,
-            span_refs_column,
+    ref = (
+        ReferentialCheck(spark, catalog, catalog_size_hint, cfg.salt_buckets)
+        if catalog is not None
+        else None
+    )
+    ref_in_agg = ref is not None and ref.udf is not None
+    if ref_in_agg:
+        proj.append(
+            (F.size(ref.udf(span_refs_column())) > 0)
+            .cast("long")
+            .alias("referential")
         )
-
-        n_cat = (
-            catalog_size_hint
-            if catalog_size_hint is not None
-            else catalog.count()
-        )
-        if n_cat <= BROADCAST_MAX_CATALOG_ROWS:
-            udf = orphan_refs_rowlocal_udf(spark, collect_catalog_keys(catalog))
-            proj.append(
-                (F.size(udf(span_refs_column())) > 0)
-                .cast("long")
-                .alias("referential")
-            )
-            ref_in_agg = True
-        else:
-            # catalog beyond broadcast: the salted anti-join runs on the
-            # SAMPLE's exploded refs only — fraction x the full cost
-            ref_joined = {
-                r.partition_id: r.n
-                for r in orphan_refs(
-                    sample,
-                    catalog,
-                    spark,
-                    salt_buckets=cfg.salt_buckets,
-                    catalog_size_hint=n_cat,
-                    row_fingerprint=True,
-                )
-                .select("doc_id", "partition_id", "row_fp")
-                .distinct()
-                .groupBy("partition_id")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
+    elif ref is not None:
+        # catalog beyond broadcast: the salted anti-join runs on the
+        # SAMPLE's exploded refs only — fraction x the full cost
+        ref_joined = {
+            r.partition_id: r["count"]
+            for r in ref.orphan_doc(sample).groupBy("partition_id")
+            .count()
+            .collect()
+        }
     check_cols = list(flags) + (["referential"] if ref_in_agg else [])
     # per-partition grid either way (metadata scale): rows mode sums it
     # globally, partitions mode needs the per-cluster counts for the CI

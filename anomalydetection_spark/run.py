@@ -641,11 +641,13 @@ def feedback_round(spark, args) -> dict:
 
 def stream_round(spark, args) -> dict:
     """--stream: drain the pending backlog of the --docs directory once
-    (availableNow) through the same per-batch validation the batch
-    pipeline runs; verdicts append under <out>/stream/verdicts with a
-    batch_id column. Exactly-once across invocations via the streaming
-    checkpoint: re-running after new files arrive validates ONLY the
-    new files — the streaming analog of the manifest resume path."""
+    (availableNow) through the batch pass's validation core, under the
+    same --config (validation thresholds and contract) and
+    --max-violation-exemplars; verdicts append under
+    <out>/stream/verdicts with a batch_id column. Exactly-once across
+    invocations via the streaming checkpoint: re-running after new
+    files arrive validates ONLY the new files — the streaming analog of
+    the manifest resume path."""
     from .sources.tables import read_table
     from .streaming.incremental import stream_validate
 
@@ -655,19 +657,7 @@ def stream_round(spark, args) -> dict:
         if args.baseline_hist
         else None
     )
-    # the per-batch drift histogram must bin exactly like the stored
-    # baseline — honor a --config drift section the same way the batch
-    # pass does
-    from .config import DEFAULT_CONFIG
-
-    cfg = DEFAULT_CONFIG
-    if args.config:
-        from .config import config_from_dict
-
-        with open(args.config) as f:
-            file_cfg = json.load(f)
-        if file_cfg.get("validation"):
-            cfg = config_from_dict(file_cfg["validation"])
+    cfg, contract = load_config(args)
     out_dir = os.path.join(args.out, "stream")
     ckpt = args.stream_checkpoint or os.path.join(
         args.out, "stream_checkpoint"
@@ -681,9 +671,8 @@ def stream_round(spark, args) -> dict:
         catalog=catalog,
         baseline_hist=baseline,
         emit_violations=args.stream_violations,
-        max_violation_exemplars=args.max_violation_exemplars,
-        histogram_bins=cfg.drift.histogram_bins,
-        histogram_bin_width=cfg.drift.histogram_bin_width,
+        cfg=cfg,
+        contract=contract,
     )
     q.awaitTermination()
     verdicts_dir = os.path.join(out_dir, "verdicts")
@@ -869,10 +858,37 @@ def snapshot_diff_round(spark, args, run_id: str) -> dict:
     }
 
 
+def load_config(args):
+    """(ValidationConfig, Contract | None) from ``--config`` — shared by
+    the batch and the stream round — with ``--max-violation-exemplars``
+    applied on top."""
+    import dataclasses
+
+    from .config import DEFAULT_CONFIG, config_from_dict
+    from .operators.contract import contract_from_dict
+
+    cfg = DEFAULT_CONFIG
+    contract = None
+    if args.config:
+        with open(args.config) as f:
+            file_cfg = json.load(f)
+        extra = set(file_cfg) - {"validation", "contract"}
+        if extra:
+            raise SystemExit(f"unknown --config sections: {sorted(extra)}")
+        if file_cfg.get("validation"):
+            cfg = config_from_dict(file_cfg["validation"])
+        if file_cfg.get("contract"):
+            contract = contract_from_dict(file_cfg["contract"])
+    if args.max_violation_exemplars is not None:
+        cfg = dataclasses.replace(
+            cfg, max_violation_exemplars=args.max_violation_exemplars
+        )
+    return cfg, contract
+
+
 def one_round(spark, args, run_id: str) -> dict:
     from pyspark.sql import functions as F
 
-    from .config import DEFAULT_CONFIG
     from .plans.pipeline import run_validation
     from .sources.tables import read_table
 
@@ -889,27 +905,7 @@ def one_round(spark, args, run_id: str) -> dict:
     ):
         baseline = spark.read.parquet(baseline_dir)
     t0 = time.time()
-    cfg = DEFAULT_CONFIG
-    contract = None
-    if args.config:
-        from .config import config_from_dict
-        from .operators.contract import contract_from_dict
-
-        with open(args.config) as f:
-            file_cfg = json.load(f)
-        extra = set(file_cfg) - {"validation", "contract"}
-        if extra:
-            raise SystemExit(f"unknown --config sections: {sorted(extra)}")
-        if file_cfg.get("validation"):
-            cfg = config_from_dict(file_cfg["validation"])
-        if file_cfg.get("contract"):
-            contract = contract_from_dict(file_cfg["contract"])
-    if args.max_violation_exemplars is not None:
-        import dataclasses
-
-        cfg = dataclasses.replace(
-            cfg, max_violation_exemplars=args.max_violation_exemplars
-        )
+    cfg, contract = load_config(args)
     res = run_validation(
         spark,
         docs,

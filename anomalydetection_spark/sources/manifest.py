@@ -366,13 +366,3 @@ class Manifest:
                 " record_run_id string"
             ),
         )
-
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        from ..schema import MANIFEST_SCHEMA
-
-        fields = [f.name for f in MANIFEST_SCHEMA.fields]
-        rows = [
-            tuple(rec.get(name) for name in fields)
-            for rec in self.load().values()
-        ]
-        return spark.createDataFrame(rows, schema=MANIFEST_SCHEMA)

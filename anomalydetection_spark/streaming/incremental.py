@@ -11,26 +11,30 @@ task_scheduler.py:11-25) map directly onto Structured Streaming:
   batch-rounds shape the engine's manifest loop uses,
 - ``processingTime`` trigger = the 60 s poll cadence.
 
-Each micro-batch runs the same per-partition constraint checks as the
-batch pipeline (foreachBatch → plans.pipeline operators), appending
-verdicts + violations parquet. Cross-batch state (global uniqueness,
-drift history) stays in the manifest/violations tables — a micro-batch
-only asserts within-batch and against broadcast reference data, which
-is the right split at 10^12-doc scale (global re-checks run as periodic
-batch passes over the violations/metrics tables).
+Each micro-batch runs the batch pipeline's validation core under the
+same ``ValidationConfig`` (foreachBatch → plans/pipeline.py::
+validate_scope), writing verdicts + violations parquet per batch id.
+Cross-batch state (global uniqueness, drift history) stays in the
+manifest/violations tables — a micro-batch only asserts within-batch
+and against broadcast reference data, which is the right split at
+10^12-doc scale (global re-checks run as periodic batch passes over the
+violations/metrics tables).
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import DEFAULT_CONFIG, ValidationConfig
 from ..operators import stats as stats_ops
-from ..operators.referential import orphan_refs
-from ..operators.uniqueness import duplicate_keys
+from ..operators.drift import collect_histogram
+from ..operators.referential import ReferentialCheck
+from ..plans.pipeline import drift_rows, validate_scope, verdict_rows
 from ..schema import DOCUMENTS_SCHEMA, VERDICTS_DDL
 
 
@@ -49,129 +53,6 @@ def read_documents_stream(
     )
 
 
-def _batch_verdicts(
-    batch: DataFrame,
-    catalog: DataFrame | None,
-    catalog_size_hint: int | None = None,
-    bloom: tuple | None = None,
-    baseline_hist: DataFrame | None = None,
-    orphan_udf=None,
-    max_violation_exemplars: int | None = None,
-    violations_out: str | None = None,
-    psi_threshold: float = 0.25,
-    ks_threshold: float = 0.2,
-    chi2_threshold: float | None = None,
-    jsd_threshold: float | None = None,
-    histogram_bins: int = 64,
-    histogram_bin_width: int = 8,
-) -> DataFrame:
-    """Micro-batch validation via the SAME one-wide-scan violation
-    machinery as the batch pipeline (plans/pipeline.py::_all_violations):
-    conformance flags row-local, uniqueness via broadcast dup-key join,
-    referential row-local (broadcastable catalog, ``orphan_udf``) or
-    salted-join aggregate (big catalog, optional Bloom prefilter) —
-    replacing the earlier 3-separate-aggregation-passes shape.
-
-    ``violations_out``: optional per-batch directory; exact violation
-    rows (optionally exemplar-capped) are written there with
-    mode=overwrite so a replayed micro-batch is idempotent, and verdict
-    counts are derived from the materialized output instead of
-    re-running the wide scan."""
-    from ..operators.drift import collect_histogram, drift_verdict_rows
-    from ..plans.pipeline import (
-        _CAP_HELPER_COLS,
-        _all_violations,
-        _cap_violations,
-        _count_grid,
-        verdict_rows,
-    )
-
-    spark = batch.sparkSession
-    dups = duplicate_keys(batch, "doc_id")
-    orphan_doc = None
-    if catalog is not None and orphan_udf is None:
-        # big catalog → salted anti-join pre-scan (Bloom prefilter and
-        # size hint measured/built once at stream setup: a micro-batch
-        # must not pay a catalog.count() or a bloom rebuild per
-        # trigger); row_fingerprint keeps the aggregate per-physical-row
-        orphans = orphan_refs(
-            batch,
-            catalog,
-            spark,
-            use_bloom=bloom is not None,
-            catalog_size_hint=catalog_size_hint,
-            bloom=bloom,
-            row_fingerprint=True,
-        )
-        orphan_doc = orphans.groupBy("doc_id", "partition_id", "row_fp").agg(
-            F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
-            F.count("*").alias("n_orphans"),
-        )
-    violations = _all_violations(batch, dups, orphan_doc, orphan_udf=orphan_udf)
-    capped = max_violation_exemplars is not None
-    if capped:
-        # capped stream is bounded (≤K rows per check × partition) —
-        # cache it, derive exact verdict counts from the stamped window
-        # aggregates, then write the exemplars in VIOLATIONS_SCHEMA
-        # shape (helper columns dropped)
-        violations = _cap_violations(
-            violations, max_violation_exemplars
-        ).cache()
-        if violations_out is not None:
-            # deterministic per-batch path + overwrite = idempotent on
-            # micro-batch replay (foreachBatch may re-run a batch id
-            # after failure; append would double the rows)
-            violations.drop(*_CAP_HELPER_COLS).write.mode("overwrite").parquet(
-                violations_out
-            )
-    elif violations_out is not None:
-        violations.write.mode("overwrite").parquet(violations_out)
-        violations = spark.read.parquet(violations_out)
-    # verdict cardinality is partitions × checks — metadata scale: the
-    # count grid and the batch totals are collected and the verdict rows
-    # built on the driver by the batch pass's own kernel
-    totals = batch.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
-    rows = verdict_rows(
-        _count_grid(violations, capped),
-        sorted(tuple(r) for r in totals.collect()),
-        has_catalog=catalog is not None,
-    )
-    if capped:
-        violations.unpersist()
-    # a micro-batch only asserts WITHIN-batch uniqueness (cross-batch
-    # dup detection is the periodic batch pass over the manifest) —
-    # keep the check name honest about that scope
-    rows = [
-        ("uniqueness_batch", *r[1:]) if r[0] == "uniqueness" else r
-        for r in rows
-    ]
-    if baseline_hist is not None:
-        # distribution drift per micro-batch against the STORED
-        # baseline: the batch reduces to a bounded (kind x bucket)
-        # histogram before it is collected, so the per-trigger cost is
-        # a map-side partial agg plus driver math on histogram-sized
-        # rows regardless of batch size.
-        # The batch histogram MUST use the same binning the stored
-        # baseline was built with — a 64-bin batch against a 128-bin
-        # baseline zero-fills half the buckets and fires phantom drift
-        rows += drift_verdict_rows(
-            collect_histogram(
-                stats_ops.length_histogram(
-                    batch, bins=histogram_bins, bin_width=histogram_bin_width
-                ),
-                ["kind"],
-            ),
-            collect_histogram(baseline_hist, ["kind"]),
-            keys=["kind"],
-            psi_threshold=psi_threshold,
-            ks_threshold=ks_threshold,
-            check_prefix="drift_len_batch",
-            chi2_threshold=chi2_threshold,
-            jsd_threshold=jsd_threshold,
-        )
-    return spark.createDataFrame(rows, VERDICTS_DDL)
-
-
 def stream_validate(
     spark: SparkSession,
     input_dir: str,
@@ -182,9 +63,7 @@ def stream_validate(
     processing_time: str = "60 seconds",
     baseline_hist: DataFrame | None = None,
     emit_violations: bool = False,
-    max_violation_exemplars: int | None = None,
-    histogram_bins: int = 64,
-    histogram_bin_width: int = 8,
+    cfg: ValidationConfig = DEFAULT_CONFIG,
     contract=None,
     schema: T.StructType | None = None,
 ):
@@ -193,13 +72,21 @@ def stream_validate(
     Returns the StreamingQuery; with ``available_now`` it drains the
     backlog once and stops (call ``awaitTermination()``).
 
-    ``emit_violations``: also write exact violation rows per micro-batch
+    Each micro-batch runs the batch pass's validation core
+    (plans/pipeline.py::validate_scope), the batch being both scope and
+    key scope, under the same ``cfg`` as a batch pass. A micro-batch
+    only asserts WITHIN-batch uniqueness (cross-batch dup detection is
+    the periodic batch pass over the manifest), so that check is named
+    ``uniqueness_batch``. The referential check is built once for the
+    stream's lifetime: no micro-batch re-scans the catalog.
+
+    ``emit_violations``: also write the violation rows per micro-batch
     under ``output_dir/violations/batch_id=N`` (overwrite per batch id →
-    idempotent on replay; the whole tree reads back as one partitioned
-    table). ``max_violation_exemplars``: cap the stored rows at K per
-    (check, partition) per batch — verdict counts stay exact via the
-    window aggregates stamped by the capping pass (same trade-off as the
-    batch pipeline's ``ValidationConfig.max_violation_exemplars``).
+    idempotent on replay; the tree reads back as one partitioned
+    table), capped per ``cfg.max_violation_exemplars``.
+    ``baseline_hist``: a stored length histogram, collected once and
+    binned like ``cfg.drift``; every micro-batch emits
+    ``drift_len_batch`` verdict rows against it.
 
     ``contract``: a :class:`~..operators.contract.Contract` — judged per
     micro-batch via the SAME two-tier ``contract_verdicts`` as batch
@@ -213,64 +100,75 @@ def stream_validate(
     ``schema``: optional stream schema override (see
     :func:`read_documents_stream`) for document tables carrying extra
     payload columns a contract wants to judge."""
-    from ..functions.bloom import build_bloom
-    from ..operators.referential import (
-        BLOOM_MIN_CATALOG_ROWS,
-        BROADCAST_MAX_CATALOG_ROWS,
-        collect_catalog_keys,
-        orphan_refs_rowlocal_udf,
-    )
-
     stream = read_documents_stream(spark, input_dir, schema=schema)
     verdicts_dir = os.path.join(output_dir, "verdicts")
     violations_dir = os.path.join(output_dir, "violations")
     contract_dir = os.path.join(output_dir, "contract_verdicts")
     if contract is not None:
         from ..operators.contract import contract_verdicts
-    catalog_n = catalog.count() if catalog is not None else None
-    # referential machinery built ONCE for the stream's lifetime (a
-    # micro-batch must never re-scan the catalog):
-    # * broadcastable catalog → key set collected + broadcast once, the
-    #   check is a row-local Arrow membership UDF inside the wide scan
-    # * big catalog → Bloom prefilter built once; the per-batch path is
-    #   the salted anti-join with the bloom as a pre-filter
-    orphan_udf = None
-    bloom = None
-    if catalog is not None:
-        if catalog_n <= BROADCAST_MAX_CATALOG_ROWS:
-            orphan_udf = orphan_refs_rowlocal_udf(
-                spark, collect_catalog_keys(catalog)
-            )
-        elif catalog_n > BLOOM_MIN_CATALOG_ROWS:
-            bloom = build_bloom(catalog, "media_ref", catalog_n)
+    ref = (
+        ReferentialCheck(spark, catalog, salt_buckets=cfg.salt_buckets).build()
+        if catalog is not None
+        else None
+    )
+    base_rows = (
+        collect_histogram(baseline_hist, ["kind"])
+        if baseline_hist is not None
+        else None
+    )
 
     def process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        v = _batch_verdicts(
-            batch,
-            catalog,
-            catalog_n,
-            bloom,
-            baseline_hist,
-            orphan_udf=orphan_udf,
-            max_violation_exemplars=max_violation_exemplars,
-            violations_out=(
-                os.path.join(violations_dir, f"batch_id={batch_id}")
-                if emit_violations
-                else None
-            ),
-            histogram_bins=histogram_bins,
-            histogram_bin_width=histogram_bin_width,
-        )
+        totals = batch.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
+        # the per-partition totals scan overlaps the validation core's scans
+        with ThreadPoolExecutor(max_workers=1) as helper:
+            fut_totals = helper.submit(totals.collect)
+            violations, grid = validate_scope(
+                batch,
+                batch,
+                ref,
+                cfg,
+                out_dir=(
+                    os.path.join(violations_dir, f"batch_id={batch_id}")
+                    if emit_violations
+                    else None
+                ),
+            )
+        violations.unpersist()
+        rows = [
+            ("uniqueness_batch", *r[1:]) if r[0] == "uniqueness" else r
+            for r in verdict_rows(
+                grid,
+                sorted(tuple(r) for r in fut_totals.result()),
+                has_catalog=ref is not None,
+                cfg=cfg,
+            )
+        ]
+        if base_rows is not None:
+            # the batch reduces to a bounded (kind x bucket) histogram
+            # before it is collected: per-trigger drift cost is a
+            # map-side partial agg plus driver math on histogram rows
+            hist = stats_ops.length_histogram(
+                batch,
+                bins=cfg.drift.histogram_bins,
+                bin_width=cfg.drift.histogram_bin_width,
+            )
+            rows += drift_rows(
+                collect_histogram(hist, ["kind"]),
+                base_rows,
+                cfg,
+                "drift_len_batch",
+            )
         # per-batch_id dir + overwrite = idempotent on micro-batch
-        # replay, same as the violations sink below and the windowed
-        # drift sink: foreachBatch may re-run a batch id after a crash
+        # replay, same as the violations sink and the windowed drift
+        # sink: foreachBatch may re-run a batch id after a crash
         # between the write and the checkpoint commit, and append to a
         # flat dir would double that batch's verdict rows. batch_id is
         # reconstructed from the partition path on read. The verdict
         # rows are partitions × checks, so one file per batch.
-        v.coalesce(1).write.mode("overwrite").parquet(
+        verdicts = batch.sparkSession.createDataFrame(rows, VERDICTS_DDL)
+        verdicts.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(verdicts_dir, f"batch_id={batch_id}")
         )
         if contract is not None:

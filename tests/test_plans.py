@@ -8,6 +8,8 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
+
 from anomalydetection_spark.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -70,7 +72,7 @@ def test_rowlocal_violations_scan_never_shuffles(spark, docs, catalog):
     from anomalydetection_spark.operators.uniqueness import duplicate_keys
     from anomalydetection_spark.plans.pipeline import _all_violations
 
-    dups = duplicate_keys(docs, "doc_id", 8)
+    dups = duplicate_keys(docs, "doc_id")
     udf = orphan_refs_rowlocal_udf(spark, collect_catalog_keys(catalog))
     viol = _all_violations(docs, dups, None, orphan_udf=udf)
     buf = io.StringIO()
@@ -124,7 +126,7 @@ def test_capped_violations_single_extra_exchange(spark, docs, catalog):
         _cap_violations,
     )
 
-    dups = duplicate_keys(docs, "doc_id", 8)
+    dups = duplicate_keys(docs, "doc_id")
     udf = orphan_refs_rowlocal_udf(spark, collect_catalog_keys(catalog))
     viol = _cap_violations(
         _all_violations(docs, dups, None, orphan_udf=udf), 3
@@ -480,4 +482,45 @@ def test_validation_pass_scan_budget(spark, tmp_path):
     assert res3.validated_partitions == [2, 5]
     assert n_jobs == RESUME_PASS_JOBS, (
         f"resumed pass ran {n_jobs} Spark jobs (pinned {RESUME_PASS_JOBS})"
+    )
+
+
+# Spark jobs of one stream micro-batch over the fixture docs in a single
+# trigger, stream setup (catalog size, key collect) included, per
+# referential shape: the row-local UDF, and the salted anti-join of a
+# catalog beyond the broadcast cap. The micro-batch runs the batch
+# pass's size guards: the dup keys (and, salted, the orphan aggregate)
+# are cached and counted before the wide write decides whether to
+# broadcast them — without the guards the same micro-batch ran 14 and
+# 17 jobs.
+STREAM_BATCH_JOBS = {"udf": 17, "salted": 23}
+
+
+@pytest.mark.parametrize("shape", ["udf", "salted"])
+def test_stream_microbatch_job_count(spark, docs, catalog, tmp_path,
+                                     monkeypatch, shape):
+    """A micro-batch runs the batch pass's validation core: its Spark
+    job count is pinned like the resumed pass's, so per-trigger work
+    that drifts back in (a catalog re-scan, a second wide scan) fails
+    here."""
+    from anomalydetection_spark.streaming.incremental import stream_validate
+
+    if shape == "salted":
+        import anomalydetection_spark.operators.referential as R
+
+        monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", 1000)
+    inp = str(tmp_path / "in")
+    docs.coalesce(1).write.parquet(inp)
+    before = _marker_job_id(spark)
+    q = stream_validate(
+        spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        catalog=catalog, emit_violations=True,
+    )
+    q.awaitTermination()
+    n_jobs = _marker_job_id(spark) - before - 1
+    spark.catalog.clearCache()
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 1
+    assert n_jobs == STREAM_BATCH_JOBS[shape], (
+        f"{shape} micro-batch ran {n_jobs} Spark jobs "
+        f"(pinned {STREAM_BATCH_JOBS[shape]})"
     )

@@ -8,11 +8,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from anomalydetection_spark.fixtures import MISSING_REF_MOD
-from anomalydetection_spark.operators.referential import (
-    orphan_refs,
-    referential_verdicts,
-    referential_violations,
-)
+from anomalydetection_spark.operators.referential import orphan_refs
+from anomalydetection_spark.plans.pipeline import run_validation
 
 
 def _expected_orphan_pairs(docs, catalog):
@@ -70,7 +67,9 @@ def test_violation_rows_preserve_spans(spark, docs, catalog):
     """Every violation row's (doc_id, spans) pair exists verbatim in the
     source table (multiset containment — planted duplicate doc_ids make
     a plain re-join a cross product, so compare serialized pairs)."""
-    v = referential_violations(docs, catalog, spark)
+    v = run_validation(spark, docs, catalog=catalog).violations.filter(
+        F.col("check") == "referential"
+    )
     jkey = F.coalesce(F.to_json("spans"), F.lit("<null>"))
     viol_pairs = v.select("doc_id", jkey.alias("j"))
     src_pairs = docs.select("doc_id", jkey.alias("j"))
@@ -79,8 +78,14 @@ def test_violation_rows_preserve_spans(spark, docs, catalog):
 
 
 def test_verdicts_fail_only_partitions_with_orphans(spark, docs, catalog):
-    verd = referential_verdicts(docs, catalog, spark).collect()
-    failed = {r.partition_id for r in verd if r.verdict == "fail"}
+    verd = run_validation(spark, docs, catalog=catalog).verdicts.collect()
+    failed = {
+        r.partition_id
+        for r in verd
+        if r.check == "referential"
+        and r.partition_id is not None
+        and r.verdict == "fail"
+    }
     orphan_parts = {
         r.partition_id
         for r in orphan_refs(docs, catalog, spark)
@@ -139,3 +144,32 @@ def test_complete_catalog_passes(spark, docs):
         .distinct()
     )
     assert orphan_refs(docs, full, spark).count() == 0
+
+
+def test_referential_check_builds_bloom_once(spark, docs, catalog,
+                                             monkeypatch):
+    """Beyond the broadcast cap the shared referential check is the
+    salted anti-join, and beyond the Bloom threshold its prefilter is
+    built ONCE per check however many scopes it probes; its per-doc
+    orphan aggregate flags exactly the docs the plain anti-join does."""
+    import anomalydetection_spark.operators.referential as R
+
+    builds = []
+    real_build = R.build_bloom
+    monkeypatch.setattr(
+        R, "build_bloom",
+        lambda *a, **k: builds.append(1) or real_build(*a, **k),
+    )
+    monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", 100)
+    monkeypatch.setattr(R, "BLOOM_MIN_CATALOG_ROWS", 100)
+    ref = R.ReferentialCheck(spark, catalog).build()
+    assert ref.udf is None and ref.bloom is not None
+    got = {r.doc_id for r in ref.orphan_doc(docs).collect()}
+    ref.orphan_doc(docs.filter(F.col("partition_id") < 4)).count()
+    assert len(builds) == 1
+    want = {
+        r.doc_id
+        for r in orphan_refs(docs, catalog, spark, use_bloom=False).collect()
+    }
+    assert got == want
+

@@ -429,6 +429,43 @@ def test_stream_flag_drains_and_resumes(spark, docs, catalog, tmp_path):
     assert s3["n_verdict_rows"] > s1["n_verdict_rows"]
 
 
+def test_stream_config_applies_to_micro_batches(spark, docs, tmp_path):
+    """--stream --config: the micro-batches judge under the file's
+    validation config, not the defaults. A backlog with ~10% null-spans
+    docs fails the default 1% null gate and passes max_null_rate=1.0;
+    a config naming a field the config no longer has fails loudly."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from anomalydetection_spark.run import stream_round
+
+    inp = str(tmp_path / "stream_in")
+    docs.limit(500).withColumn(
+        "spans",
+        F.when(F.abs(F.hash("doc_id")) % 10 == 0, F.lit(None)).otherwise(
+            F.col("spans")
+        ),
+    ).coalesce(1).write.parquet(inp)
+
+    def null_verdicts(name, config=None):
+        out = str(tmp_path / name)
+        argv = ["--docs", inp, "--out", out, "--stream"]
+        if config is not None:
+            cfg_path = str(tmp_path / f"{name}.json")
+            with open(cfg_path, "w") as f:
+                json.dump({"validation": config}, f)
+            argv += ["--config", cfg_path]
+        stream_round(spark, parse_args(argv))
+        v = spark.read.parquet(os.path.join(out, "stream", "verdicts"))
+        return {r.verdict for r in v.filter(F.col("check") == "null_spans")
+                .collect()}
+
+    assert "fail" in null_verdicts("default")
+    assert null_verdicts("lax", {"max_null_rate": 1.0}) == {"pass"}
+    with _pytest.raises(ValueError, match="unknown ValidationConfig"):
+        null_verdicts("stale", {"truncate_chars": 100})
+
+
 def test_diff_last_flag_plumbing(spark, docs_path, catalog, tmp_path):
     """--diff-last: second round over a changed snapshot reports the
     verdict diff vs the previous manifest version (semantics unit-

@@ -1,49 +1,68 @@
-"""Column-stats profiler: conformance flags match the planted sets,
-histograms conserve mass, HLL distinct counts are within sketch error
-(SURVEY.md §5 item 1)."""
+"""Conformance and span statistics: the pass's conformance flags match
+the planted sets, histograms conserve mass, HLL distinct counts are
+within sketch error (SURVEY.md §5 item 1)."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import functions as F
 
+from anomalydetection_spark.config import DEFAULT_CONFIG
 from anomalydetection_spark.operators import stats as S
+from anomalydetection_spark.plans.pipeline import run_validation
+
+
+def _conformance_ids(violations, name):
+    """doc_ids whose conformance violation row names check ``name``."""
+    return {
+        r.doc_id
+        for r in violations.filter(
+            (F.col("check") == "conformance")
+            & F.col("detail").contains(name)
+        ).collect()
+    }
 
 
 def test_conformance_flags_exact(docs, expected):
-    c = S.doc_conformance(docs)
-    assert {
-        r.doc_id for r in c.filter("null_spans").collect()
-    } == expected["null_spans"]
-    assert {
-        r.doc_id for r in c.filter("empty_spans").collect()
-    } == expected["empty_spans"]
-    assert {
-        r.doc_id for r in c.filter("nonmonotone_offsets").collect()
-    } == expected["nonmono"]
-    assert {
-        r.doc_id for r in c.filter("n_incoherent > 0").collect()
-    } == expected["incoherent"]
+    """The pass's conformance rows flag exactly the planted docs."""
+    v = run_validation(docs.sparkSession, docs).violations
+    assert _conformance_ids(v, "null_spans") == expected["null_spans"]
+    assert _conformance_ids(v, "empty_spans") == expected["empty_spans"]
+    assert _conformance_ids(v, "offset_monotonicity") == expected["nonmono"]
+    assert _conformance_ids(v, "span_coherence") == expected["incoherent"]
 
 
 def test_partition_stats_sum_to_table(docs):
-    ps = S.partition_stats(docs)
-    tot = ps.agg(
-        F.sum("n_rows").alias("r"), F.sum("n_spans").alias("s")
-    ).first()
-    assert tot.r == docs.count()
-    exact_spans = docs.select(
-        F.sum(F.coalesce(F.size("spans"), F.lit(0)))
-    ).first()[0]
-    assert tot.s == exact_spans
+    """Per-partition verdict rows cover every row exactly once: for
+    each check, n_rows summed over partitions is the table count, and
+    the table-level rollup row carries the same total."""
+    verdicts = run_validation(docs.sparkSession, docs).verdicts.collect()
+    n = docs.count()
+    for check in ("uniqueness", *S.CONF_CHECKS):
+        rows = [r for r in verdicts if r.check == check]
+        assert sum(r.n_rows for r in rows if r.partition_id is not None) == n
+        (table,) = [r for r in rows if r.partition_id is None]
+        assert table.n_rows == n
 
 
 def test_hll_vs_exact_distinct(docs):
-    ps = S.partition_stats(docs)
-    merged = ps.agg(
-        F.expr("hll_sketch_estimate(hll_union_agg(doc_id_hll))").alias("est")
-    ).first()
+    """Per-partition doc_id HLL partials merge to within sketch error of
+    the exact distinct count (planted duplicate ids included)."""
+    from anomalydetection_spark.operators.incremental_profile import (
+        merge_partials,
+        profile_partials,
+    )
+
+    merged = {
+        r["column"]: r["n_distinct"]
+        for r in merge_partials(
+            profile_partials(docs.select("doc_id", "partition_id"),
+                             "partition_id")
+        ).collect()
+    }
     exact = docs.select(F.countDistinct("doc_id")).first()[0]
-    assert abs(merged.est - exact) / exact < 0.05
+    assert abs(merged["doc_id"] - exact) / exact < 0.05
 
 
 def test_length_histogram_mass(docs):
@@ -57,18 +76,27 @@ def test_length_histogram_mass(docs):
 
 
 def test_kind_histogram_covers_all_kinds(docs):
-    kinds = {r.kind for r in S.kind_histogram(docs).collect()}
+    """The pass's own length histogram (returned for baseline rotation)
+    covers every span kind, the null kind included."""
+    base = S.length_histogram(docs)
+    res = run_validation(docs.sparkSession, docs, baseline_hist=base)
+    kinds = {r.kind for r in res.current_hist.collect()}
     assert {"text", "image", "audio", "table", "__null__"} <= kinds
 
 
 def test_conformance_verdicts_thresholds(docs):
-    # planted rates ≈0.15-0.5% — a 1% gate passes, a 0.01% gate fails
-    lax = S.conformance_verdicts(docs, max_null_rate=0.5, max_type_error_rate=0.5)
-    assert all(r.verdict == "pass" for r in lax.collect())
-    strict = S.conformance_verdicts(
-        docs, max_null_rate=1e-6, max_type_error_rate=1e-6
-    )
-    assert any(r.verdict == "fail" for r in strict.collect())
+    # planted rates ≈0.15-0.5% — a 50% gate passes, a 0.0001% gate fails
+    spark = docs.sparkSession
+    lax = run_validation(spark, docs, cfg=replace(
+        DEFAULT_CONFIG, max_null_rate=0.5, max_type_error_rate=0.5))
+    strict = run_validation(spark, docs, cfg=replace(
+        DEFAULT_CONFIG, max_null_rate=1e-6, max_type_error_rate=1e-6))
+
+    def conf(res):
+        return [r for r in res.verdicts.collect() if r.check in S.CONF_CHECKS]
+
+    assert all(r.verdict == "pass" for r in conf(lax))
+    assert any(r.verdict == "fail" for r in conf(strict))
 
 
 def test_conformance_violations_detail(docs, expected):
@@ -77,9 +105,30 @@ def test_conformance_violations_detail(docs, expected):
     for d in expected["null_spans"]:
         assert "null_spans" in got[d]
     for d in expected["nonmono"]:
-        assert "nonmonotone_offsets" in got[d]
+        assert "offset_monotonicity" in got[d]
     for d in expected["incoherent"]:
         assert "span_coherence" in got[d]
+
+
+def test_conformance_names_are_conf_checks(docs):
+    """One conformance definition: the detail names of
+    ``conformance_violations`` and of the pass's violation rows, and the
+    pass's conformance verdict checks, are all exactly CONF_CHECKS."""
+
+    def names(v):
+        return {
+            name
+            for r in v.select("detail").distinct().collect()
+            for name in r.detail.split(",")
+        }
+
+    res = run_validation(docs.sparkSession, docs)
+    assert names(S.conformance_violations(docs)) == set(S.CONF_CHECKS)
+    assert names(
+        res.violations.filter(F.col("check") == "conformance")
+    ) == set(S.CONF_CHECKS)
+    verdict_checks = {r.check for r in res.verdicts.collect()}
+    assert verdict_checks - {"uniqueness"} == set(S.CONF_CHECKS)
 
 
 def test_profile_table_generic(spark):

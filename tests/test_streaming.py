@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import glob
 import os
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 
+from anomalydetection_spark.config import DEFAULT_CONFIG
 from anomalydetection_spark.streaming.incremental import (
     stream_validate,
     windowed_span_counts,
@@ -166,7 +168,7 @@ def test_stream_drift_verdicts_against_baseline(spark, docs, catalog, tmp_path):
 
 def test_stream_violations_sink_and_exemplar_cap(spark, docs, catalog, tmp_path):
     """Micro-batches emit exact violation rows under
-    violations/batch_id=N; with max_violation_exemplars=K the stored
+    violations/batch_id=N; with cfg.max_violation_exemplars=K the stored
     rows are capped per (check, partition, batch) while the verdict
     counts stay EXACT (equal to the uncapped run's)."""
     inp = str(tmp_path / "in")
@@ -191,7 +193,8 @@ def test_stream_violations_sink_and_exemplar_cap(spark, docs, catalog, tmp_path)
     k = 2
     stream_validate(
         spark, inp, out_cap, str(tmp_path / "ck2"),
-        catalog=catalog, emit_violations=True, max_violation_exemplars=k,
+        catalog=catalog, emit_violations=True,
+        cfg=replace(DEFAULT_CONFIG, max_violation_exemplars=k),
     ).awaitTermination()
     capped = spark.read.parquet(os.path.join(out_cap, "violations"))
     per_group = capped.groupBy("check", "partition_id", "batch_id").count()

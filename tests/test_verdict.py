@@ -1,6 +1,5 @@
-"""Verdict assembly: threshold filter (F11), min/max normalization
-(A5), greedy similarity grouping (A11), top-k report (A12, F7
-truncation) — reference semantics per SURVEY.md §2.6."""
+"""Verdict assembly: greedy similarity grouping (A11) and the two-level
+rollup — reference semantics per SURVEY.md §2.6."""
 
 from __future__ import annotations
 
@@ -8,33 +7,8 @@ from pyspark.sql import functions as F
 
 from anomalydetection_spark.operators.verdict import (
     global_verdict,
-    normalize_scores,
     similarity_groups,
-    threshold_violations,
-    top_k_report,
 )
-
-
-def test_threshold_filter(spark):
-    df = spark.createDataFrame(
-        [("a", -0.1), ("b", -0.04), ("c", 0.2)], "id string, score double"
-    )
-    out = threshold_violations(df, threshold=-0.04)
-    assert {r.id for r in out.collect()} == {"a"}  # strictly below
-
-
-def test_normalize_scores_formula(spark):
-    df = spark.createDataFrame(
-        [("a", 0.0), ("b", 5.0), ("c", 10.0)], "id string, score double"
-    )
-    got = {r.id: r.anomaly_pct for r in normalize_scores(df).collect()}
-    assert got == {"a": 100.0, "b": 50.0, "c": 0.0}
-
-
-def test_normalize_constant_scores(spark):
-    df = spark.createDataFrame([("a", 3.0), ("b", 3.0)], "id string, score double")
-    got = {r.anomaly_pct for r in normalize_scores(df).collect()}
-    assert got == {0.0}
 
 
 def test_similarity_groups_merges_near_duplicates(spark):
@@ -90,18 +64,6 @@ def test_similarity_groups_deterministic(spark, docs):
     a = sorted(map(tuple, similarity_groups(d, "text", ["part"]).collect()))
     b = sorted(map(tuple, similarity_groups(d, "text", ["part"]).collect()))
     assert a == b
-
-
-def test_top_k_truncates_at_100_chars(spark):
-    long_text = "x" * 150
-    df = spark.createDataFrame(
-        [("g", long_text, 1.0, 1), ("g", "short", 2.0, 1)],
-        "group_key string, exemplar string, best_score double, n_members long",
-    )
-    out = top_k_report(df, k=1).collect()
-    assert out[0].exemplar == "short"  # higher score first
-    out2 = top_k_report(df, k=2).collect()
-    assert out2[1].exemplar == "x" * 100 + "..."
 
 
 def test_global_verdict_rollup(spark):
