@@ -48,12 +48,6 @@ class ValidationConfig:
     max_dup_rate: float = 0.0               # uniqueness: any dup fails
     max_orphan_rate: float = 0.0            # referential: any orphan fails
 
-    # Manifest lease lifetime (reference: the in_process flag,
-    # database_manager.py:66-76). Not read yet: run_validation takes
-    # leases but does not honour them (Manifest.pending_partitions'
-    # respect_leases/lease_ttl_seconds)
-    lease_timeout_minutes: int = 30
-
     # Scale knobs
     salt_buckets: int = 8                   # salted anti-join catalog fanout
     # Violations-sink exemplar cap: the violations table is the ONLY

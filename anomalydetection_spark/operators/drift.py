@@ -387,7 +387,7 @@ def fresh_validated(hist: DataFrame) -> DataFrame:
     """FRESH observations in a manifest history (``Manifest.history_df``
     shape): rows with status 'validated' whose record CONTENT differs
     from the same partition's record at the previous version. Versions
-    are full snapshots, so lease/stats commits (and validation runs
+    are full snapshots, so stats commits (and validation runs
     that skipped unchanged partitions) copy records forward verbatim —
     feeding those copies into a metric series would satisfy min_history
     with duplicates of one real observation and collapse the trailing
@@ -476,7 +476,7 @@ def verdict_regressions(
 
     Defaults compare the two latest versions with FRESH verdicts —
     versions where some record was actually (re)validated by that
-    version's own run. Lease and stats commits advance the manifest
+    version's own run. Stats commits advance the manifest
     version while carrying every verdict-bearing record forward
     verbatim; naively taking 'latest version with verdicts' would
     diff a carry-forward copy against its source and report an empty

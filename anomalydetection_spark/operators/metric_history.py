@@ -15,7 +15,7 @@ n_failed_partitions) or per-partition triples — judged by one keyed
 fold, and exposes it as the ``--metric-anomaly`` CLI. Both build on
 ``Manifest.history_df`` and share the :func:`..operators.drift.
 fresh_validated` freshness rule: only records whose content changed
-vs the previous version are fresh observations; lease/stamp commits
+vs the previous version are fresh observations; stats-stamp commits
 and resume-skipped partitions carry records forward verbatim and must
 not inject duplicate points (they would satisfy min_history with
 copies of one real observation and collapse the trailing stddev
@@ -58,8 +58,8 @@ def manifest_metric_history(
     ``scope='table'``: per-version aggregates over the WHOLE validated
     state — the table-health series. Carried-forward partitions are
     included on purpose (the series tracks "the table as of this
-    version"), but versions with no fresh observation at all (lease
-    acquisitions, ``stamp_stats``, all-skipped resumes) contribute no
+    version"), but versions with no fresh observation at all (older
+    engines' lease commits, ``stamp_stats``) contribute no
     point: their totals are byte-identical to the previous point and
     would damp the EMA.
 

@@ -24,11 +24,12 @@ verdicts, rollups, drift — is driver-side math over bounded-size
 collected intermediates, so the verdict tier starts no Spark job beyond
 the grid collect and the baseline read.
 
-Resume semantics: a crash before the manifest commit leaves CURRENT
-pointing at the previous version; the next run's pending set is
-unchanged and staged outputs under the dead run_id are simply
-re-staged (idempotent, keyed on snapshot hash — S2/S5,
-database_manager.py:84-103).
+Resume semantics: a pass writes one manifest version (none when nothing
+is pending). A crash before the manifest commit leaves CURRENT pointing
+at the previous version; the next run's pending set is unchanged and it
+stages the same violations again under its own run_id (idempotent,
+keyed on snapshot hash — S2/S5, database_manager.py:84-103). The dead
+run's ``_staged_<run_id>`` directory is left behind.
 """
 
 from __future__ import annotations
@@ -469,7 +470,6 @@ def run_validation(
             # resume: the pending list must exist before the scope does
             snap_rows = partition_snapshots(docs).collect()
             pending = sorted(manifest.pending_partitions(snap_rows))
-            manifest.acquire_leases(pending, run_id, now)
             if not pending:
                 return _empty_result()
             # Partition pruning: only unvalidated partitions are read
@@ -545,8 +545,6 @@ def run_validation(
             pending = sorted(r.partition_id for r in snap_rows)
             if not pending:
                 return _empty_result()
-            if manifest is not None:
-                manifest.acquire_leases(pending, run_id, now)
     finally:
         pool.shutdown(wait=False)
     _mark("violations")

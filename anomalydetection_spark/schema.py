@@ -75,13 +75,14 @@ VERDICTS_DDL = (
 
 # Checkpoint manifest record — the engine's analog of the reference's
 # ``logs`` tracking table (database_manager.py:21-32): snapshot hash =
-# change detection (log_retriever.py:167-172), status = in_process lease
-# (database_manager.py:66-76), plus lineage + metrics per north_rule.
+# change detection (log_retriever.py:167-172), status = validated (an
+# ``in_process`` lease from an older engine reads as pending), plus
+# lineage + metrics per north_rule.
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("snapshot_hash", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # pending|in_process|validated
+        T.StructField("status", T.StringType(), False),  # validated (in_process: older engines)
         T.StructField("run_id", T.StringType(), True),
         T.StructField("validated_at", T.StringType(), True),   # injected, not wall-clock in tests
         T.StructField("n_rows", T.LongType(), True),

@@ -8,14 +8,18 @@ Re-expresses the reference's SQLite ``logs`` tracking table
   log_retriever.py:167-172) → here a content hash per partition
   (order-independent bit_xor of row hashes).
 - should-process predicate (database_manager.py:84-103): process a
-  partition iff its hash changed or it was never validated, and no
-  live lease holds it.
-- lease = in_process flag (database_manager.py:66-76) with a timeout.
-- atomic commit: versioned JSON + write-temp + os.rename (POSIX-atomic)
-  + a CURRENT pointer — crash between violations-write and commit
-  leaves the previous manifest intact, so re-runs are idempotent
-  (violations are staged under the run_id and only published by the
-  manifest commit).
+  partition iff its hash changed or it was never validated. There is no
+  lease: the reference's in_process flag (database_manager.py:66-76)
+  is not taken, and an old manifest's ``in_process`` record is pending.
+- atomic commit: each write reads the state of version N, merges into
+  it and creates v{N+1}.json exclusively (O_EXCL), then swaps the
+  CURRENT pointer by os.rename (POSIX-atomic). Two overlapping runs
+  each merge into the latest committed state, so neither drops the
+  other's records; a writer whose base went stale in between fails
+  loudly instead of clobbering. A crash before the commit leaves the
+  previous version intact and the next run's pending set unchanged.
+  The violations a run stages under ``_staged_<run_id>`` are not
+  referenced by the commit.
 """
 
 from __future__ import annotations
@@ -76,8 +80,8 @@ class Manifest:
             name = f.read().strip()
         return int(name[1:].split(".")[0])
 
-    def load(self) -> dict[str, dict]:
-        v = self.current_version()
+    def load(self, version: int | None = None) -> dict[str, dict]:
+        v = self.current_version() if version is None else version
         if v == 0:
             return {}
         with open(os.path.join(self.path, f"v{v}.json")) as f:
@@ -95,11 +99,12 @@ class Manifest:
     # ---- writes ----
 
     def _commit_state(
-        self, state: dict[str, dict], run_id: str,
+        self, state: dict[str, dict], run_id: str, base: int,
         extras: dict | None = None,
         hash_version: int | None = None,
     ) -> int:
-        v = self.current_version() + 1
+        """Write ``state``, read from version ``base``, as ``base + 1``."""
+        v = base + 1
         fname = f"v{v}.json"
         payload = {
             "version": v,
@@ -117,8 +122,7 @@ class Manifest:
         # both read version N race to create v{N+1}.json and exactly
         # one wins — the loser gets FileExistsError instead of
         # os.rename silently clobbering the winner's committed state
-        # (the Iceberg commit shape; the lease API coordinates WHICH
-        # partitions runs touch, this guards the manifest itself)
+        # (the Iceberg commit shape)
         try:
             fd = os.open(
                 os.path.join(self.path, fname),
@@ -152,8 +156,9 @@ class Manifest:
         # carried-forward state keeps the version its hashes were written
         # under — stamping stats must not relabel old-scheme hashes as
         # current-scheme and defeat the upgrade-revalidation path
+        base = self.current_version()
         return self._commit_state(
-            self.load(), run_id, extras={key: stats},
+            self.load(base), run_id, base, extras={key: stats},
             hash_version=self.stored_hash_version(),
         )
 
@@ -171,40 +176,13 @@ class Manifest:
                 return doc[key]
         return None
 
-    def acquire_leases(
-        self, partition_ids: list[int], run_id: str, now: str
-    ) -> None:
-        state = self.load()
-        for pid in partition_ids:
-            rec = state.get(str(pid), {})
-            rec.update(
-                {
-                    "partition_id": pid,
-                    "status": "in_process",
-                    "run_id": run_id,
-                    # leased_at drives the expiry check in
-                    # pending_partitions — without it a run that dies
-                    # after leasing leaves its partitions permanently
-                    # unprocessable under respect_leases
-                    "leased_at": now,
-                    "validated_at": rec.get("validated_at"),
-                    "snapshot_hash": rec.get("snapshot_hash"),
-                }
-            )
-            state[str(pid)] = rec
-        # carried-forward hashes keep the scheme they were written
-        # under (same rule as stamp_stats): a lease commit that
-        # relabeled old-scheme hashes as current would silently
-        # mass-mismatch every later run if this run crashes
-        self._commit_state(
-            state, run_id, hash_version=self.stored_hash_version()
-        )
-
     def commit_validated(
         self, records: list[dict], run_id: str, now: str
     ) -> int:
-        """Publish per-partition results (lineage + metrics) atomically."""
-        state = self.load()
+        """Publish per-partition results (lineage + metrics) atomically,
+        merged into the latest committed state."""
+        base = self.current_version()
+        state = self.load(base)
         for rec in records:
             pid = str(rec["partition_id"])
             state[pid] = {
@@ -218,7 +196,7 @@ class Manifest:
                 "verdict": rec.get("verdict"),
                 "metrics_json": json.dumps(rec.get("metrics", {})),
             }
-        return self._commit_state(state, run_id)
+        return self._commit_state(state, run_id, base)
 
     def update_metrics(
         self, records: list[dict], run_id: str, now: str
@@ -227,7 +205,8 @@ class Manifest:
         partitions WITHOUT touching snapshot_hash or status — used by
         the feedback path, where human overrides change the verdict but
         the data (and so the should-process predicate) is unchanged."""
-        state = self.load()
+        base = self.current_version()
+        state = self.load(base)
         for rec in records:
             pid = str(rec["partition_id"])
             cur = state.get(pid)
@@ -247,27 +226,15 @@ class Manifest:
                 merged.update(rec["metrics"])
                 cur["metrics_json"] = _json.dumps(merged)
             state[pid] = cur
-        return self._commit_state(state, run_id)
+        return self._commit_state(state, run_id, base)
 
     # ---- the should-process predicate (S5) ----
 
-    def pending_partitions(
-        self,
-        snapshots: DataFrame | list,
-        respect_leases: bool = False,
-        run_id: str | None = None,
-        now: str | None = None,
-        lease_ttl_seconds: float = 3600.0,
-    ) -> list[int]:
-        """Partitions whose content hash is new/changed (or never
-        validated). With ``respect_leases`` an in_process partition held
-        by ANOTHER run is skipped (the reference's in_process check,
-        database_manager.py:84-103) — a lease held by ``run_id`` itself
-        is not (a run must see its own just-leased partitions), and a
-        lease whose ``leased_at`` is more than ``lease_ttl_seconds``
-        before ``now`` (both ISO-8601) is expired: the holder crashed,
-        the partition is pending again. Leases from states written
-        before leased_at existed never expire (conservative).
+    def pending_partitions(self, snapshots: DataFrame | list) -> list[int]:
+        """Partitions whose content hash is new/changed or that were
+        never validated (the reference's should-process predicate,
+        database_manager.py:84-103). A record in any other status, e.g.
+        an ``in_process`` lease written by an older engine, is pending.
         ``snapshots`` is a ``partition_snapshots`` frame or its
         already-collected rows."""
         if isinstance(snapshots, DataFrame):
@@ -291,34 +258,9 @@ class Manifest:
         pending = []
         for row in snapshots:
             rec = state.get(str(row.partition_id))
-            if rec is None:
-                pending.append(row.partition_id)
-                continue
-            if respect_leases and rec.get("status") == "in_process":
-                held_by_other = (
-                    run_id is None or rec.get("run_id") != run_id
-                )
-                expired = False
-                la = rec.get("leased_at")
-                if la and now:
-                    from datetime import datetime
-
-                    try:
-                        dt = datetime.fromisoformat(
-                            la.replace("Z", "+00:00")
-                        )
-                        dn = datetime.fromisoformat(
-                            now.replace("Z", "+00:00")
-                        )
-                        expired = (
-                            (dn - dt).total_seconds() > lease_ttl_seconds
-                        )
-                    except ValueError:
-                        pass  # unparseable timestamp: never expire
-                if held_by_other and not expired:
-                    continue
             if (
-                rec.get("status") != "validated"
+                rec is None
+                or rec.get("status") != "validated"
                 or rec.get("snapshot_hash") != row.snapshot_hash
             ):
                 pending.append(row.partition_id)
@@ -333,8 +275,8 @@ class Manifest:
         VERSION's committing run; ``record_run_id`` is the run that
         last touched the record — rows where the two are equal and
         status is 'validated' are FRESH observations, everything else
-        is carry-forward (versions are full snapshots, so every lease/
-        stats commit copies the previous records verbatim). Row count =
+        is carry-forward (versions are full snapshots, so every stats
+        commit copies the previous records verbatim). Row count =
         versions x partitions — metadata scale (the validation-run
         cadence, not the data volume)."""
         import json as _json

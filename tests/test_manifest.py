@@ -1,6 +1,6 @@
 """Checkpoint-manifest semantics: snapshot hashing, should-process
-predicate, lease handling, atomic versioned commits (SURVEY.md §5
-item 5; mirrors /root/reference/database_manager.py:66-103 and
+predicate, atomic versioned commits (SURVEY.md §5 item 5; mirrors
+the reference's database_manager.py:84-103 and
 log_retriever.py:167-172)."""
 
 from __future__ import annotations
@@ -10,7 +10,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from anomalydetection_spark.sources.manifest import Manifest, partition_snapshots
+from anomalydetection_spark.sources.manifest import (
+    SNAPSHOT_HASH_VERSION,
+    Manifest,
+    partition_snapshots,
+)
 
 
 def test_snapshot_hash_order_independent(spark, docs):
@@ -102,39 +106,107 @@ def test_changed_partition_repends(spark, docs, tmp_path):
     assert m.pending_partitions(partition_snapshots(mutated)) == [2]
 
 
-def test_lease_respected_and_released(spark, docs, tmp_path):
-    m = Manifest(str(tmp_path / "manifest"))
-    snaps = partition_snapshots(docs)
-    m.acquire_leases([0, 1], "runA", "t0")
-    held = m.pending_partitions(snaps, respect_leases=True)
-    assert 0 not in held and 1 not in held
-    # without lease respect (crash recovery) they are pending again
-    assert 0 in m.pending_partitions(snaps, respect_leases=False)
+def test_in_process_record_from_old_manifest_is_pending(spark, docs, tmp_path):
+    """Older engines committed an ``in_process`` lease record before
+    validating. Such a record, even with a matching hash, is pending:
+    only ``validated`` records are skipped."""
+    snaps = partition_snapshots(docs).collect()
+    first = snaps[0]
+    mdir = tmp_path / "manifest"
+    mdir.mkdir()
+    state = {
+        str(r.partition_id): {
+            "partition_id": r.partition_id,
+            "snapshot_hash": r.snapshot_hash,
+            "status": "validated",
+            "run_id": "old",
+            "validated_at": "t0",
+        }
+        for r in snaps
+    }
+    state[str(first.partition_id)].update(
+        status="in_process", leased_at="t1", run_id="dead"
+    )
+    (mdir / "v1.json").write_text(json.dumps(
+        {"version": 1, "run_id": "dead",
+         "hash_version": SNAPSHOT_HASH_VERSION,
+         "partitions": state}
+    ))
+    (mdir / "CURRENT").write_text("v1.json")
+    m = Manifest(str(mdir))
+    assert m.pending_partitions(snaps) == [first.partition_id]
 
 
-def test_lease_own_run_visible_and_ttl_expiry(spark, docs, tmp_path):
-    """A run must see its OWN just-leased partitions as pending, and a
-    lease older than the TTL (the holder crashed) expires instead of
-    leaving the partition permanently unprocessable."""
-    m = Manifest(str(tmp_path / "manifest"))
-    snaps = partition_snapshots(docs)
-    m.acquire_leases([0, 1], "runA", "1970-01-01T00:00:00Z")
-    own = m.pending_partitions(
-        snaps, respect_leases=True, run_id="runA"
-    )
-    assert 0 in own and 1 in own
-    # another run inside the TTL: still held
-    other = m.pending_partitions(
-        snaps, respect_leases=True, run_id="runB",
-        now="1970-01-01T00:30:00Z", lease_ttl_seconds=3600,
-    )
-    assert 0 not in other and 1 not in other
-    # past the TTL the crashed holder's lease expires
-    late = m.pending_partitions(
-        snaps, respect_leases=True, run_id="runB",
-        now="1970-01-01T02:00:00Z", lease_ttl_seconds=3600,
-    )
-    assert 0 in late and 1 in late
+def test_stale_base_fails_instead_of_clobbering(tmp_path, monkeypatch):
+    """A writer whose base version went stale between its read and its
+    commit must not overwrite the newer version: it fails loudly and
+    the other run's records stay committed."""
+    import pytest
+
+    mdir = str(tmp_path / "manifest")
+    a, b = Manifest(mdir), Manifest(mdir)
+    a.commit_validated([{"partition_id": 0, "snapshot_hash": "h0"}], "r0", "t0")
+    load = Manifest.load
+
+    def load_then_other_commits(self, version=None):
+        state = load(self, version)
+        if self is b:
+            a.commit_validated(
+                [{"partition_id": 1, "snapshot_hash": "h1"}], "rA", "t1"
+            )
+        return state
+
+    monkeypatch.setattr(Manifest, "load", load_then_other_commits)
+    with pytest.raises(RuntimeError, match="concurrent manifest commit"):
+        b.commit_validated(
+            [{"partition_id": 2, "snapshot_hash": "h2"}], "rB", "t2"
+        )
+    monkeypatch.undo()
+    assert a.current_version() == 2
+    assert sorted(a.load()) == ["0", "1"]
+
+
+def test_concurrent_writers_lose_no_committed_record(tmp_path):
+    """More writer threads than cores, each committing its own
+    partition and retrying when it loses the race: every commit that
+    returned is in the final state (a writer that overwrote a newer
+    version would drop one)."""
+    import sys
+    import threading
+
+    mdir = str(tmp_path / "manifest")
+    n = 16
+    committed = []
+    lock = threading.Lock()
+
+    def writer(pid):
+        m = Manifest(mdir)
+        rec = [{"partition_id": pid, "snapshot_hash": f"h{pid}"}]
+        for _ in range(1000):
+            try:
+                m.commit_validated(rec, f"r{pid}", "t0")
+            except RuntimeError:
+                continue
+            with lock:
+                committed.append(pid)
+            return
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=writer, args=(pid,)) for pid in range(n)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(committed) == list(range(n))
+    assert sorted(int(p) for p in Manifest(mdir).load()) == list(range(n))
+    assert Manifest(mdir).current_version() == n
 
 
 def test_concurrent_commit_detected(tmp_path):

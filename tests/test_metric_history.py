@@ -1,6 +1,6 @@
 """Metric-history anomaly (operators/metric_history.py): the EMA+3σ
 rule over the manifest's own metric series. History extraction must
-skip lease/stamp commits, planted spikes must flag, stable series must
+skip carry-forward (stamp) commits, planted spikes must flag, stable series must
 not, and the partition scope must localize a single degrading
 partition."""
 
@@ -39,12 +39,12 @@ def _commit(m: Manifest, run_id: str, nv_by_pid: dict[int, int],
 
 def test_history_skips_lease_and_stamp_commits(spark, tmp_path):
     """Only versions with FRESH validated state become series points —
-    lease acquisitions and stats stamps (which carry state forward
-    unchanged) would otherwise inject duplicate points that damp the
-    EMA exactly when a jump needs catching."""
+    stats stamps (which carry state forward unchanged) would otherwise
+    inject duplicate points that damp the EMA exactly when a jump needs
+    catching."""
     m = Manifest(str(tmp_path / "m"))
     _commit(m, "r1", {0: 5, 1: 0})
-    m.acquire_leases([0, 1], "r2", "2024-01-01T01:00:00")   # no point
+    m.stamp_stats("dedup", {"n_clusters": 2}, "r1")          # no point
     _commit(m, "r2", {0: 6, 1: 0})
     m.stamp_stats("dedup", {"n_clusters": 3}, "r2")          # no point
     _commit(m, "r3", {0: 7, 1: 1})
@@ -54,7 +54,7 @@ def test_history_skips_lease_and_stamp_commits(spark, tmp_path):
         r.version for r in hist.select("version").distinct().collect()
     )
     assert len(versions) == 3  # exactly the three fresh commits
-    # the stamp/lease versions are absent even though they exist on disk
+    # the stamp versions are absent even though they exist on disk
     assert m.current_version() == 5
     # table metrics present per version
     per_v = (

@@ -4,10 +4,51 @@ validated partitions, interrupted runs replay idempotently."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from anomalydetection_spark.operators.stats import length_histogram
 from anomalydetection_spark.plans.pipeline import run_validation
+from anomalydetection_spark.sources.manifest import (
+    Manifest,
+    partition_snapshots,
+)
+
+CHANGED = [2, 5]  # partitions _changed() rewrites
+
+
+def _changed(docs):
+    """``docs`` with every doc id of the CHANGED partitions rewritten."""
+    return docs.withColumn(
+        "doc_id",
+        F.when(
+            F.col("partition_id").isin(CHANGED),
+            F.concat("doc_id", F.lit("_m")),
+        ).otherwise(F.col("doc_id")),
+    )
+
+
+def _version_files(mdir):
+    return sorted(f for f in os.listdir(mdir) if f.startswith("v"))
+
+
+def _records(mdir):
+    return {
+        pid: (r["snapshot_hash"], r["n_rows"], r["n_violations"], r["verdict"])
+        for pid, r in Manifest(mdir).load().items()
+    }
+
+
+def _verdicts9(res):
+    return sorted(
+        (r.check, r.partition_id if r.partition_id is not None else -1,
+         r.n_rows, r.n_violations,
+         None if r.violation_rate is None else round(r.violation_rate, 9),
+         None if r.score is None else round(r.score, 9), r.verdict)
+        for r in res.verdicts.collect()
+    )
 
 
 def test_full_run_verdicts_and_violations(spark, docs, catalog, expected):
@@ -270,17 +311,128 @@ def test_verdicts_identical_across_shuffle_widths(spark, docs, catalog):
 
 
 def test_resume_skips_validated(spark, docs, catalog, tmp_path):
+    """A pass commits exactly one manifest version; a resume with
+    nothing pending validates and commits nothing, so an idle polling
+    loop does not grow the manifest."""
     mdir = str(tmp_path / "manifest")
     r1 = run_validation(
         spark, docs, catalog=catalog, manifest_dir=mdir, run_id="r1"
     )
     assert len(r1.validated_partitions) > 0
+    assert r1.manifest_version == 1
+    assert _version_files(mdir) == ["v1.json"]
     r2 = run_validation(
         spark, docs, catalog=catalog, manifest_dir=mdir, run_id="r2"
     )
     assert r2.validated_partitions == []
     assert r2.verdicts.count() == 0
     assert r2.violations.count() == 0
+    assert r2.manifest_version == Manifest(mdir).current_version() == 1
+    assert _version_files(mdir) == ["v1.json"]
+    r3 = run_validation(
+        spark, _changed(docs), catalog=catalog, manifest_dir=mdir,
+        run_id="r3",
+    )
+    assert r3.validated_partitions == CHANGED
+    assert r3.manifest_version == Manifest(mdir).current_version() == 2
+    assert _version_files(mdir) == ["v1.json", "v2.json"]
+
+
+def test_overlapping_runs_both_commit(spark, docs, catalog, tmp_path,
+                                      monkeypatch):
+    """Two runs over the same pending set, interleaved so that run A
+    starts and commits while run B sits inside its commit: both commit,
+    each merged into the latest state, and the final records equal a
+    serial run's with no partition lost."""
+    changed = _changed(docs)
+    serial = str(tmp_path / "serial")
+    mdir = str(tmp_path / "manifest")
+    for d in (serial, mdir):
+        run_validation(spark, docs, catalog=catalog, manifest_dir=d,
+                       run_id="r0")
+    run_validation(spark, changed, catalog=catalog, manifest_dir=serial,
+                   run_id="r1")
+
+    commit = Manifest.commit_validated
+    inner = {}
+
+    def commit_b_after_a(self, records, run_id, now):
+        if run_id == "B":
+            inner["A"] = run_validation(
+                spark, changed, catalog=catalog, manifest_dir=mdir,
+                run_id="A",
+            )
+        return commit(self, records, run_id, now)
+
+    monkeypatch.setattr(Manifest, "commit_validated", commit_b_after_a)
+    b = run_validation(spark, changed, catalog=catalog, manifest_dir=mdir,
+                       run_id="B")
+    a = inner["A"]
+    assert a.validated_partitions == b.validated_partitions == CHANGED
+    assert (a.manifest_version, b.manifest_version) == (2, 3)
+    got = _records(mdir)
+    assert got == _records(serial)
+    assert set(got) == {
+        str(r.partition_id) for r in partition_snapshots(changed).collect()
+    }
+    assert {pid for pid, r in Manifest(mdir).load().items()
+            if r["run_id"] == "B"} == {str(p) for p in CHANGED}
+
+
+def test_crash_before_commit_rerun_matches_clean_run(
+    spark, docs, catalog, tmp_path, monkeypatch
+):
+    """A pass killed after staging its violations and before the
+    manifest commit leaves CURRENT unchanged; a re-run under a new
+    run_id validates the same pending set and produces the verdict rows
+    and staged violation rows of a run that never crashed."""
+    changed = _changed(docs)
+    crashed, clean = str(tmp_path / "m_crashed"), str(tmp_path / "m_clean")
+    vdir = str(tmp_path / "violations")
+    for d in (crashed, clean):
+        run_validation(spark, docs, catalog=catalog, manifest_dir=d,
+                       run_id="r0")
+    pending = Manifest(crashed).pending_partitions(
+        partition_snapshots(changed)
+    )
+    assert pending == CHANGED
+    with open(os.path.join(crashed, "CURRENT")) as f:
+        current = f.read()
+    staged_at_crash = []
+
+    def killed(self, records, run_id, now):
+        staged_at_crash.extend(os.listdir(vdir))
+        raise RuntimeError("killed before the manifest commit")
+
+    monkeypatch.setattr(Manifest, "commit_validated", killed)
+    with pytest.raises(RuntimeError, match="killed before"):
+        run_validation(spark, changed, catalog=catalog, manifest_dir=crashed,
+                       violations_dir=vdir, run_id="dead")
+    monkeypatch.undo()
+    assert staged_at_crash == ["_staged_dead"]
+    with open(os.path.join(crashed, "CURRENT")) as f:
+        assert f.read() == current
+    assert Manifest(crashed).pending_partitions(
+        partition_snapshots(changed)
+    ) == pending
+
+    rerun = run_validation(spark, changed, catalog=catalog,
+                           manifest_dir=crashed, violations_dir=vdir,
+                           run_id="rerun")
+    ok = run_validation(spark, changed, catalog=catalog, manifest_dir=clean,
+                        violations_dir=str(tmp_path / "violations_clean"),
+                        run_id="ok")
+    assert rerun.validated_partitions == ok.validated_partitions == pending
+    assert _verdicts9(rerun) == _verdicts9(ok)
+    assert _records(crashed) == _records(clean)
+
+    def staged(d, run_id):
+        rows = spark.read.parquet(os.path.join(d, f"_staged_{run_id}"))
+        return sorted(repr(r) for r in rows.collect())
+
+    assert staged(vdir, "rerun") == staged(
+        str(tmp_path / "violations_clean"), "ok"
+    )
 
 
 def test_resume_after_partial_commit(spark, docs, catalog, tmp_path):

@@ -1,6 +1,6 @@
 """CLI runner (anomalydetection_spark/run.py): one batch round end to
 end — verdicts/violations written, manifest committed, second round
-validates nothing (resume)."""
+validates nothing and commits nothing (resume)."""
 
 from __future__ import annotations
 
@@ -34,8 +34,31 @@ def test_one_round_and_resume(spark, docs_path, catalog, tmp_path):
     assert viol.count() > 0
     json.dumps(s1)  # summary is JSON-serializable
 
+    # an idle resume commits no manifest version
+    versions = sorted(os.listdir(mdir))
     s2 = one_round(spark, args, "r2")
     assert s2["validated_partitions"] == []
+    assert s2["manifest_version"] == s1["manifest_version"]
+    assert sorted(os.listdir(mdir)) == versions
+
+    # a resume that validates partitions commits exactly one
+    from pyspark.sql import functions as F
+
+    changed = str(tmp_path / "changed")
+    spark.read.parquet(docs_path).withColumn(
+        "doc_id",
+        F.when(F.col("partition_id") == 3, F.concat("doc_id", F.lit("_m")))
+        .otherwise(F.col("doc_id")),
+    ).write.parquet(changed)
+    args3 = parse_args(
+        ["--docs", changed, "--catalog", cat_path,
+         "--manifest-dir", mdir, "--out", out]
+    )
+    s3 = one_round(spark, args3, "r3")
+    assert s3["validated_partitions"] == [3]
+    assert s3["manifest_version"] == s1["manifest_version"] + 1
+    new = set(os.listdir(mdir)) - set(versions)
+    assert new == {f"v{s3['manifest_version']}.json"}
 
 
 def test_feedback_round_cli(spark, docs_path, catalog, tmp_path):
