@@ -8,23 +8,29 @@ invariant); per-partition verdicts come from the pipeline's count grid.
 ``ReferentialCheck`` is the one builder of the machinery below for the
 batch pass, the pre-flight and the stream.
 
-Scale design:
-1. ``explode`` spans → distinct (doc, ref) pairs. Distinct-by-ref first:
-   the anti-join's left side shrinks from |spans| to |distinct refs per
-   doc| before any join.
-2. Optional explicit broadcast-Bloom prefilter (functions/bloom.py):
-   survivors of ``might_contain == False`` are *definite* orphans —
-   only the `True` side ever needs the exact join, and under the
-   default flow we skip the exact join entirely for definite orphans.
-   Bloom FPs would wrongly pass → we re-verify the positives only when
-   ``exact=True`` (default) via a salted left-anti join.
-3. Hot keys (one media_ref shared by ~20% of spans): the join key is
-   salted by replicating the (small) catalog side ``salt_buckets``
-   ways — classic skew-salt — plus AQE skew-join splitting as backstop.
+Scale design — the check is sized by the smaller of its two sides:
+1. Row-local (catalog within ``BROADCAST_MAX_CATALOG_ROWS``): the
+   catalog's key set is collected once, broadcast, and probed by a
+   vectorized Arrow UDF inside the wide violations scan. No shuffle, no
+   exploded-refs pass.
+2. Probe-side (bigger catalog, the scope's distinct refs within
+   ``PROBE_MAX_DISTINCT_REFS``): the scope's distinct refs (the hot ref
+   collapses in the map-side distinct) are broadcast, the catalog key
+   column is scanned once under a left-semi join against them, and the
+   present keys — at most the scope's distinct refs — feed the same
+   row-local UDF. The catalog is scanned, never shuffled.
+3. Salted fallback (both sides too big to broadcast): ``explode`` spans
+   → (doc, ref) pairs → salted sort-merge left-anti join against the
+   catalog replicated ``salt_buckets`` ways (a hot media_ref spreads
+   over reducers; AQE skew-join splitting as backstop), with an
+   explicit broadcast-Bloom prefilter (functions/bloom.py) above
+   ``BLOOM_MIN_CATALOG_ROWS``: Bloom negatives are definite orphans,
+   and only the positives take the exact join.
 """
 
 from __future__ import annotations
 
+import logging
 from functools import cached_property
 
 import numpy as np
@@ -34,6 +40,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bloom import build_bloom, might_contain_udf
+
+log = logging.getLogger(__name__)
 
 
 def _span_refs(docs: DataFrame, row_fingerprint: bool = False) -> DataFrame:
@@ -72,6 +80,12 @@ BLOOM_MIN_CATALOG_ROWS = 5_000_000
 # ceiling the salted sort-merge anti-join takes over (AQE skew-join as
 # backstop).
 BROADCAST_MAX_CATALOG_ROWS = 2_000_000
+
+# Probe-side ceiling: the most distinct refs of one scope that are
+# broadcast against a catalog beyond BROADCAST_MAX_CATALOG_ROWS — the
+# same ceiling, for the same serialized-size reasons (the present keys
+# collected back are at most this many).
+PROBE_MAX_DISTINCT_REFS = BROADCAST_MAX_CATALOG_ROWS
 
 
 def collect_catalog_keys(catalog: DataFrame, col: str = "media_ref"):
@@ -270,12 +284,15 @@ def orphan_refs(
 
 class ReferentialCheck:
     """The referential machinery for one catalog, built once and reused
-    by every pass, pre-flight or micro-batch that probes it:
+    by every pass, pre-flight or micro-batch that probes it.
+    ``udf_for(scope)`` picks the shape (module docstring):
 
     * ``udf`` — catalog within ``BROADCAST_MAX_CATALOG_ROWS``: the key
       set is collected and broadcast once, and the check is the
       row-local membership UDF inside the wide scan;
-    * ``udf is None`` — bigger catalog: ``orphan_doc`` runs the salted
+    * probe-side — bigger catalog, few enough distinct refs in the
+      scope: the same UDF over only the catalog keys the scope names;
+    * ``None`` — both too big: ``orphan_doc`` runs the salted
       anti-join, with a Bloom prefilter built once (``bloom``) above
       ``BLOOM_MIN_CATALOG_ROWS``.
 
@@ -312,6 +329,42 @@ class ReferentialCheck:
         if self.n <= BLOOM_MIN_CATALOG_ROWS:
             return None
         return build_bloom(self.catalog, "media_ref", self.n)
+
+    def udf_for(self, scope: DataFrame):
+        """The row-local membership UDF that checks ``scope``, or None
+        when only the salted join can (logged at INFO either way)."""
+        if self.n <= BROADCAST_MAX_CATALOG_ROWS:
+            log.info("referential: row-local")
+            return self.udf
+        # one bounded collect: one row past the ceiling tells "too many"
+        # without a separate count, and the refs go back to the JVM as an
+        # Arrow-backed local relation, so their broadcast starts no job
+        refs = (
+            _span_refs(scope)
+            .select("media_ref")
+            .distinct()
+            .limit(PROBE_MAX_DISTINCT_REFS + 1)
+            .toArrow()
+        )
+        if refs.num_rows > PROBE_MAX_DISTINCT_REFS:
+            log.info(
+                "referential: %s",
+                "salted+bloom" if self.bloom is not None else "salted",
+            )
+            return None
+        keys = collect_catalog_keys(
+            self.catalog.select("media_ref").join(
+                F.broadcast(self.spark.createDataFrame(refs)),
+                "media_ref",
+                "left_semi",
+            )
+        )
+        log.info(
+            "referential: probe-side (%d of %d refs)",
+            len(keys),
+            refs.num_rows,
+        )
+        return orphan_refs_rowlocal_udf(self.spark, keys)
 
     def build(self) -> "ReferentialCheck":
         """Run the one-time catalog work now instead of on first use."""

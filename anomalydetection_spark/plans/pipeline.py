@@ -5,24 +5,30 @@ ensemble pass (:277-357), restructured for Spark:
   manifest anti-join (partition discovery, S5)        — driver + 1 agg
   → ``validate_scope``, the validation core the batch pass and every
     stream micro-batch share:
-    small check inputs (dup keys, orphan refs) — narrow column scans
-    → ONE wide scan emitting every violation row (conformance flags are
-      row-local; uniqueness/referential attach via broadcast joins)
+    small check inputs (dup keys, the referential key set) — narrow
+      column scans
+    → ONE wide scan emitting every violation row (conformance flags and
+      the referential membership UDF are row-local; uniqueness attaches
+      via a broadcast join)
     → ONE collect of the per-partition violation count grid (no re-scan
       of the table)
   → verdict rows, table-level rollup, drift scores and manifest records
     computed on the driver from that grid, the snapshot rows and both
     length histograms — all metadata scale (partitions × checks counts,
-    kinds × bins buckets) — and materialized by ONE createDataFrame
+    kinds × bins buckets) — and materialized as ONE Arrow-backed local
+    frame (``schema.local_frame``)
   → atomic manifest commit (lineage + metrics)
 
 Scan budget per pass (the thing that matters at 100 TB): one snapshot
-hash pass, one key-column pass (uniqueness), one exploded-refs pass
-(referential, only beyond the broadcast cap), one full-width violations
-pass, one text-length pass (drift input). Everything downstream —
-verdicts, rollups, drift — is driver-side math over bounded-size
-collected intermediates, so the verdict tier starts no Spark job beyond
-the grid collect and the baseline read.
+hash pass, one key-column pass (uniqueness), one full-width violations
+pass, one text-length pass (drift input). Beyond the catalog broadcast
+cap the referential check adds one refs pass: the scope's distinct refs
+against a semi-join scan of the catalog's key column, or — only when
+the scope's distinct refs also exceed the cap — the salted
+exploded-refs anti-join. Everything downstream — verdicts, rollups,
+drift — is driver-side math over bounded-size collected intermediates,
+so the verdict tier starts no Spark job beyond the grid collect and the
+baseline read.
 
 Resume semantics: a pass writes one manifest version (none when nothing
 is pending). A crash before the manifest commit leaves CURRENT pointing
@@ -52,7 +58,7 @@ from ..operators.referential import (
 from ..operators.stats import CONF_CHECKS
 from ..operators.uniqueness import duplicate_keys
 from ..operators.verdict import rollup_rows
-from ..schema import VERDICTS_DDL
+from ..schema import VERDICTS_DDL, local_frame
 from ..sources.manifest import Manifest, partition_snapshots
 
 
@@ -104,9 +110,10 @@ def _all_violations(
 
     Conformance flags are row-local expressions; uniqueness attaches
     via a broadcast join on the (tiny) dup-key set. Referential comes
-    in two shapes, chosen by catalog size (``ReferentialCheck``):
+    in two shapes, chosen by ``ReferentialCheck.udf_for``:
 
-    * ``orphan_udf`` (broadcastable catalog — the common case): a
+    * ``orphan_udf`` (a broadcastable catalog, or the catalog keys a
+      scope with few enough distinct refs names — the common case): a
       vectorized membership check over each row's projected refs array
       (operators/referential.py::orphan_refs_rowlocal_udf). Row-local →
       the wide scan never shuffles and needs no exploded-refs pre-scan.
@@ -114,7 +121,8 @@ def _all_violations(
       (spans included) through a sort-merge join against the per-doc
       orphan aggregate — the dominant non-scaling cost of the pass at
       16M docs (~13 s of a 29 s stage at local[8]).
-    * ``orphan_doc`` join (catalog too large to broadcast): per-doc
+    * ``orphan_doc`` join (catalog and scope refs too large to
+      broadcast): per-doc
       orphan aggregate from the salted anti-join pre-scan, attached by
       join — broadcast only while that side is genuinely small
       (``broadcast_orphans``).
@@ -350,9 +358,10 @@ def validate_scope(
     Duplicate ``cfg.unique_key`` values are detected over ``key_scope``
     (the full table for an incremental pass, so pairs straddling
     validated and pending partitions stay visible; the batch itself for
-    a stream) and attributed within ``scope``; referential uses ``ref``.
+    a stream) and attributed within ``scope``; referential uses
+    ``ref.udf_for(scope)``, or its salted join when that is None.
     The small inputs are cached and counted first — the dup-key count
-    on a helper thread, overlapping ``ref``'s one-time catalog work —
+    on a helper thread, overlapping ``ref``'s catalog work —
     and each is broadcast only within its size guard, beyond which the
     attach is a shuffle join rather than an executor-OOM risk;
     ``mark("small_scans")`` follows. Violations are written to
@@ -366,7 +375,7 @@ def validate_scope(
     broadcast_orphans = True
     with ThreadPoolExecutor(max_workers=1) as helper:
         n_dups = helper.submit(dups.count)
-        orphan_udf = ref.udf if ref is not None else None
+        orphan_udf = ref.udf_for(scope) if ref is not None else None
         if ref is not None and orphan_udf is None:
             orphan_doc = ref.orphan_doc(scope).cache()
             # materializing the cache also tells whether this side is
@@ -454,8 +463,8 @@ def run_validation(
         from ..schema import VIOLATIONS_SCHEMA
 
         return ValidationResult(
-            spark.createDataFrame([], schema=VERDICTS_DDL),
-            spark.createDataFrame([], schema=VIOLATIONS_SCHEMA),
+            local_frame(spark, [], VERDICTS_DDL),
+            local_frame(spark, [], VIOLATIONS_SCHEMA),
             [],
             manifest.current_version() if manifest else 0,
         )
@@ -536,7 +545,8 @@ def run_validation(
         if cur_hist is not None:
             hist_rows = fut_hist.result()
             base_rows = fut_base.result()
-            cur_hist = spark.createDataFrame(
+            cur_hist = local_frame(
+                spark,
                 [(*key, bucket, n) for key, bucket, n in hist_rows],
                 cur_hist.schema,
             )
@@ -553,8 +563,9 @@ def run_validation(
     # partitions x checks counts and the histograms kinds x bins rows,
     # so one collect of the grid plus plain Python replaces the joins,
     # windows and unions a Spark formulation pays a scheduler round-trip
-    # for each; ONE createDataFrame materializes the result, so caller
-    # .count()/.show() run on local data ---
+    # for each; the result is ONE Arrow-backed local frame, whose plan is
+    # a LocalTableScan, so a caller's .collect()/.show() start no scan
+    # job over a parallelized list ---
     snap_map = {r.partition_id: r for r in snap_rows}
     part_rows = verdict_rows(
         grid,
@@ -586,7 +597,7 @@ def run_validation(
 
     # --- table-level rollup (the "ensemble" two-level verdict) ---
     rows += rollup_rows(part_rows)
-    verdicts = spark.createDataFrame(rows, VERDICTS_DDL)
+    verdicts = local_frame(spark, rows, VERDICTS_DDL)
 
     _mark("verdicts")
     manifest_version = 0
@@ -658,8 +669,8 @@ def revalidate_with_feedback(
         has_catalog=has_catalog,
         cfg=cfg,
     )
-    verdicts = spark.createDataFrame(
-        part_rows + rollup_rows(part_rows), VERDICTS_DDL
+    verdicts = local_frame(
+        spark, part_rows + rollup_rows(part_rows), VERDICTS_DDL
     )
     version = 0
     if manifest is not None:
@@ -769,16 +780,18 @@ def preflight_estimate(
         if catalog is not None
         else None
     )
-    ref_in_agg = ref is not None and ref.udf is not None
+    ref_udf = ref.udf_for(sample) if ref is not None else None
+    ref_in_agg = ref_udf is not None
     if ref_in_agg:
         proj.append(
-            (F.size(ref.udf(span_refs_column())) > 0)
+            (F.size(ref_udf(span_refs_column())) > 0)
             .cast("long")
             .alias("referential")
         )
     elif ref is not None:
-        # catalog beyond broadcast: the salted anti-join runs on the
-        # SAMPLE's exploded refs only — fraction x the full cost
+        # catalog and the sample's refs beyond broadcast: the salted
+        # anti-join runs on the SAMPLE's exploded refs only — fraction x
+        # the full cost
         ref_joined = {
             r.partition_id: r["count"]
             for r in ref.orphan_doc(sample).groupBy("partition_id")
@@ -917,11 +930,10 @@ def preflight_estimate(
                 verdict,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
-        schema=(
-            "check string, tier string, n_evaluated long, n_violations long,"
-            " rate double, ci_lo double, ci_hi double, gate double,"
-            " verdict string"
-        ),
+        "check string, tier string, n_evaluated long, n_violations long,"
+        " rate double, ci_lo double, ci_hi double, gate double,"
+        " verdict string",
     )

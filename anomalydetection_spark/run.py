@@ -605,6 +605,7 @@ def feedback_round(spark, args) -> dict:
     from pyspark.sql import functions as F
 
     from .plans.pipeline import revalidate_with_feedback
+    from .schema import local_frame
     from .sources.manifest import Manifest
 
     if not args.violations_run or not args.manifest_dir:
@@ -614,7 +615,8 @@ def feedback_round(spark, args) -> dict:
     )
     feedback = spark.read.parquet(args.apply_feedback)
     manifest = Manifest(args.manifest_dir)
-    totals = spark.createDataFrame(
+    totals = local_frame(
+        spark,
         [
             (rec["partition_id"], rec.get("n_rows"))
             for rec in manifest.load().values()

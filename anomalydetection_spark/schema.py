@@ -8,6 +8,7 @@ input_hint.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 SPAN_STRUCT = T.StructType(
@@ -72,6 +73,32 @@ VERDICTS_DDL = (
     "check string, partition_id int, n_rows long, n_violations long,"
     " violation_rate double, score double, verdict string"
 )
+
+
+def local_frame(spark, rows, schema):
+    """Driver-held ``rows`` (tuples in ``schema`` order; ``schema`` a DDL
+    string or a StructType) as an Arrow-backed local DataFrame. The
+    table is built against the schema's own Arrow types, never inferred
+    ones, so int32 ``partition_id`` and nullable int64 counts, null
+    table-level partition ids included, keep their declared types. Its
+    plan is a LocalTableScan, so a caller's collect or small write
+    starts no scan job over a parallelized list."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [
+                pa.array(col, type=field.type)
+                for col, field in zip(columns, arrow_schema)
+            ],
+            schema=arrow_schema,
+        )
+    )
+
 
 # Checkpoint manifest record — the engine's analog of the reference's
 # ``logs`` tracking table (database_manager.py:21-32): snapshot hash =

@@ -12,14 +12,17 @@ Re-expresses the reference's SQLite ``logs`` tracking table
   lease: the reference's in_process flag (database_manager.py:66-76)
   is not taken, and an old manifest's ``in_process`` record is pending.
 - atomic commit: each write reads the state of version N, merges into
-  it and creates v{N+1}.json exclusively (O_EXCL), then swaps the
-  CURRENT pointer by os.rename (POSIX-atomic). Two overlapping runs
-  each merge into the latest committed state, so neither drops the
-  other's records; a writer whose base went stale in between fails
-  loudly instead of clobbering. A crash before the commit leaves the
-  previous version intact and the next run's pending set unchanged.
-  The violations a run stages under ``_staged_<run_id>`` are not
-  referenced by the commit.
+  it, writes and fsyncs a private temp file and hard-links it to
+  v{N+1}.json. The link is the commit point and the compare-and-swap:
+  it is atomic, fails if the name exists, and never exposes a partial
+  file. CURRENT is then moved by os.rename, but it is only a hint:
+  readers roll forward from it while v{hint+1}.json exists, so a crash
+  anywhere in the commit leaves either version N or version N+1
+  current, never a manifest that refuses every later commit. Two
+  overlapping runs each merge into the latest committed state, so
+  neither drops the other's records; a writer whose base went stale in
+  between fails loudly instead of clobbering. The violations a run
+  stages under ``_staged_<run_id>`` are not referenced by the commit.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..schema import local_frame
 
 # Version of the snapshot-hash derivation below. Bump whenever the hash
 # scheme changes (v1 = md5(to_json), v2 = bit_xor(xxhash64)): a manifest
@@ -61,7 +66,9 @@ class Manifest:
     """Versioned manifest directory:
 
     ``<dir>/v{N}.json``   — full manifest state at version N
-    ``<dir>/CURRENT``     — pointer file containing "v{N}.json"
+    ``<dir>/CURRENT``     — hint file containing "v{N}.json"; the
+                            current version is the last of the unbroken
+                            v{hint+1}, v{hint+2}, ... chain after it
 
     State: {partition_id(str) -> record dict (MANIFEST_SCHEMA fields)}.
     """
@@ -74,11 +81,15 @@ class Manifest:
 
     def current_version(self) -> int:
         cur = os.path.join(self.path, "CURRENT")
-        if not os.path.exists(cur):
-            return 0
-        with open(cur) as f:
-            name = f.read().strip()
-        return int(name[1:].split(".")[0])
+        v = 0
+        if os.path.exists(cur):
+            with open(cur) as f:
+                v = int(f.read().strip()[1:].split(".")[0])
+        # a commit that crashed (or raced) after its link but before its
+        # CURRENT rename is committed all the same: roll forward
+        while os.path.exists(os.path.join(self.path, f"v{v + 1}.json")):
+            v += 1
+        return v
 
     def load(self, version: int | None = None) -> dict[str, dict]:
         v = self.current_version() if version is None else version
@@ -118,34 +129,32 @@ class Manifest:
         }
         if extras:
             payload.update(extras)
-        # exclusive create IS the compare-and-swap: two writers that
-        # both read version N race to create v{N+1}.json and exactly
-        # one wins — the loser gets FileExistsError instead of
-        # os.rename silently clobbering the winner's committed state
-        # (the Iceberg commit shape)
+        tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+            f.flush()
+            os.fsync(f.fileno())
+        # the hard link IS the commit and the compare-and-swap: two
+        # writers that both read version N race to link v{N+1}.json and
+        # exactly one wins — the loser gets FileExistsError instead of
+        # silently clobbering the winner's committed state — and the
+        # name only ever appears with its complete, fsynced payload
         try:
-            fd = os.open(
-                os.path.join(self.path, fname),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
+            os.link(tmp, os.path.join(self.path, fname))
         except FileExistsError:
             raise RuntimeError(
                 f"concurrent manifest commit detected: {fname} already "
                 f"exists under {self.path} — another run committed from "
-                "the same base version (re-run against the new CURRENT),"
-                " or a crashed run left an orphaned version file (verify"
-                " and remove it)"
-            )
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
-            f.flush()
-            os.fsync(f.fileno())
-        tmp2 = os.path.join(self.path, f"_tmpcur_{uuid.uuid4().hex}")
-        with open(tmp2, "w") as f:
+                "the same base version (re-run against the new version)"
+            ) from None
+        finally:
+            os.unlink(tmp)
+        tmp_cur = os.path.join(self.path, f"_tmpcur_{uuid.uuid4().hex}")
+        with open(tmp_cur, "w") as f:
             f.write(fname)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp2, os.path.join(self.path, "CURRENT"))
+        os.rename(tmp_cur, os.path.join(self.path, "CURRENT"))
         return v
 
     def stamp_stats(self, key: str, stats: dict, run_id: str) -> int:
@@ -299,12 +308,11 @@ class Manifest:
                         rec.get("run_id"),
                     )
                 )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
-            schema=(
-                "version int, run_id string, partition_id int,"
-                " n_rows long, n_violations long, verdict string,"
-                " validated_at string, status string,"
-                " record_run_id string"
-            ),
+            "version int, run_id string, partition_id int,"
+            " n_rows long, n_violations long, verdict string,"
+            " validated_at string, status string,"
+            " record_run_id string",
         )

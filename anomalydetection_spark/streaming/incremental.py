@@ -35,7 +35,7 @@ from ..operators import stats as stats_ops
 from ..operators.drift import collect_histogram
 from ..operators.referential import ReferentialCheck
 from ..plans.pipeline import drift_rows, validate_scope, verdict_rows
-from ..schema import DOCUMENTS_SCHEMA, VERDICTS_DDL
+from ..schema import DOCUMENTS_SCHEMA, VERDICTS_DDL, local_frame
 
 
 def read_documents_stream(
@@ -78,7 +78,10 @@ def stream_validate(
     only asserts WITHIN-batch uniqueness (cross-batch dup detection is
     the periodic batch pass over the manifest), so that check is named
     ``uniqueness_batch``. The referential check is built once for the
-    stream's lifetime: no micro-batch re-scans the catalog.
+    stream's lifetime (catalog size, key set or Bloom filter): a
+    micro-batch re-reads the catalog only beyond the broadcast cap, as
+    one semi-join scan of its key column against the batch's distinct
+    refs (the probe-side shape, operators/referential.py).
 
     ``emit_violations``: also write the violation rows per micro-batch
     under ``output_dir/violations/batch_id=N`` (overwrite per batch id →
@@ -167,7 +170,7 @@ def stream_validate(
         # that batch's verdict rows. batch_id is
         # reconstructed from the partition path on read. The verdict
         # rows are partitions × checks, so one file per batch.
-        verdicts = batch.sparkSession.createDataFrame(rows, VERDICTS_DDL)
+        verdicts = local_frame(batch.sparkSession, rows, VERDICTS_DDL)
         verdicts.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(verdicts_dir, f"batch_id={batch_id}")
         )

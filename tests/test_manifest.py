@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from anomalydetection_spark.sources.manifest import (
@@ -211,22 +212,20 @@ def test_concurrent_writers_lose_no_committed_record(tmp_path):
 
 def test_concurrent_commit_detected(tmp_path):
     """Two writers committing from the same base version: the second
-    rename used to silently clobber the first commit — exclusive
-    version-file creation now fails the loser loudly."""
+    rename used to silently clobber the first commit — the exclusive
+    version-file link now fails the loser loudly."""
     import pytest
 
     m1 = Manifest(str(tmp_path / "manifest"))
     m2 = Manifest(str(tmp_path / "manifest"))
     rec = {"partition_id": 0, "snapshot_hash": "h0", "verdict": "pass"}
-    # both read CURRENT (absent -> base 0); m1 commits v1
+    # both read base 0; m1 commits v1 first
     m1.commit_validated([rec], "runA", "t0")
-    # simulate m2 having computed its state against base 0 by removing
-    # CURRENT after m1's commit: m2 then also targets v1
-    import os
-
-    os.remove(str(tmp_path / "manifest" / "CURRENT"))
+    # m2 commits the state it computed against base 0: it also targets v1
     with pytest.raises(RuntimeError, match="concurrent manifest commit"):
-        m2.commit_validated([rec], "runB", "t1")
+        m2._commit_state({}, "runB", base=0)
+    assert list(m1.load()) == ["0"]
+    assert m1.load()["0"]["run_id"] == "runA"
 
 
 def test_commit_is_versioned_and_atomic(tmp_path):
@@ -265,6 +264,59 @@ def test_crash_before_commit_is_invisible(tmp_path):
     state = m.load()
     assert state["0"]["snapshot_hash"] == "h0"
     assert m.current_version() == 1
+
+
+@pytest.mark.parametrize(
+    "crash_at", ["after_temp_write", "after_link", "before_current_rename"]
+)
+def test_crash_inside_commit_never_wedges_the_manifest(
+    tmp_path, monkeypatch, crash_at
+):
+    """A commit killed inside its own window — its temp file written,
+    its version file linked, or its CURRENT hint not yet moved — never
+    stops the next commit, and the final records equal a run that never
+    crashed. A crash after the link has committed: the next reader
+    rolls forward past the stale CURRENT hint."""
+
+    class Killed(Exception):
+        pass
+
+    r1 = [{"partition_id": 0, "snapshot_hash": "h0", "verdict": "pass"}]
+    r2 = [{"partition_id": 1, "snapshot_hash": "h1", "verdict": "fail"}]
+    clean = Manifest(str(tmp_path / "clean"))
+    clean.commit_validated(r1, "r1", "t0")
+    clean.commit_validated(r2, "r2", "t1")
+
+    m = Manifest(str(tmp_path / "crashed"))
+    m.commit_validated(r1, "r1", "t0")
+    link, rename = os.link, os.rename
+
+    def link_after(src, dst):
+        if crash_at == "after_temp_write":
+            raise Killed
+        link(src, dst)
+        if crash_at == "after_link":
+            raise Killed
+
+    def rename_before(src, dst):
+        raise Killed
+
+    monkeypatch.setattr(os, "link", link_after)
+    if crash_at == "before_current_rename":
+        monkeypatch.setattr(os, "rename", rename_before)
+    with pytest.raises(Killed):
+        m.commit_validated(r2, "r2", "t1")
+    monkeypatch.setattr(os, "link", link)
+    monkeypatch.setattr(os, "rename", rename)
+
+    committed = crash_at != "after_temp_write"
+    assert Manifest(m.path).current_version() == (2 if committed else 1)
+    # the next run commits, whatever the crash left behind
+    v = Manifest(m.path).commit_validated(r2, "r2", "t1")
+    assert v == (3 if committed else 2)
+    assert Manifest(m.path).current_version() == v
+    assert Manifest(m.path).load() == clean.load()
+    assert not [f for f in os.listdir(m.path) if f.startswith("_tmp_")]
 
 
 def test_hash_scheme_upgrade_revalidates_explicitly(spark, docs, tmp_path):

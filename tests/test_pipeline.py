@@ -491,16 +491,53 @@ def test_staged_violations_published(spark, docs, catalog, tmp_path):
     assert res.violations.count() > 0
 
 
-def test_rowlocal_and_join_referential_paths_agree(spark, docs, catalog):
-    """The shuffle-free row-local referential path (broadcastable
-    catalog → Arrow membership UDF inside the wide scan) and the
-    legacy anti-join + per-doc-aggregate path must emit identical
-    violation rows and verdicts. The legacy path is forced by lying
-    about the catalog size via catalog_size_hint."""
-    rowlocal = run_validation(spark, docs, catalog=catalog)
-    legacy = run_validation(
-        spark, docs, catalog=catalog, catalog_size_hint=10_000_000
+def _referential_shape(caplog, fn):
+    """``fn()``'s result and the one referential shape it logged."""
+    import logging
+
+    from anomalydetection_spark.operators import referential
+
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger=referential.__name__):
+        out = fn()
+    (shape,) = [
+        r.getMessage() for r in caplog.records
+        if r.name == referential.__name__
+    ]
+    return out, shape
+
+
+def test_rowlocal_and_join_referential_paths_agree(
+    spark, docs, catalog, monkeypatch, caplog
+):
+    """The three referential shapes must emit identical violation rows
+    (spans included) and verdicts on the fixture, which holds duplicate
+    doc_ids with differing spans, null refs and the hot ref: the
+    row-local UDF over the whole catalog; the probe-side UDF over the
+    catalog keys the scope names, forced by a broadcast cap below the
+    catalog's size; and the salted anti-join with its Bloom prefilter,
+    forced by lying about the catalog size with a distinct-ref guard of
+    0. Each pass logs the shape it took."""
+    import re
+
+    import anomalydetection_spark.operators.referential as R
+
+    run = lambda **kw: _referential_shape(  # noqa: E731
+        caplog, lambda: run_validation(spark, docs, catalog=catalog, **kw)
     )
+    rowlocal, shape = run()
+    assert shape == "referential: row-local"
+    monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", catalog.count() - 1)
+    probe, shape = run()
+    present, distinct = map(
+        int, re.fullmatch(
+            r"referential: probe-side \((\d+) of (\d+) refs\)", shape
+        ).groups()
+    )
+    assert 0 < present < distinct
+    monkeypatch.setattr(R, "PROBE_MAX_DISTINCT_REFS", 0)
+    legacy, shape = run(catalog_size_hint=10_000_000)
+    assert shape == "referential: salted+bloom"
 
     def viol_key(res):
         return sorted(
@@ -508,12 +545,13 @@ def test_rowlocal_and_join_referential_paths_agree(spark, docs, catalog):
             for r in res.violations.collect()
         )
 
-    assert viol_key(rowlocal) == viol_key(legacy)
+    assert any(r[0] == "referential" for r in viol_key(rowlocal))
+    assert viol_key(rowlocal) == viol_key(probe) == viol_key(legacy)
     verd = lambda res: sorted(
         (r.check, str(r.partition_id), str(r.n_violations), r.verdict)
         for r in res.verdicts.collect()
     )
-    assert verd(rowlocal) == verd(legacy)
+    assert verd(rowlocal) == verd(probe) == verd(legacy)
 
 
 def test_exemplar_cap_exact_verdicts_smaller_sink(spark, docs, catalog):

@@ -337,25 +337,20 @@ def test_segmented_contract_one_grouped_agg_pass(spark):
     assert "ts" not in rs[0].replace("struct", "") and "session_id" not in rs[0]
 
 
-def _parquet_files_read(spark, after_eid: int) -> tuple[int, int]:
-    """(max executionId seen, Σ 'number of files read' over parquet
-    scan nodes of executions with id > after_eid) from the SQL status
-    store — counts files ACTUALLY read (a cache hit's FileScan subtree
-    reports 0), so files_read / n_files_on_disk is the executed scan
-    count. Watermarking by executionId (monotonic) keeps the window
-    correct under the store's retained-executions eviction in a long
-    suite run; node names are used (not paths — plan-graph descs
-    truncate long pytest tmp paths), so the caller must ensure the
-    docs table is the only parquet source in the window."""
+def _executed_nodes(spark, after_eid: int) -> tuple[int, list]:
+    """(max executionId seen, [(node name, node desc, {metric: value})]
+    for every plan node of the executions with id > after_eid) from the
+    SQL status store. Watermarking by executionId (monotonic) keeps the
+    window correct under the store's retained-executions eviction in a
+    long suite run."""
     # the SQL status store updates from the async listener bus — drain
-    # it so every execution's metrics are finalized before counting
+    # it so every execution's metrics are finalized before reading
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     ss = spark._jsparkSession.sharedState().statusStore()
     lst = ss.executionsList()
-    max_eid, files = after_eid, 0
+    max_eid, nodes = after_eid, []
     for i in range(lst.size()):
-        e = lst.apply(i)
-        eid = e.executionId()
+        eid = lst.apply(i).executionId()
         max_eid = max(max_eid, eid)
         if eid <= after_eid:
             continue
@@ -363,16 +358,33 @@ def _parquet_files_read(spark, after_eid: int) -> tuple[int, int]:
         nit = ss.planGraph(eid).allNodes().iterator()
         while nit.hasNext():
             n = nit.next()
-            if "Scan parquet" not in n.name():
-                continue
+            metrics = {}
             mit = n.metrics().iterator()
             while mit.hasNext():
                 m = mit.next()
-                if m.name() == "number of files read":
-                    v = vals.get(m.accumulatorId())
-                    if v.isDefined():
-                        files += int(str(v.get()).replace(",", ""))
-    return max_eid, files
+                v = vals.get(m.accumulatorId())
+                if v.isDefined():
+                    metrics[m.name()] = str(v.get())
+            nodes.append((n.name(), n.desc(), metrics))
+    return max_eid, nodes
+
+
+def _files_read(node) -> int:
+    return int(node[2].get("number of files read", "0").replace(",", ""))
+
+
+def _parquet_files_read(spark, after_eid: int) -> tuple[int, int]:
+    """(max executionId seen, Σ 'number of files read' over parquet
+    scan nodes of executions with id > after_eid) — counts files
+    ACTUALLY read (a cache hit's FileScan subtree reports 0), so
+    files_read / n_files_on_disk is the executed scan count. Node names
+    are used (not paths — plan-graph descs truncate long pytest tmp
+    paths), so the caller must ensure the docs table is the only parquet
+    source in the window."""
+    max_eid, nodes = _executed_nodes(spark, after_eid)
+    return max_eid, sum(
+        _files_read(n) for n in nodes if "Scan parquet" in n[0]
+    )
 
 
 def _marker_job_id(spark) -> int:
@@ -487,30 +499,35 @@ def test_validation_pass_scan_budget(spark, tmp_path):
 
 # Spark jobs of one stream micro-batch over the fixture docs in a single
 # trigger, stream setup (catalog size, key collect) included, per
-# referential shape: the row-local UDF, and the salted anti-join of a
-# catalog beyond the broadcast cap. The micro-batch runs the batch
-# pass's size guards: the dup keys (and, salted, the orphan aggregate)
-# are cached and counted before the wide write decides whether to
-# broadcast them — without the guards the same micro-batch ran 14 and
-# 17 jobs.
-STREAM_BATCH_JOBS = {"udf": 17, "salted": 23}
+# referential shape (operators/referential.py): the row-local UDF; the
+# probe-side UDF of a catalog beyond the broadcast cap, whose key set is
+# the catalog keys the batch's distinct refs name; and the salted
+# anti-join fallback, which also pays the probe-side guard's count of
+# the batch's distinct refs. The micro-batch runs the batch pass's size
+# guards: the dup keys (and, salted, the orphan aggregate) are cached
+# and counted before the wide write decides whether to broadcast them.
+STREAM_BATCH_JOBS = {"udf": 17, "probe": 20, "salted": 24}
 
 
-@pytest.mark.parametrize("shape", ["udf", "salted"])
+@pytest.mark.parametrize("shape", ["udf", "probe", "salted"])
 def test_stream_microbatch_job_count(spark, docs, catalog, tmp_path,
                                      monkeypatch, shape):
     """A micro-batch runs the batch pass's validation core: its Spark
     job count is pinned like the resumed pass's, so per-trigger work
     that drifts back in (a catalog re-scan, a second wide scan) fails
-    here."""
+    here. The probe-side micro-batch's executed plans hold no
+    sort-merge join, and read the catalog's key column exactly once,
+    under a broadcast left-semi join."""
+    import anomalydetection_spark.operators.referential as R
     from anomalydetection_spark.streaming.incremental import stream_validate
 
-    if shape == "salted":
-        import anomalydetection_spark.operators.referential as R
-
+    if shape != "udf":
         monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", 1000)
+    if shape == "salted":
+        monkeypatch.setattr(R, "PROBE_MAX_DISTINCT_REFS", 0)
     inp = str(tmp_path / "in")
     docs.coalesce(1).write.parquet(inp)
+    seen, _ = _executed_nodes(spark, 0)
     before = _marker_job_id(spark)
     q = stream_validate(
         spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"),
@@ -524,3 +541,17 @@ def test_stream_microbatch_job_count(spark, docs, catalog, tmp_path,
         f"{shape} micro-batch ran {n_jobs} Spark jobs "
         f"(pinned {STREAM_BATCH_JOBS[shape]})"
     )
+    if shape != "probe":
+        return
+    _, nodes = _executed_nodes(spark, seen)
+    assert not [n for n in nodes if "SortMergeJoin" in n[0]]
+    key_scans = [
+        n for n in nodes
+        if "Scan parquet" in n[0]
+        and "ReadSchema: struct<media_ref:string>" in n[1]
+        and _files_read(n)
+    ]
+    catalog_files = len(catalog.inputFiles())
+    assert sum(map(_files_read, key_scans)) == catalog_files
+    assert [n for n in nodes if n[0] == "BroadcastHashJoin"
+            and "LeftSemi" in n[1]]

@@ -57,6 +57,45 @@ def test_stream_validate_drains_backlog(spark, docs, catalog, tmp_path):
     assert v3.select("batch_id").distinct().count() > batches_1
 
 
+def test_stream_probe_side_matches_rowlocal(
+    spark, docs, catalog, tmp_path, monkeypatch, caplog
+):
+    """A micro-batch against a catalog beyond the broadcast cap takes
+    the probe-side shape and writes the same violation rows (spans
+    included) and verdict rows as the same micro-batch under the
+    row-local shape."""
+    import logging
+
+    import anomalydetection_spark.operators.referential as R
+
+    inp = str(tmp_path / "in")
+    docs.coalesce(1).write.parquet(inp)
+
+    def run(name):
+        out = str(tmp_path / name)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=R.__name__):
+            stream_validate(
+                spark, inp, out, str(tmp_path / f"ck_{name}"),
+                catalog=catalog, emit_violations=True,
+            ).awaitTermination()
+        (shape,) = [
+            r.getMessage() for r in caplog.records if r.name == R.__name__
+        ]
+        rows = lambda sub: sorted(  # noqa: E731
+            map(str, spark.read.parquet(os.path.join(out, sub)).collect())
+        )
+        return shape, rows("violations"), rows("verdicts")
+
+    shape, *rowlocal = run("rowlocal")
+    assert shape == "referential: row-local"
+    monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", catalog.count() - 1)
+    shape, *probe = run("probe")
+    assert shape.startswith("referential: probe-side (")
+    assert rowlocal[0] and rowlocal[1]
+    assert probe == rowlocal
+
+
 def test_streaming_checkpoint_files_exist(spark, docs, catalog, tmp_path):
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")

@@ -65,35 +65,49 @@ def test_commit_is_atomically_visible(table_io):
 
 
 def test_partial_write_is_invisible_to_readers(table_io):
-    """Crash debris (temp pointer files, an orphaned snapshot written
-    without the pointer flip) must not change what readers see."""
+    """Crash debris (a temp pointer file never renamed, a snapshot
+    payload torn mid-write and never published) must not change what
+    readers see, nor block the next commit. A snapshot is published
+    only whole: the Manifest hard-links its fsynced temp payload to the
+    version name, and from then on it is committed whatever happens to
+    the CURRENT hint (tests/test_manifest.py's crash tests)."""
     table_io.commit_validated(_recs(1), "r1", NOW)
     before = table_io.load()
     # crash case A: temp CURRENT pointer never renamed
     with open(os.path.join(table_io.path, "_tmpcur_deadbeef"), "w") as f:
         f.write("v99.json")
-    # crash case B: a snapshot file written but the pointer flip never
-    # happened (crash between the two commit steps)
-    with open(os.path.join(table_io.path, "v2.json"), "w") as f:
-        json.dump({"version": 2, "partitions": {"9": {}}}, f)
+    # crash case B: the next snapshot's payload torn mid-write, before
+    # it was published
+    with open(os.path.join(table_io.path, "_tmp_deadbeef"), "w") as f:
+        f.write(json.dumps({"version": 2, "partitions": {"9": {}}})[:20])
     assert table_io.load() == before
     assert table_io.current_version() == 1
+    assert table_io.commit_validated(_recs(2), "r2", NOW) == 2
+    assert set(table_io.load()) == {"1", "2"}
 
 
-def test_conflicting_commit_from_same_base_is_refused(table_io):
-    """Compare-and-swap: when the target snapshot already exists (a
-    concurrent writer won the race, or a crashed run left an orphan),
-    the commit must fail loudly instead of clobbering — the Iceberg
-    commit shape."""
+def test_conflicting_commit_from_same_base_is_refused(table_io, monkeypatch):
+    """Compare-and-swap: when a concurrent writer publishes the target
+    snapshot after this commit read its base, the commit must fail
+    loudly instead of clobbering — the Iceberg commit shape."""
     table_io.commit_validated(_recs(1), "r1", NOW)
-    # orphaned target version from a racer/crash
-    with open(os.path.join(table_io.path, "v2.json"), "w") as f:
-        json.dump({"version": 2, "partitions": {}}, f)
+    racer = type(table_io)(table_io.path)
+    load = type(table_io).load
+
+    def load_then_racer_commits(self, version=None):
+        state = load(self, version)
+        if self is table_io:
+            racer.commit_validated(_recs(3), "r3", NOW)
+        return state
+
+    monkeypatch.setattr(type(table_io), "load", load_then_racer_commits)
     with pytest.raises(RuntimeError, match="concurrent manifest commit"):
         table_io.commit_validated(_recs(2), "r2", NOW)
-    # the loser's failed commit changed nothing visible
-    assert table_io.current_version() == 1
-    assert set(table_io.load()) == {"1"}
+    monkeypatch.undo()
+    # the loser's failed commit changed nothing visible: the racer's
+    # snapshot is current
+    assert table_io.current_version() == 2
+    assert set(table_io.load()) == {"1", "3"}
 
 
 def test_recommit_is_idempotent_for_resume(table_io):
