@@ -54,9 +54,9 @@ class ValidationConfig:
     # engine output that scales with table size (a 1% violation rate at
     # 10^12 docs is 10^10 full-width rows). When set, at most this many
     # violation rows per (check, partition) are materialized as
-    # exemplars; per-partition verdict COUNTS stay exact (window
-    # aggregates carried on the exemplar rows — plans/pipeline.py::
-    # _cap_violations). None = emit every violation row (reference
+    # exemplars; per-partition verdict COUNTS stay exact (they come from
+    # the narrow pass before the write — plans/pipeline.py::
+    # validate_scope). None = emit every violation row (reference
     # parity default; K1 semantics).
     max_violation_exemplars: int | None = None
 

@@ -8,24 +8,45 @@ invariant); per-partition verdicts come from the pipeline's count grid.
 ``ReferentialCheck`` is the one builder of the machinery below for the
 batch pass, the pre-flight and the stream.
 
-Scale design — the check is sized by the smaller of its two sides:
+The check's input is a scope's exploded refs (``ref_pairs``): one
+(doc_id, partition_id, row_fp, media_ref) pair per distinct non-null
+ref of a row, where ``row_fp = xxhash64(spans.media_ref)`` keeps
+duplicate doc_ids with differing refs apart. The orphan pairs are the
+pairs a left-anti join finds no catalog key for, grouped back per
+physical row — on the driver by the validation pass
+(plans/pipeline.py), by ``orphan_groups`` in Spark beyond the broadcast
+cap and in the pre-flight.
+
+Scale design — the check stays in the JVM, and its broadcast side is
+the smaller of the two:
 1. Row-local (catalog within ``BROADCAST_MAX_CATALOG_ROWS``): the
-   catalog's key set is collected once, broadcast, and probed by a
-   vectorized Arrow UDF inside the wide violations scan. No shuffle, no
-   exploded-refs pass.
+   catalog's key column is the broadcast build side, probed map-side by
+   the pairs. No shuffle of either side before the grouping.
 2. Probe-side (bigger catalog, the scope's distinct refs within
    ``PROBE_MAX_DISTINCT_REFS``): the scope's distinct refs (the hot ref
    collapses in the map-side distinct) are broadcast, the catalog key
    column is scanned once under a left-semi join against them, and the
-   present keys — at most the scope's distinct refs — feed the same
-   row-local UDF. The catalog is scanned, never shuffled.
-3. Salted fallback (both sides too big to broadcast): ``explode`` spans
-   → (doc, ref) pairs → salted sort-merge left-anti join against the
-   catalog replicated ``salt_buckets`` ways (a hot media_ref spreads
-   over reducers; AQE skew-join splitting as backstop), with an
-   explicit broadcast-Bloom prefilter (functions/bloom.py) above
-   ``BLOOM_MIN_CATALOG_ROWS``: Bloom negatives are definite orphans,
-   and only the positives take the exact join.
+   present keys — at most the scope's distinct refs — are the build
+   side. The catalog is scanned, never shuffled.
+3. Salted fallback (both sides too big to broadcast): a salted
+   sort-merge left-anti join against the catalog replicated
+   ``salt_buckets`` ways (a hot media_ref spreads over reducers; AQE
+   skew-join splitting as backstop), with an explicit broadcast-Bloom
+   prefilter (functions/bloom.py) above ``BLOOM_MIN_CATALOG_ROWS``:
+   Bloom negatives are definite orphans, and only the positives take
+   the exact join.
+
+No Python UDF on the common shapes. An earlier row-local shape probed a
+broadcast key array from a vectorized Arrow UDF inside the wide scan.
+Its cost was fixed per task, not per row: each Python worker task ran
+``importlib.invalidate_caches()``, which re-reads the directory of every
+zipimporter on the path (pyspark.zip's 1,328 entries, the spark-core
+jar's 5,359), 0.14-0.25 s per task on a 4-core host. A no-op Arrow UDF
+turned a 4-task write from 0.18 into 0.49 s, and 1/8/32 tasks cost
+0.36/0.67/2.09 s against 0.08/0.10/0.17 s without it. The broadcast
+anti-join does the same membership test with no per-task cost, so a
+Python UDF must not return to this path; the Bloom prefilter, beyond
+5M catalog rows, is the one that remains.
 """
 
 from __future__ import annotations
@@ -34,40 +55,34 @@ import logging
 from functools import cached_property
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bloom import build_bloom, might_contain_udf
 
 log = logging.getLogger(__name__)
 
+# A row's refs and its fingerprint, as SQL over ``spans`` — the narrow
+# projection of plans/pipeline.py carries both, and the wide scan
+# recomputes ``row_fp`` to attach the orphan groups.
+REFS_SQL = "spans.media_ref"
+ROW_FP_SQL = f"xxhash64({REFS_SQL})"
 
-def _span_refs(docs: DataFrame, row_fingerprint: bool = False) -> DataFrame:
-    """(doc_id, partition_id, media_ref ≠ null) pairs, one per span.
 
-    NOT deduplicated here: dedup before the anti-join would shuffle
-    every exploded pair, while a broadcast anti-join consumes the raw
-    pairs shuffle-free — survivors (the orphans) are the tiny set, so
-    dedup happens after the join (see ``orphan_refs``).
-
-    ``row_fingerprint``: also emit ``row_fp = xxhash64(spans)`` so a
-    downstream per-doc aggregate can stay per-PHYSICAL-row when the
-    table contains duplicate doc_ids with differing span sequences
-    (the pipeline's join path uses this to match the row-local path's
-    semantics: a violation row's orphan list reflects that row's own
-    spans, never a same-id sibling's)."""
-    cols = ["doc_id", "partition_id"]
-    base = docs
-    if row_fingerprint:
-        base = base.withColumn("row_fp", F.xxhash64("spans"))
-        cols.append("row_fp")
-    return (
-        base.select(*cols, F.explode("spans").alias("s"))
-        .select(*cols, F.col("s.media_ref").alias("media_ref"))
-        .filter(F.col("media_ref").isNotNull())
-    )
+def ref_pairs(
+    rows: DataFrame, refs: str = REFS_SQL, row_fp: str = ROW_FP_SQL
+) -> DataFrame:
+    """(doc_id, partition_id, row_fp, media_ref): one pair per distinct
+    non-null ref of each row. ``refs``/``row_fp`` are SQL over ``rows``
+    (a documents frame by default, or a projection already carrying
+    them as columns). Row-local — the pairs feed a broadcast anti-join
+    map-side; per-row dedup here keeps each orphan pair once per row."""
+    return rows.selectExpr(
+        "doc_id",
+        "partition_id",
+        f"{row_fp} AS row_fp",
+        f"explode(array_distinct({refs})) AS media_ref",
+    ).filter("media_ref IS NOT NULL")
 
 
 BLOOM_MIN_CATALOG_ROWS = 5_000_000
@@ -89,10 +104,12 @@ PROBE_MAX_DISTINCT_REFS = BROADCAST_MAX_CATALOG_ROWS
 
 
 def collect_catalog_keys(catalog: DataFrame, col: str = "media_ref"):
-    """Distinct catalog keys as a sorted numpy array (for the row-local
-    membership path). Only call when the catalog is known to be at most
+    """Distinct catalog keys as a sorted numpy array, collected as Arrow.
+    Only call when the catalog is known to be at most
     ``BROADCAST_MAX_CATALOG_ROWS`` — the same ceiling that gates the
-    forced broadcast join, for the same serialized-size reasons."""
+    forced broadcast join, for the same serialized-size reasons. The
+    validation pass never collects the catalog: its row-local shape
+    broadcasts the key column inside the anti-join."""
     tbl = (
         catalog.select(col)
         .filter(F.col(col).isNotNull())
@@ -103,97 +120,48 @@ def collect_catalog_keys(catalog: DataFrame, col: str = "media_ref"):
     return np.sort(keys.astype(object, copy=False))
 
 
-def orphan_refs_rowlocal_udf(spark: SparkSession, keys: np.ndarray):
-    """Vectorized membership check: array<string> refs per row →
-    sorted array of refs NOT present in the broadcast catalog key set.
-
-    This is the shuffle-free referential path: for a broadcastable
-    catalog the check is row-local, so the wide validation scan never
-    shuffles and there is no separate exploded-refs pre-scan. An Arrow
-    UDF working directly on the ListArray buffers (flatten → hashed
-    ``is_in`` → offset rebuild) — zero per-row Python; only the orphan
-    survivors (~violation-rate fraction of values) touch an object
-    sort. (A pandas_udf draft of this was ~5x slower than the join it
-    replaced: Arrow→object conversion plus per-row list rebuilds cost
-    more than the shuffle. ListArray-level is the only shape that
-    wins.)
-    """
-    from pyspark.sql.functions import arrow_udf
-
-    bkeys = spark.sparkContext.broadcast(np.asarray(keys, dtype=object))
-    # one-slot Arrow-array cache, scoped to THIS udf's closure: built on
-    # the first batch after each (de)serialization of the closure (once
-    # per task), reused across the task's Arrow batches. A module-level
-    # cache keyed by id(keys) is unsound — Python reuses ids after GC,
-    # so a second broadcast allocated at a freed array's address would
-    # silently hit the first broadcast's catalog.
-    cat_slot: list = []
-
-    @arrow_udf("array<string>")
-    def _orphans(refs: pa.Array) -> pa.Array:
-        if not cat_slot:
-            cat_slot.append(pa.array(bkeys.value, type=pa.string()))
-        return _orphan_kernel(refs, bkeys.value, cat=cat_slot[0])
-
-    return _orphans
-
-
-def _orphan_kernel(refs, keys: np.ndarray, cat: "pa.Array | None" = None):
-    """Pure pyarrow kernel behind the row-local UDF (property-tested in
-    tests/test_properties.py against a per-row Python reference):
-    list<string> refs per row → SORTED DISTINCT non-null refs not in
-    ``keys``. Null elements and duplicate refs are handled HERE (C
-    level) rather than by JVM filter()/array_distinct() passes — the
-    interpreted higher-order expressions cost more wall time per scan
-    than this whole kernel. ``cat`` is the optional pre-built Arrow
-    value_set for ``keys`` (the UDF closure builds it once per task and
-    passes it in; rebuilding a 50k+ value array object-by-object every
-    batch was pure overhead, and a module-level id(keys)-keyed cache
-    was UNSOUND — ids are reused after GC, so a different key set could
-    silently hit a stale catalog)."""
-    if cat is None:
-        cat = pa.array(keys, type=pa.string())
-    if isinstance(refs, pa.ChunkedArray):
-        refs = refs.combine_chunks()
-    n = len(refs)
-    # per-slot value counts (null slot -> 0), C-level
-    counts = np.asarray(pc.list_value_length(refs).fill_null(0))
-    flat = pc.list_flatten(refs)  # skips null SLOTS, keeps null values
-    orphan_mask = np.asarray(
-        pc.invert(pc.is_in(flat, value_set=cat)).fill_null(True)
-    ) & np.asarray(pc.is_valid(flat))
-    row_ids = np.repeat(np.arange(n, dtype=np.int64), counts)
-    o_rows = row_ids[orphan_mask]
-    # object conversion AFTER the mask: only orphan survivors (a
-    # violation-rate fraction) are materialized as python strings
-    o_vals = pc.filter(flat, pa.array(orphan_mask)).to_numpy(
-        zero_copy_only=False
-    )
-    # sort_array semantics within each row (tiny survivor set), then
-    # drop within-row duplicates (array_distinct semantics)
-    order = np.lexsort((o_vals, o_rows))
-    o_rows = o_rows[order]
-    o_vals = o_vals[order]
-    if len(o_vals):
-        keep = np.ones(len(o_vals), dtype=bool)
-        keep[1:] = (o_rows[1:] != o_rows[:-1]) | (o_vals[1:] != o_vals[:-1])
-        o_rows = o_rows[keep]
-        o_vals = o_vals[keep]
-    new_offsets = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum(np.bincount(o_rows, minlength=n), out=new_offsets[1:])
-    return pa.ListArray.from_arrays(
-        pa.array(new_offsets, type=pa.int32()),
-        pa.array(o_vals, type=pa.string()),
-    )
-
-
-def span_refs_column() -> Column:
-    """Each row's span media_refs (JVM-side projection feeding the
-    row-local membership UDF). ONE interpreted higher-order pass —
-    null elements and duplicates ride through to the Arrow kernel,
-    which drops/dedups them at C speed (a filter() + array_distinct()
-    here measured ~4s of wall per 16M-doc scan at local[32])."""
-    return F.transform("spans", lambda s: s["media_ref"])
+def _anti_join(
+    pairs: DataFrame,
+    catalog: DataFrame,
+    n: int,
+    salt_buckets: int = 8,
+    bloom: tuple | None = None,
+) -> DataFrame:
+    """The ``pairs`` whose media_ref is missing from ``catalog`` (``n``
+    rows), behind the Bloom prefilter ``bloom`` when given: its
+    negatives are definite orphans, and only its positives take the
+    exact join. Within the broadcast cap that join is map-side, against
+    the broadcast key column (no reducer exists, so no skew to salt);
+    beyond it, a salted sort-merge anti-join — the catalog side is
+    replicated ``salt_buckets`` ways so a hot media_ref spreads across
+    reducers."""
+    definite_orphans = None
+    if bloom is not None:
+        mc = might_contain_udf(pairs.sparkSession, *bloom)
+        pairs = pairs.withColumn("_maybe", mc(F.col("media_ref")))
+        definite_orphans = pairs.filter(~F.col("_maybe")).drop("_maybe")
+        pairs = pairs.filter(F.col("_maybe")).drop("_maybe")
+    if n <= BROADCAST_MAX_CATALOG_ROWS:
+        out = pairs.join(
+            F.broadcast(catalog.select("media_ref")), "media_ref", "left_anti"
+        )
+    else:
+        salted_left = pairs.withColumn(
+            "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
+        )
+        salted_right = catalog.select("media_ref").crossJoin(
+            F.broadcast(
+                pairs.sparkSession.range(salt_buckets).select(
+                    F.col("id").cast("int").alias("_salt")
+                )
+            )
+        )
+        out = salted_left.join(
+            salted_right, ["media_ref", "_salt"], "left_anti"
+        ).drop("_salt")
+    if definite_orphans is not None:
+        out = definite_orphans.unionByName(out)
+    return out
 
 
 def orphan_refs(
@@ -209,96 +177,61 @@ def orphan_refs(
 ) -> DataFrame:
     """(doc_id, partition_id, media_ref) pairs whose ref is missing from
     the catalog (plus ``row_fp`` when ``row_fingerprint`` — see
-    ``_span_refs``).
+    ``ref_pairs``), each once per doc.
 
     ``use_bloom=None`` (auto): build the explicit Bloom prefilter only
-    when the catalog exceeds ``BLOOM_MIN_CATALOG_ROWS`` — below that the
-    anti-join side broadcasts outright and the Bloom build (a catalog
-    pass + driver merge + Python prefilter stage) is pure overhead.
-
-    ``bloom``: a prebuilt ``(bits, k, m)`` from ``build_bloom`` — pass
-    this when the same catalog is probed repeatedly (streaming
-    micro-batches, poll loops) so the build cost is paid once, not per
-    call."""
-    refs = _span_refs(docs, row_fingerprint=row_fingerprint)
-
-    # Catalog size drives BOTH the bloom and the join-strategy choice,
-    # so resolve it independently of use_bloom (an explicit
-    # use_bloom=False previously left n unknown and forced even tiny
-    # catalogs down the salted sort-merge path). Callers that know the
-    # size (e.g. streaming micro-batches against a fixed catalog) pass
-    # catalog_size_hint and skip the count() action entirely.
+    when the catalog exceeds ``BLOOM_MIN_CATALOG_ROWS``. ``bloom``: a
+    prebuilt ``(bits, k, m)`` from ``build_bloom``, so a catalog probed
+    repeatedly pays the build once. ``catalog_size_hint`` skips the
+    catalog ``count()``."""
     n = catalog_size_hint if catalog_size_hint is not None else catalog.count()
-    if bloom is not None:
-        use_bloom = True
-    elif use_bloom is None:
-        use_bloom = n > BLOOM_MIN_CATALOG_ROWS
-
-    if use_bloom and spark is not None:
-        bits, k, m = (
-            bloom if bloom is not None else build_bloom(catalog, "media_ref", n, fpp)
-        )
-        mc = might_contain_udf(spark, bits, k, m)
-        refs = refs.withColumn("_maybe", mc(F.col("media_ref")))
-        definite_orphans = refs.filter(~F.col("_maybe")).drop("_maybe")
-        # Bloom positives may be false positives → exact check on the
-        # (tiny) surviving set only.
-        candidates = refs.filter(F.col("_maybe")).drop("_maybe")
-    else:
-        definite_orphans = None
-        candidates = refs
-
-    # Exact anti-join. Broadcastable catalog → shuffle-free probe of the
-    # raw span pairs (no reducer exists, so no skew to salt). Oversized
-    # catalog → salted sort-merge anti-join: replicate the catalog side
-    # salt_buckets ways so a hot media_ref spreads across reducers.
-    broadcastable = n <= BROADCAST_MAX_CATALOG_ROWS
-    if broadcastable:
-        fp_orphans = candidates.join(
-            F.broadcast(catalog.select("media_ref")), "media_ref", "left_anti"
-        )
-    else:
-        salted_left = candidates.withColumn(
-            "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-        )
-        salted_right = catalog.select("media_ref").crossJoin(
-            F.broadcast(
-                candidates.sparkSession.range(salt_buckets).select(
-                    F.col("id").cast("int").alias("_salt")
-                )
-            )
-        )
-        fp_orphans = salted_left.join(
-            salted_right, ["media_ref", "_salt"], "left_anti"
-        ).drop("_salt")
-
-    out = fp_orphans
-    if definite_orphans is not None:
-        out = definite_orphans.unionByName(fp_orphans)
+    if bloom is None and spark is not None and (
+        use_bloom or (use_bloom is None and n > BLOOM_MIN_CATALOG_ROWS)
+    ):
+        bloom = build_bloom(catalog, "media_ref", n, fpp)
+    pairs = ref_pairs(docs)
+    if not row_fingerprint:
+        pairs = pairs.drop("row_fp")
     # dedupe AFTER the join: orphan survivors are the tiny set
     dedup_cols = ["doc_id", "media_ref"] + (
         ["row_fp"] if row_fingerprint else []
     )
-    return out.dropDuplicates(dedup_cols)
+    return _anti_join(pairs, catalog, n, salt_buckets, bloom).dropDuplicates(
+        dedup_cols
+    )
+
+
+def orphan_groups(orphans: DataFrame) -> DataFrame:
+    """Orphan pairs → one row per (doc_id, partition_id, row_fp) group:
+    ``orphan_refs`` (sorted distinct) and ``n_rows``, the physical rows
+    of the group. Each row contributes one pair per distinct orphan ref,
+    so a group's pair count is n_rows x size(orphan_refs), exactly."""
+    return (
+        orphans.groupBy("doc_id", "partition_id", "row_fp")
+        .agg(
+            F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
+            F.count("*").alias("_pairs"),
+        )
+        .selectExpr(
+            "doc_id",
+            "partition_id",
+            "row_fp",
+            "orphan_refs",
+            "_pairs div size(orphan_refs) AS n_rows",
+        )
+    )
 
 
 class ReferentialCheck:
     """The referential machinery for one catalog, built once and reused
     by every pass, pre-flight or micro-batch that probes it.
-    ``udf_for(scope)`` picks the shape (module docstring):
+    ``orphans(pairs)`` picks the shape (module docstring) and logs it at
+    INFO: ``row-local``, ``probe-side (<present> of <distinct> refs)``
+    or ``salted``/``salted+bloom``.
 
-    * ``udf`` — catalog within ``BROADCAST_MAX_CATALOG_ROWS``: the key
-      set is collected and broadcast once, and the check is the
-      row-local membership UDF inside the wide scan;
-    * probe-side — bigger catalog, few enough distinct refs in the
-      scope: the same UDF over only the catalog keys the scope names;
-    * ``None`` — both too big: ``orphan_doc`` runs the salted
-      anti-join, with a Bloom prefilter built once (``bloom``) above
-      ``BLOOM_MIN_CATALOG_ROWS``.
-
-    The catalog work (size, key collect, Bloom build) runs on first use,
-    so a pass can overlap it with its other narrow scans; ``build()``
-    forces it up front (a stream does, so no micro-batch pays it)."""
+    The catalog work (size, Bloom build) runs on first use, so a pass
+    can overlap it with its other scans; ``build()`` forces it up front
+    (a stream does, so no micro-batch pays it)."""
 
     def __init__(
         self,
@@ -317,80 +250,62 @@ class ReferentialCheck:
         return self.catalog.count()
 
     @cached_property
-    def udf(self):
-        if self.n > BROADCAST_MAX_CATALOG_ROWS:
-            return None
-        return orphan_refs_rowlocal_udf(
-            self.spark, collect_catalog_keys(self.catalog)
-        )
-
-    @cached_property
     def bloom(self) -> tuple | None:
         if self.n <= BLOOM_MIN_CATALOG_ROWS:
             return None
         return build_bloom(self.catalog, "media_ref", self.n)
 
-    def udf_for(self, scope: DataFrame):
-        """The row-local membership UDF that checks ``scope``, or None
-        when only the salted join can (logged at INFO either way)."""
+    def orphans(self, pairs: DataFrame, most: int | None = None) -> DataFrame:
+        """The ``ref_pairs`` rows whose media_ref the catalog lacks;
+        ``most``, when known, bounds the number of pairs."""
         if self.n <= BROADCAST_MAX_CATALOG_ROWS:
             log.info("referential: row-local")
-            return self.udf
+            return _anti_join(pairs, self.catalog, self.n)
         # one bounded collect: one row past the ceiling tells "too many"
         # without a separate count, and the refs go back to the JVM as an
-        # Arrow-backed local relation, so their broadcast starts no job
-        refs = (
-            _span_refs(scope)
-            .select("media_ref")
-            .distinct()
-            .limit(PROBE_MAX_DISTINCT_REFS + 1)
-            .toArrow()
-        )
+        # Arrow-backed local relation, so their broadcast starts no job.
+        # The root limit costs a single-partition exchange, so a scope
+        # whose pairs cannot exceed the ceiling skips it.
+        refs = pairs.select("media_ref").distinct()
+        if most is None or most > PROBE_MAX_DISTINCT_REFS:
+            refs = refs.limit(PROBE_MAX_DISTINCT_REFS + 1)
+        refs = refs.toArrow()
         if refs.num_rows > PROBE_MAX_DISTINCT_REFS:
             log.info(
                 "referential: %s",
                 "salted+bloom" if self.bloom is not None else "salted",
             )
-            return None
-        keys = collect_catalog_keys(
-            self.catalog.select("media_ref").join(
+            return _anti_join(
+                pairs, self.catalog, self.n, self.salt_buckets, self.bloom
+            )
+        present = (
+            self.catalog.select("media_ref")
+            .join(
                 F.broadcast(self.spark.createDataFrame(refs)),
                 "media_ref",
                 "left_semi",
             )
+            .distinct()
+            .toArrow()
         )
         log.info(
             "referential: probe-side (%d of %d refs)",
-            len(keys),
+            present.num_rows,
             refs.num_rows,
         )
-        return orphan_refs_rowlocal_udf(self.spark, keys)
+        return pairs.join(
+            F.broadcast(self.spark.createDataFrame(present)),
+            "media_ref",
+            "left_anti",
+        )
 
     def build(self) -> "ReferentialCheck":
         """Run the one-time catalog work now instead of on first use."""
-        if self.udf is None:
+        if self.n > BROADCAST_MAX_CATALOG_ROWS:
             _ = self.bloom
         return self
 
     def orphan_doc(self, docs: DataFrame) -> DataFrame:
-        """Per-physical-row orphan aggregate (doc_id, partition_id,
-        row_fp, orphan_refs, n_orphans) from the salted anti-join —
-        ``row_fp`` keeps duplicate doc_ids with differing spans apart,
-        matching the row-local path's semantics exactly."""
-        return (
-            orphan_refs(
-                docs,
-                self.catalog,
-                self.spark,
-                use_bloom=self.bloom is not None,
-                catalog_size_hint=self.n,
-                salt_buckets=self.salt_buckets,
-                bloom=self.bloom,
-                row_fingerprint=True,
-            )
-            .groupBy("doc_id", "partition_id", "row_fp")
-            .agg(
-                F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
-                F.count("*").alias("n_orphans"),
-            )
-        )
+        """``orphan_groups`` of ``docs``: (doc_id, partition_id, row_fp,
+        orphan_refs, n_rows) per physical-row group with an orphan."""
+        return orphan_groups(self.orphans(ref_pairs(docs)))

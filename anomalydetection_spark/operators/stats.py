@@ -21,85 +21,88 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MONOTONE_EXPR = (
-    "size(spans) <= 1 OR "
-    "forall(transform(sequence(1, size(spans)-1),"
-    " i -> spans[i].offset > spans[i-1].offset), x -> x)"
-)
 
-
-def incoherent_span_filter(s):
-    """kind<->media_ref coherence predicate for one span struct: a text
-    span must not carry a media_ref, a non-text (media) span must carry
-    one; null-kind spans are excluded (flagged by null_span_kind).
-    Interleaved-payload rule — no analog in the reference's flat log
-    lines; the north_star's text+media document shape requires it."""
-    return s["kind"].isNotNull() & (
-        ((s["kind"] == "text") & s["media_ref"].isNotNull())
-        | ((s["kind"] != "text") & s["media_ref"].isNull())
+def span_codes_sql(bins: int = 64, bin_width: int = 8) -> str:
+    """Each span's (kind, bucket) histogram code, as SQL over ``spans``:
+    kind (``__null__`` for a null kind or span) and bucket =
+    min(text length // bin_width, bins-1), a bounded cardinality like
+    the reference's bounded cluster tree (drain3.ini:74-77)."""
+    return (
+        "transform(spans, s -> named_struct("
+        "'kind', coalesce(s.kind, '__null__'),"
+        f" 'bucket', CAST(least(floor(length(coalesce(s.text, ''))"
+        f" / {bin_width}), {bins - 1}) AS INT)))"
     )
 
 
 def length_histogram(
     docs: DataFrame, bins: int = 64, bin_width: int = 8, by_partition: bool = False
 ) -> DataFrame:
-    """Equi-width text-length histogram per span kind (drift input).
-
-    Bucket = min(len // bin_width, bins-1); bounded cardinality like the
-    reference's bounded cluster tree (drain3.ini:74-77).
-    """
+    """Equi-width text-length histogram per span kind (drift input):
+    (kind, bucket, count) rows, or per partition with ``by_partition``."""
     keys = (["partition_id"] if by_partition else []) + ["kind", "bucket"]
     return (
-        docs.select("partition_id", F.explode("spans").alias("s"))
-        .select(
-            "partition_id",
-            F.coalesce(F.col("s.kind"), F.lit("__null__")).alias("kind"),
-            F.least(
-                F.floor(F.length(F.coalesce(F.col("s.text"), F.lit(""))) / bin_width),
-                F.lit(bins - 1),
-            )
-            .cast("int")
-            .alias("bucket"),
+        docs.selectExpr(
+            "partition_id", f"inline({span_codes_sql(bins, bin_width)})"
         )
         .groupBy(*keys)
         .agg(F.count("*").alias("count"))
     )
 
 
-CONF_CHECKS = (
-    "null_spans", "empty_spans", "offset_monotonicity", "null_span_kind",
-    "span_coherence",
+# One flag per span that breaks kind<->media_ref coherence: a text span
+# must not carry a media_ref, a non-text (media) span must carry one;
+# null-kind spans are left to null_span_kind. Interleaved-payload rule —
+# no analog in the reference's flat log lines.
+INCOHERENT_SPANS_SQL = (
+    "filter(zip_with(spans.kind, spans.media_ref,"
+    " (k, m) -> k IS NOT NULL AND ((k = 'text' AND m IS NOT NULL)"
+    " OR (k != 'text' AND m IS NULL))), x -> x)"
+)
+# The five row-local conformance checks — the ONE place their
+# definitions live: name → SQL predicate, in verdict order. Each reads
+# only the ``kind``, ``media_ref`` and ``offset`` subfields of ``spans``
+# (never the struct whole), so parquet nested-schema pruning keeps
+# ``text`` out of every narrow scan that evaluates them. A null span
+# element reads as null subfields; ``spans.offset IS NULL`` is exactly
+# ``spans IS NULL``.
+_OFFSETS = "spans.offset"
+_PAIRS = f"greatest(size({_OFFSETS}) - 1, 0)"
+CONF_SQL = {
+    "null_spans": f"{_OFFSETS} IS NULL",
+    "empty_spans": f"{_OFFSETS} IS NOT NULL AND size({_OFFSETS}) = 0",
+    # every offset strictly above its predecessor (a null offset makes
+    # the check unknown, never a violation)
+    "offset_monotonicity": (
+        f"CASE WHEN {_OFFSETS} IS NULL THEN false ELSE NOT ("
+        f"size({_OFFSETS}) <= 1 OR forall(zip_with("
+        f"slice({_OFFSETS}, 2, {_PAIRS}), slice({_OFFSETS}, 1, {_PAIRS}),"
+        " (a, b) -> a > b), x -> x)) END"
+    ),
+    "null_span_kind": (
+        "coalesce(size(filter(spans.kind, k -> k IS NULL)), 0) > 0"
+    ),
+    "span_coherence": f"coalesce(size({INCOHERENT_SPANS_SQL}), 0) > 0",
+}
+CONF_CHECKS = tuple(CONF_SQL)
+
+# Comma-joined names of the checks a row fails ("" when it passes all).
+CONF_DETAIL_SQL = "concat_ws(',', {})".format(
+    ", ".join(
+        f"CASE WHEN {pred} THEN '{name}' END"
+        for name, pred in CONF_SQL.items()
+    )
 )
 
 
 def conformance_exprs() -> dict:
-    """The five row-local conformance flags — the ONE place the check
-    definitions live: every CONF_CHECKS name → its boolean Column, in
-    CONF_CHECKS order. Shared by the full pass's wide scan, the sampled
-    pre-flight and ``conformance_violations``, so a tightened definition
-    cannot make any of them disagree."""
-    null_spans = F.col("spans").isNull()
-    return {
-        "null_spans": null_spans,
-        "empty_spans": F.col("spans").isNotNull() & (F.size("spans") == 0),
-        "offset_monotonicity": F.when(null_spans, F.lit(False)).otherwise(
-            ~F.expr(MONOTONE_EXPR)
-        ),
-        "null_span_kind": F.coalesce(
-            F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
-        ) > 0,
-        "span_coherence": F.coalesce(
-            F.size(F.filter("spans", incoherent_span_filter)), F.lit(0)
-        ) > 0,
-    }
+    """Every CONF_CHECKS name → its boolean Column (``CONF_SQL``)."""
+    return {name: F.expr(pred) for name, pred in CONF_SQL.items()}
 
 
 def conformance_detail() -> Column:
-    """Comma-joined names of the conformance checks a row fails ("" when
-    it passes all of them) — the violation rows' detail string."""
-    return F.concat_ws(
-        ",", *[F.when(flag, name) for name, flag in conformance_exprs().items()]
-    )
+    """The violation rows' detail string (``CONF_DETAIL_SQL``)."""
+    return F.expr(CONF_DETAIL_SQL)
 
 
 def conformance_violations(docs: DataFrame) -> DataFrame:

@@ -1,34 +1,36 @@
 """End-to-end validation pipeline: the engine's analog of the
 reference's per-file poll loop (/root/reference/main.py:136-275) →
-ensemble pass (:277-357), restructured for Spark:
+ensemble pass (:277-357), restructured for Spark. ``validate_scope`` is
+the validation core the batch pass and every stream micro-batch share:
 
-  manifest anti-join (partition discovery, S5)        — driver + 1 agg
-  → ``validate_scope``, the validation core the batch pass and every
-    stream micro-batch share:
-    small check inputs (dup keys, the referential key set) — narrow
-      column scans
-    → ONE wide scan emitting every violation row (conformance flags and
-      the referential membership UDF are row-local; uniqueness attaches
-      via a broadcast join)
-    → ONE collect of the per-partition violation count grid (no re-scan
-      of the table)
+  ONE cached narrow projection of the key scope (key columns, doc_id,
+  partition_id, the conformance detail string, the row hash when a
+  manifest needs snapshot hashes, the refs and their fingerprint when a
+  catalog is given, the spans' (kind, length bucket) codes when a drift
+  baseline is — never span text)
+    → its first action: the per-partition snapshot rows (or totals)
+      with the conformance counts — partition discovery (S5)
+    → from the cache, concurrently: the dup keys, the referential
+      orphan pairs and the scope's length histogram, each collected
+      bounded
+  → the verdict grid: plain driver math over those collected rows
+  → ONE wide scan that only writes violation rows (conformance is a
+    row-local SQL predicate set; dup keys and orphan groups attach as
+    broadcast local relations)
   → verdict rows, table-level rollup, drift scores and manifest records
-    computed on the driver from that grid, the snapshot rows and both
-    length histograms — all metadata scale (partitions × checks counts,
-    kinds × bins buckets) — and materialized as ONE Arrow-backed local
-    frame (``schema.local_frame``)
+    computed on the driver from the grid, the snapshot rows and both
+    length histograms — all metadata scale — and materialized as ONE
+    Arrow-backed local frame (``schema.local_frame``)
   → atomic manifest commit (lineage + metrics)
 
-Scan budget per pass (the thing that matters at 100 TB): one snapshot
-hash pass, one key-column pass (uniqueness), one full-width violations
-pass, one text-length pass (drift input). Beyond the catalog broadcast
-cap the referential check adds one refs pass: the scope's distinct refs
-against a semi-join scan of the catalog's key column, or — only when
-the scope's distinct refs also exceed the cap — the salted
-exploded-refs anti-join. Everything downstream — verdicts, rollups,
-drift — is driver-side math over bounded-size collected intermediates,
-so the verdict tier starts no Spark job beyond the grid collect and the
-baseline read.
+Scan budget per pass (the thing that matters at 100 TB): two reads of
+the table — the narrow pass and the full-width violations write. The
+referential check reads only the catalog's key column: broadcast whole
+within the broadcast cap, else a semi-join scan against the scope's
+distinct refs, or — only when those also exceed the cap — the salted
+anti-join (operators/referential.py). No Spark job runs after the
+violations write: verdicts, rollups and drift are driver-side math over
+bounded-size collected intermediates.
 
 Resume semantics: a pass writes one manifest version (none when nothing
 is pending). A crash before the manifest commit leaves CURRENT pointing
@@ -41,10 +43,13 @@ run's ``_staged_<run_id>`` directory is left behind.
 from __future__ import annotations
 
 import os
+from collections import Counter
+
+import pyarrow as pa
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ValidationConfig
@@ -52,14 +57,17 @@ from ..operators import drift as drift_ops
 from ..operators import stats as stats_ops
 from ..operators.referential import (
     BROADCAST_MAX_CATALOG_ROWS,
+    REFS_SQL,
+    ROW_FP_SQL,
     ReferentialCheck,
-    span_refs_column,
+    orphan_groups,
+    ref_pairs,
 )
-from ..operators.stats import CONF_CHECKS
+from ..operators.stats import CONF_CHECKS, CONF_DETAIL_SQL
 from ..operators.uniqueness import duplicate_keys
 from ..operators.verdict import rollup_rows
 from ..schema import VERDICTS_DDL, local_frame
-from ..sources.manifest import Manifest, partition_snapshots
+from ..sources.manifest import ROW_HASH_SQL, Manifest, snapshot_hash_sql
 
 
 def check_gates(cfg) -> dict:
@@ -96,150 +104,99 @@ class ValidationResult:
 
 BROADCAST_MAX_ROWS = 100_000
 
+# The violation checks of one row as SQL over the flagged scope: an
+# array of (check, detail, score) structs, null for a check the row
+# passes. Cast to the nullable struct the violations table declares.
+_CHECKS_SQL = (
+    "CAST(filter(array("
+    "IF(dup_cnt IS NULL, NULL, named_struct('check', 'uniqueness',"
+    " 'detail', concat('dup_cnt=', dup_cnt),"
+    " 'score', CAST(dup_cnt AS DOUBLE))),"
+    " IF(_conf = '', NULL, named_struct('check', 'conformance',"
+    " 'detail', _conf, 'score', 1.0D)),"
+    " IF(orphan_refs IS NULL, NULL, named_struct('check', 'referential',"
+    " 'detail', concat('orphan_refs=', concat_ws(',', orphan_refs)),"
+    " 'score', CAST(size(orphan_refs) AS DOUBLE)))"
+    "), c -> c IS NOT NULL)"
+    " AS ARRAY<STRUCT<check: STRING, detail: STRING, score: DOUBLE>>)"
+)
+
+
+def _key_cols(unique_key) -> list[str]:
+    return [unique_key] if isinstance(unique_key, str) else list(unique_key)
+
 
 def _all_violations(
     scope: DataFrame,
-    dups: DataFrame,
-    orphan_doc: DataFrame | None,
-    broadcast_orphans: bool = True,
-    orphan_udf=None,
-    broadcast_dups: bool = True,
+    dups: DataFrame | None,
+    orphans: DataFrame | None,
     unique_key="doc_id",
+    broadcast_dups: bool = True,
+    broadcast_orphans: bool = True,
 ) -> DataFrame:
     """One wide scan → every violation row (VIOLATIONS_SCHEMA shape).
 
-    Conformance flags are row-local expressions; uniqueness attaches
-    via a broadcast join on the (tiny) dup-key set. Referential comes
-    in two shapes, chosen by ``ReferentialCheck.udf_for``:
-
-    * ``orphan_udf`` (a broadcastable catalog, or the catalog keys a
-      scope with few enough distinct refs names — the common case): a
-      vectorized membership check over each row's projected refs array
-      (operators/referential.py::orphan_refs_rowlocal_udf). Row-local →
-      the wide scan never shuffles and needs no exploded-refs pre-scan.
-      The earlier join-based shape shuffled the ENTIRE wide scope
-      (spans included) through a sort-merge join against the per-doc
-      orphan aggregate — the dominant non-scaling cost of the pass at
-      16M docs (~13 s of a 29 s stage at local[8]).
-    * ``orphan_doc`` join (catalog and scope refs too large to
-      broadcast): per-doc
-      orphan aggregate from the salted anti-join pre-scan, attached by
-      join — broadcast only while that side is genuinely small
-      (``broadcast_orphans``).
+    Conformance is the row-local ``CONF_DETAIL_SQL``. Uniqueness
+    attaches the dup keys (key..., dup_cnt) on the configured key (a
+    composite key joins on every part, so a null part never matches)
+    and referential the orphan groups (doc_id, partition_id, row_fp,
+    orphan_refs) on the row's own refs fingerprint: both are broadcast
+    local relations, or cached frames joined by shuffle beyond the
+    broadcast cap; None means no row of the scope fails that check.
+    The plan is built from SQL strings: every Column call is a py4j
+    round trip, and the Column-chain build of this plan took 972 of
+    them (0.33-0.40 s of driver time) against ~70 (0.17 s) as SQL.
 
     Each violating doc emits one row per failed check, spans verbatim."""
-    conf_detail = stats_ops.conformance_detail()
-    dups_b = F.broadcast(dups) if broadcast_dups else dups
-    # attach on the CONFIGURED uniqueness key — duplicate_keys returns
-    # (key..., dup_cnt), so the join columns must mirror cfg.unique_key
-    # (a composite key joins on every part)
-    key_cols = (
-        [unique_key] if isinstance(unique_key, str) else list(unique_key)
-    )
-    flagged = scope.join(dups_b, key_cols, "left")
-    if orphan_udf is not None:
-        # one ArrowEvalPython stage; the empty→null rewrite happens on
-        # the column ref so the UDF runs once per row
-        flagged = (
-            flagged.withColumn("_oarr", orphan_udf(span_refs_column()))
-            .withColumn(
-                "orphan_refs",
-                F.when(F.size("_oarr") > 0, F.col("_oarr")),
-            )
-            .withColumn(
-                "n_orphans",
-                F.when(
-                    F.col("orphan_refs").isNotNull(),
-                    F.size("orphan_refs").cast("long"),
-                ),
-            )
-            .drop("_oarr")
+    flagged = scope
+    if dups is not None:
+        flagged = flagged.join(
+            F.broadcast(dups) if broadcast_dups else dups,
+            _key_cols(unique_key),
+            "left",
         )
-    elif orphan_doc is not None:
-        od = F.broadcast(orphan_doc) if broadcast_orphans else orphan_doc
-        flagged = (
-            flagged.withColumn("row_fp", F.xxhash64("spans"))
-            .join(od, ["doc_id", "partition_id", "row_fp"], "left")
-            .drop("row_fp")
+    if orphans is not None:
+        flagged = flagged.selectExpr("*", f"{ROW_FP_SQL} AS row_fp").join(
+            F.broadcast(orphans) if broadcast_orphans else orphans,
+            ["doc_id", "partition_id", "row_fp"],
+            "left",
         )
-    else:
-        flagged = flagged.withColumn(
-            "n_orphans", F.lit(None).cast("long")
-        ).withColumn("orphan_refs", F.lit(None).cast("array<string>"))
-
-    check_struct = "struct<check:string,detail:string,score:double>"
-    checks_arr = F.array(
-        F.when(
-            F.col("dup_cnt").isNotNull(),
-            F.struct(
-                F.lit("uniqueness").alias("check"),
-                F.concat(F.lit("dup_cnt="), F.col("dup_cnt")).alias("detail"),
-                F.col("dup_cnt").cast("double").alias("score"),
-            ),
-        ).cast(check_struct),
-        F.when(
-            conf_detail != "",
-            F.struct(
-                F.lit("conformance").alias("check"),
-                conf_detail.alias("detail"),
-                F.lit(1.0).alias("score"),
-            ),
-        ).cast(check_struct),
-        F.when(
-            F.col("n_orphans").isNotNull(),
-            F.struct(
-                F.lit("referential").alias("check"),
-                F.concat(
-                    F.lit("orphan_refs="), F.concat_ws(",", "orphan_refs")
-                ).alias("detail"),
-                F.col("n_orphans").cast("double").alias("score"),
-            ),
-        ).cast(check_struct),
-    )
-    return (
-        flagged.select(
-            "doc_id",
-            "partition_id",
-            "spans",
-            F.explode(F.filter(checks_arr, lambda x: x.isNotNull())).alias("c"),
-        )
-        .select(
-            F.col("c.check").alias("check"),
-            F.col("partition_id").cast("int"),
-            "doc_id",
-            F.col("c.detail").alias("detail"),
-            F.col("c.score").alias("score"),
-            "spans",
-        )
+    return flagged.selectExpr(
+        "doc_id",
+        "partition_id",
+        "spans",
+        f"{CONF_DETAIL_SQL} AS _conf",
+        "dup_cnt" if dups is not None else "CAST(NULL AS BIGINT) AS dup_cnt",
+        "orphan_refs" if orphans is not None
+        else "CAST(NULL AS ARRAY<STRING>) AS orphan_refs",
+    ).selectExpr(
+        "doc_id", "partition_id", "spans", f"inline({_CHECKS_SQL})"
+    ).selectExpr(
+        "check",
+        "CAST(partition_id AS INT) AS partition_id",
+        "doc_id",
+        "detail",
+        "score",
+        "spans",
     )
 
 
-def _count_grid(violations: DataFrame, capped: bool) -> dict[int, dict]:
-    """The per-partition violation count grid, collected: partition_id →
-    {check: violating docs}. One violation row is one doc × check, and a
-    conformance row names every conformance check the doc failed in its
-    detail. On an exemplar-capped stream (``_cap_violations``) the counts
-    are the exact group sizes stamped on every exemplar row (max over a
-    group constant): row counts are capped, the stamped counts are not."""
+def _count_grid(violations: DataFrame) -> dict[int, dict]:
+    """The per-partition violation count grid of a full violations
+    table, collected: partition_id → {check: violating docs}. One
+    violation row is one doc × check, and a conformance row names every
+    conformance check the doc failed in its detail. The feedback
+    recompute's grid; a pass computes the same counts on the driver
+    (``validate_scope``)."""
     is_conf = F.col("check") == "conformance"
-    if capped:
-        aggs = [
-            F.max(F.when(F.col("check") == name, F.col("__n_in_group")))
-            .alias(name)
-            for name in ("uniqueness", "referential")
-        ] + [
-            F.max(F.when(is_conf, F.col(f"__cnt_{name}"))).alias(name)
-            for name in CONF_CHECKS
-        ]
-    else:
-        aggs = [
-            F.count(F.when(F.col("check") == name, 1)).alias(name)
-            for name in ("uniqueness", "referential")
-        ] + [
-            F.count(F.when(is_conf & F.col("detail").contains(name), 1))
-            .alias(name)
-            for name in CONF_CHECKS
-        ]
+    aggs = [
+        F.count(F.when(F.col("check") == name, 1)).alias(name)
+        for name in ("uniqueness", "referential")
+    ] + [
+        F.count(F.when(is_conf & F.col("detail").contains(name), 1))
+        .alias(name)
+        for name in CONF_CHECKS
+    ]
     return {
         r["partition_id"]: r.asDict()
         for r in violations.groupBy("partition_id").agg(*aggs).collect()
@@ -309,120 +266,284 @@ def _partition_outcomes(part_rows: list[tuple]) -> dict[int, tuple]:
     return out
 
 
-_CAP_HELPER_COLS = ["__n_in_group"] + [f"__cnt_{n}" for n in CONF_CHECKS]
-
-
 def _cap_violations(violations: DataFrame, k: int) -> DataFrame:
     """Exemplar-capped violation stream: at most ``k`` rows per
-    (check, partition), each carrying the EXACT group counts as window
-    aggregates (``__n_in_group`` + per-conformance-name ``__cnt_*``)
-    so verdicts stay exact without a second pass over the stream.
-
-    Cost model: ONE shuffle of the violation stream (violation-rate ×
-    table, i.e. the thing this cap exists to shrink on the way to the
-    sink) — the wide table itself is still scanned exactly once. Every
-    non-empty (check, partition) group keeps ≥1 exemplar (k >= 1), so
-    the counts survive onto at least one materialized row per group."""
+    (check, partition). The verdict counts never come from these rows
+    (``validate_scope`` computes them before the wide scan), so the cap
+    is one window over the violation stream — violation-rate × table,
+    the thing this cap exists to shrink on the way to the sink."""
     if k < 1:
         raise ValueError("max_violation_exemplars must be >= 1")
-    w = Window.partitionBy("check", "partition_id")
-    out = violations.withColumn(
-        "__rn", F.row_number().over(w.orderBy("doc_id", "detail"))
-    ).withColumn("__n_in_group", F.count(F.lit(1)).over(w))
-    for name in CONF_CHECKS:
-        out = out.withColumn(
-            f"__cnt_{name}",
-            F.sum(
-                F.when(
-                    (F.col("check") == "conformance")
-                    & F.col("detail").contains(name),
-                    1,
-                ).otherwise(0)
-            ).over(w),
+    return (
+        violations.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY check, partition_id"
+            " ORDER BY doc_id, detail) AS __rn",
         )
-    return out.filter(F.col("__rn") <= k).drop("__rn")
+        .filter(f"__rn <= {int(k)}")
+        .drop("__rn")
+    )
+
+
+def _collect_bounded(rows: DataFrame, most: int):
+    """``rows`` — at most ``most`` of them, by the discovery counts — as
+    an Arrow table, or None beyond the broadcast cap: there the attach
+    becomes a shuffle join of a cached frame rather than an executor-OOM
+    risk. Only a ``most`` beyond the cap pays for the bounded collect: a
+    root limit gathers the rows through a single-partition exchange
+    (0.3-0.4 s against 0.07-0.09 s for a plain collect of a few thousand
+    rows on a 4-core host)."""
+    cap = BROADCAST_MAX_CATALOG_ROWS
+    tbl = (rows if most <= cap else rows.limit(cap + 1)).toArrow()
+    return None if tbl.num_rows > cap else tbl
+
+
+def _local(spark: SparkSession, tbl):
+    """An Arrow table as a local relation (None when it is empty: no row
+    fails that check, so nothing attaches)."""
+    return spark.createDataFrame(tbl) if tbl.num_rows else None
+
+
+def _dup_keys(narrow: DataFrame, key_cols: list[str], n_rows: int, cached):
+    """(attach frame, broadcast?, partition_id → duplicate rows) of the
+    duplicated ``key_cols`` values of the ``n_rows`` key-scope rows. A
+    key with a null part never matches in the attach's equi-join, so it
+    is never a duplicate. A frame cached beyond the cap is appended to
+    ``cached``."""
+    agg = (
+        narrow.filter(" AND ".join(f"`{c}` IS NOT NULL" for c in key_cols))
+        .groupBy(*key_cols)
+        .agg(
+            F.count("*").alias("dup_cnt"),
+            F.collect_list("partition_id").alias("_pids"),
+        )
+        .filter("dup_cnt > 1")
+    )
+    # every duplicated key covers at least two rows
+    tbl = _collect_bounded(agg, n_rows // 2)
+    if tbl is None:
+        agg = agg.cache()
+        cached.append(agg)
+        counts = dict(
+            agg.selectExpr("explode(_pids) AS p")
+            .groupBy("p")
+            .count()
+            .collect()
+        )
+        return agg.drop("_pids"), False, counts
+    counts = Counter(
+        p for pids in tbl.column("_pids").to_pylist() for p in pids
+    )
+    local = _local(narrow.sparkSession, tbl.drop_columns(["_pids"]))
+    return local, True, counts
+
+
+_ORPHAN_COLS = ["doc_id", "partition_id", "row_fp", "orphan_refs"]
+
+
+def _orphans(
+    ref: ReferentialCheck, scope_narrow: DataFrame, n_refs: int, cached
+):
+    """(attach frame, broadcast?, partition_id → rows with an orphan)
+    of the referential check of a scope holding ``n_refs`` refs.
+
+    The orphan pairs come back from a map-only query and are grouped per
+    physical row here, on the driver: the pairs are violation-rate
+    scale, and a Spark grouping costs the critical path one more
+    shuffle round (0.25 s of a 0.7 s collect on a 4-core host). Beyond
+    the broadcast cap the grouping is Spark's (``orphan_groups``),
+    cached for a shuffle-join attach and appended to ``cached``."""
+    pairs = ref.orphans(
+        ref_pairs(scope_narrow, refs="_refs", row_fp="row_fp"), n_refs
+    )
+    tbl = _collect_bounded(pairs, n_refs)
+    if tbl is None:
+        groups = orphan_groups(pairs).cache()
+        cached.append(groups)
+        counts = dict(
+            groups.groupBy("partition_id").agg(F.sum("n_rows")).collect()
+        )
+        return groups.select(*_ORPHAN_COLS), False, counts
+    groups: dict[tuple, list] = {}
+    for *key, media_ref in zip(
+        *(tbl.column(c).to_pylist() for c in (*_ORPHAN_COLS[:3], "media_ref"))
+    ):
+        group = groups.setdefault(tuple(key), [set(), 0])
+        group[0].add(media_ref)
+        group[1] += 1
+    counts = Counter()
+    if not groups:
+        return None, True, counts
+    for key, (refs, n_pairs) in groups.items():
+        # one pair per distinct orphan ref per physical row
+        counts[key[1]] += n_pairs // len(refs)
+    types = [
+        tbl.schema.field(c).type for c in (*_ORPHAN_COLS[:3], "media_ref")
+    ]
+    local = pa.Table.from_arrays(
+        [pa.array(col, type=t) for col, t in zip(zip(*groups), types)]
+        + [pa.array([sorted(refs) for refs, _ in groups.values()],
+                    type=pa.list_(types[3]))],
+        names=_ORPHAN_COLS,
+    )
+    return _local(scope_narrow.sparkSession, local), True, counts
+
+
+@dataclass
+class ScopeResult:
+    scope: DataFrame             # the rows validated
+    violations: DataFrame | None  # None when not asked for
+    grid: dict[int, dict]        # partition_id → {check: violating docs}
+    partitions: dict             # partition_id → discovery row (n_rows, ...)
+    pending: list[int]           # the partitions validated, sorted
+    hist_rows: list | None       # the scope's (kind, bucket) histogram
 
 
 def validate_scope(
-    scope: DataFrame,
-    key_scope: DataFrame,
+    docs: DataFrame,
     ref: ReferentialCheck | None,
     cfg: ValidationConfig = DEFAULT_CONFIG,
     out_dir: str | None = None,
+    pending_of=None,
+    snapshot_hashes: bool = False,
+    histogram: bool = False,
+    emit: bool = True,
     mark=None,
-) -> tuple[DataFrame, dict[int, dict]]:
+) -> ScopeResult | None:
     """The validation core of the batch pass and of every stream
-    micro-batch: all violation rows of ``scope`` from ONE wide scan,
-    materialized, plus the collected per-partition count grid.
+    micro-batch. ``docs`` is the key scope: duplicate ``cfg.unique_key``
+    values are detected over all of it (for an incremental pass the full
+    table, so pairs straddling validated and pending partitions stay
+    visible) and attributed within the validated scope, its partitions
+    ``pending_of(discovery rows)`` (default: every partition with rows).
+    Returns None when nothing is pending.
 
-    Duplicate ``cfg.unique_key`` values are detected over ``key_scope``
-    (the full table for an incremental pass, so pairs straddling
-    validated and pending partitions stay visible; the batch itself for
-    a stream) and attributed within ``scope``; referential uses
-    ``ref.udf_for(scope)``, or its salted join when that is None.
-    The small inputs are cached and counted first — the dup-key count
-    on a helper thread, overlapping ``ref``'s catalog work —
-    and each is broadcast only within its size guard, beyond which the
-    attach is a shuffle join rather than an executor-OOM risk;
-    ``mark("small_scans")`` follows. Violations are written to
-    ``out_dir`` (overwrite: re-runs and replayed micro-batches stay
-    idempotent) and read back, or cached when it is None; with
-    ``cfg.max_violation_exemplars`` they are capped, the grid keeping
-    the exact counts."""
-    spark = scope.sparkSession
-    dups = duplicate_keys(key_scope, cfg.unique_key).cache()
-    orphan_doc = None
-    broadcast_orphans = True
-    with ThreadPoolExecutor(max_workers=1) as helper:
-        n_dups = helper.submit(dups.count)
-        orphan_udf = ref.udf_for(scope) if ref is not None else None
-        if ref is not None and orphan_udf is None:
-            orphan_doc = ref.orphan_doc(scope).cache()
-            # materializing the cache also tells whether this side is
-            # still broadcast-sized — at a high violation rate it is not
-            broadcast_orphans = orphan_doc.count() <= BROADCAST_MAX_ROWS
-        # (key, count) rows are catalog-key-sized: same ceiling as the
-        # catalog broadcast
-        broadcast_dups = n_dups.result() <= BROADCAST_MAX_CATALOG_ROWS
+    One cached narrow projection feeds every small input. Its first
+    action collects the per-partition discovery rows — n_rows, the
+    conformance counts and, with ``snapshot_hashes``, the snapshot hash
+    — then ``mark("discovery")``. From the cache, concurrently, come the
+    dup keys, ``ref``'s orphan pairs and, with ``histogram``, the
+    scope's length histogram binned like ``cfg.drift``; the count grid
+    is driver math over the collected rows; ``mark("small_scans")``.
+    With ``emit``, one wide scan writes the violation rows to ``out_dir``
+    (overwrite: re-runs and replayed micro-batches stay idempotent) and
+    reads them back, or returns them lazily cached when it is None,
+    capped by ``cfg.max_violation_exemplars``; ``mark("violations")``."""
+    spark = docs.sparkSession
+    key_cols = _key_cols(cfg.unique_key)
+    proj = [
+        f"`{c}`"
+        for c in dict.fromkeys([*key_cols, "doc_id", "partition_id"])
+    ]
+    proj.append(f"{CONF_DETAIL_SQL} AS _conf")
+    if snapshot_hashes:
+        proj.append(f"{ROW_HASH_SQL} AS _rh")
+    if ref is not None:
+        proj += [f"{REFS_SQL} AS _refs", f"{ROW_FP_SQL} AS row_fp"]
+    if histogram:
+        d = cfg.drift
+        codes = stats_ops.span_codes_sql(
+            d.histogram_bins, d.histogram_bin_width
+        )
+        proj.append(f"{codes} AS _codes")
+    narrow = docs.selectExpr(*proj).cache()
+    cached = []  # frames cached beyond the broadcast cap
+
+    pool = ThreadPoolExecutor(max_workers=3)
+    try:
+        aggs = ["count(*) AS n_rows"] + [
+            f"count_if(array_contains(split(_conf, ','), '{name}')) AS {name}"
+            for name in CONF_CHECKS
+        ]
+        if snapshot_hashes:
+            aggs.append(f"{snapshot_hash_sql('_rh')} AS snapshot_hash")
+        if ref is not None:  # bounds the orphan pairs
+            aggs.append("sum(size(coalesce(_refs, array()))) AS _n_refs")
+        rows = (
+            narrow.groupBy("partition_id")
+            .agg(*[F.expr(a) for a in aggs])
+            .collect()
+        )
+        partitions = {r.partition_id: r for r in rows}
+        pending = sorted(
+            partitions if pending_of is None else pending_of(rows)
+        )
+        if mark is not None:
+            mark("discovery")
+        if not pending:
+            return None
+        scope, scope_narrow = docs, narrow
+        if len(pending) < len(partitions):
+            scope = docs.filter(F.col("partition_id").isin(pending))
+            scope_narrow = narrow.filter(F.col("partition_id").isin(pending))
+        fut_hist = (
+            pool.submit(
+                drift_ops.collect_histogram,
+                scope_narrow.selectExpr("inline(_codes)")
+                .groupBy("kind", "bucket")
+                .count(),
+                ["kind"],
+            )
+            if histogram
+            else None
+        )
+        fut_orphans = (
+            pool.submit(
+                _orphans, ref, scope_narrow,
+                sum(partitions[p]._n_refs for p in pending), cached,
+            )
+            if ref is not None
+            else None
+        )
+        dups, broadcast_dups, dup_counts = _dup_keys(
+            narrow, key_cols, sum(r.n_rows for r in rows), cached
+        )
+        orphans, broadcast_orphans, orphan_counts = (
+            fut_orphans.result()
+            if fut_orphans is not None
+            else (None, True, {})
+        )
+        grid = {
+            pid: {
+                **{name: partitions[pid][name] for name in CONF_CHECKS},
+                "uniqueness": dup_counts.get(pid, 0),
+                "referential": orphan_counts.get(pid, 0),
+            }
+            for pid in pending
+        }
+        if mark is not None:
+            mark("small_scans")
+
+        violations = None
+        if emit:
+            violations = _all_violations(
+                scope, dups, orphans, cfg.unique_key,
+                broadcast_dups, broadcast_orphans,
+            )
+            if cfg.max_violation_exemplars is not None:
+                violations = _cap_violations(
+                    violations, cfg.max_violation_exemplars
+                )
+            if out_dir is None:
+                violations = violations.cache()
+            else:
+                violations.write.mode("overwrite").parquet(out_dir)
+                violations = spark.read.schema(violations.schema).parquet(
+                    out_dir
+                )
+        hist_rows = fut_hist.result() if fut_hist is not None else None
+    finally:
+        pool.shutdown(wait=False)
+        narrow.unpersist()
+        # the small inputs are dead once the violations are written — in
+        # a long-lived session they would otherwise pin block-manager
+        # memory the caches that matter need
+        if out_dir is not None or not emit:
+            for frame in cached:
+                frame.unpersist()
     if mark is not None:
-        mark("small_scans")
-
-    violations = _all_violations(
-        scope,
-        dups,
-        orphan_doc,
-        broadcast_orphans,
-        orphan_udf=orphan_udf,
-        broadcast_dups=broadcast_dups,
-        unique_key=cfg.unique_key,
-    )
-    if cfg.max_violation_exemplars is None:
-        if out_dir is None:
-            violations = violations.cache()  # the grid collect fills it
-        else:
-            violations.write.mode("overwrite").parquet(out_dir)
-            violations = spark.read.parquet(out_dir)
-        grid = _count_grid(violations, capped=False)
-    else:
-        # the capped stream is bounded (≤ K rows per check × partition):
-        # cache it, take the exact counts from its stamped window
-        # aggregates, and hand out the rows without the helper columns
-        capped = _cap_violations(
-            violations, cfg.max_violation_exemplars
-        ).cache()
-        grid = _count_grid(capped, capped=True)
-        violations = capped.drop(*_CAP_HELPER_COLS)
-        if out_dir is not None:
-            violations.write.mode("overwrite").parquet(out_dir)
-            violations = spark.read.parquet(out_dir)
-            capped.unpersist()
-    # the small inputs are dead once the violations are materialized —
-    # in a long-lived session they would otherwise pin block-manager
-    # memory the caches that matter need
-    dups.unpersist()
-    if orphan_doc is not None:
-        orphan_doc.unpersist()
-    return violations, grid
+        mark("violations")
+    return ScopeResult(scope, violations, grid, partitions, pending, hist_rows)
 
 
 def run_validation(
@@ -458,80 +579,23 @@ def run_validation(
             _t0 = t
 
     manifest = Manifest(manifest_dir) if manifest_dir else None
-
-    def _empty_result() -> ValidationResult:
-        from ..schema import VIOLATIONS_SCHEMA
-
-        return ValidationResult(
-            local_frame(spark, [], VERDICTS_DDL),
-            local_frame(spark, [], VIOLATIONS_SCHEMA),
-            [],
-            manifest.current_version() if manifest else 0,
-        )
-
-    # discovery rows: (partition_id, [snapshot_hash,] n_rows) per
-    # partition with rows, collected once — before the scans on resume,
-    # from a driver thread overlapping them otherwise
-    pool = ThreadPoolExecutor(max_workers=4)
+    ref = (
+        ReferentialCheck(spark, catalog, catalog_size_hint, cfg.salt_buckets)
+        if catalog is not None
+        else None
+    )
+    # the pass-invariant inputs — the catalog size and the stored
+    # baseline — are read beside the narrow pass from the start
+    pool = ThreadPoolExecutor(max_workers=2)
     try:
-        fut_snaps = None
-        if manifest is not None and manifest.current_version() > 0:
-            # resume: the pending list must exist before the scope does
-            snap_rows = partition_snapshots(docs).collect()
-            pending = sorted(manifest.pending_partitions(snap_rows))
-            if not pending:
-                return _empty_result()
-            # Partition pruning: only unvalidated partitions are read
-            # further. Deliberately NOT cached: each stage projects a
-            # narrow column subset, so parquet re-scans (vectorized,
-            # column-pruned) beat a full-row block-manager cache —
-            # caching the spans column in object form benchmarked 2-10x
-            # slower at high core counts (GC + eviction churn).
-            scope = docs.filter(F.col("partition_id").isin(pending))
-        else:
-            # cold start or no manifest: every partition with rows is
-            # pending by construction, so scope ≡ docs (no isin() filter
-            # in any downstream plan) and nothing needs the discovery
-            # rows until verdict time. The collect runs on a driver
-            # thread beside the dup-key, histogram and wide scans; only
-            # a manifest needs the snapshot hashes (the commit records
-            # them), otherwise a narrow count scan suffices.
-            discovery = (
-                partition_snapshots(docs)
-                if manifest is not None
-                else docs.groupBy("partition_id").agg(
-                    F.count("*").alias("n_rows")
-                )
-            )
-            fut_snaps = pool.submit(discovery.collect)
-            scope = docs
-        _mark("discovery")
-
-        # the drift-input histogram depends only on scope — collect it
-        # (and read the baseline) NOW so both overlap the small scans
-        # and then the wide violations materialization
-        cur_hist = None
-        if baseline_hist is not None:
-            cur_hist = stats_ops.length_histogram(
-                scope,
-                bins=cfg.drift.histogram_bins,
-                bin_width=cfg.drift.histogram_bin_width,
-            )
-            fut_hist = pool.submit(
-                drift_ops.collect_histogram, cur_hist, ["kind"]
-            )
-            fut_base = pool.submit(
-                drift_ops.collect_histogram, baseline_hist, ["kind"]
-            )
-        ref = (
-            ReferentialCheck(
-                spark, catalog, catalog_size_hint, cfg.salt_buckets
-            )
-            if catalog is not None
+        if ref is not None:
+            pool.submit(getattr, ref, "n")
+        fut_base = (
+            pool.submit(drift_ops.collect_histogram, baseline_hist, ["kind"])
+            if baseline_hist is not None
             else None
         )
-        violations, grid = validate_scope(
-            scope,
+        res = validate_scope(
             docs,
             ref,
             cfg,
@@ -540,42 +604,51 @@ def run_validation(
                 if violations_dir is not None
                 else None
             ),
+            # resume: only partitions whose snapshot hash changed
+            pending_of=(
+                manifest.pending_partitions
+                if manifest is not None and manifest.current_version() > 0
+                else None
+            ),
+            snapshot_hashes=manifest is not None,
+            histogram=baseline_hist is not None,
             mark=_mark,
         )
-        if cur_hist is not None:
-            hist_rows = fut_hist.result()
-            base_rows = fut_base.result()
-            cur_hist = local_frame(
-                spark,
-                [(*key, bucket, n) for key, bucket, n in hist_rows],
-                cur_hist.schema,
-            )
-        if fut_snaps is not None:
-            snap_rows = fut_snaps.result()
-            pending = sorted(r.partition_id for r in snap_rows)
-            if not pending:
-                return _empty_result()
+        base_rows = fut_base.result() if fut_base is not None else None
     finally:
         pool.shutdown(wait=False)
-    _mark("violations")
+    if res is None:
+        from ..schema import VIOLATIONS_SCHEMA
+
+        return ValidationResult(
+            local_frame(spark, [], VERDICTS_DDL),
+            local_frame(spark, [], VIOLATIONS_SCHEMA),
+            [],
+            manifest.current_version() if manifest else 0,
+        )
+    pending, snap_map = res.pending, res.partitions
 
     # --- verdicts: metadata-scale math on the driver. The grid is
     # partitions x checks counts and the histograms kinds x bins rows,
-    # so one collect of the grid plus plain Python replaces the joins,
-    # windows and unions a Spark formulation pays a scheduler round-trip
-    # for each; the result is ONE Arrow-backed local frame, whose plan is
-    # a LocalTableScan, so a caller's .collect()/.show() start no scan
-    # job over a parallelized list ---
-    snap_map = {r.partition_id: r for r in snap_rows}
+    # so plain Python replaces the joins, windows and unions a Spark
+    # formulation pays a scheduler round-trip for each; the result is
+    # ONE Arrow-backed local frame, whose plan is a LocalTableScan, so a
+    # caller's .collect()/.show() start no scan job ---
     part_rows = verdict_rows(
-        grid,
+        res.grid,
         [(pid, snap_map[pid].n_rows) for pid in pending],
         has_catalog=catalog is not None,
         cfg=cfg,
     )
     rows = list(part_rows)
-    if cur_hist is not None:
-        rows += drift_rows(hist_rows, base_rows, cfg, "drift_len")
+    cur_hist = None
+    if base_rows is not None:
+        rows += drift_rows(res.hist_rows, base_rows, cfg, "drift_len")
+        cur_hist = local_frame(
+            spark,
+            [(*key, bucket, n) for key, bucket, n in res.hist_rows],
+            "kind string, bucket int, count long",
+        )
 
     # --- optional declarative schema contract (structural tier is
     # driver-side metadata only; data tier is one narrow agg pass) ---
@@ -584,7 +657,7 @@ def run_validation(
 
         rows += [
             tuple(r)
-            for r in contract_verdicts(scope, contract).select(
+            for r in contract_verdicts(res.scope, contract).select(
                 F.concat_ws(":", F.col("check"), F.col("column")),
                 F.lit(None).cast("int"),
                 F.lit(None).cast("long"),
@@ -622,7 +695,7 @@ def run_validation(
         manifest_version = manifest.commit_validated(records, run_id, now)
 
     return ValidationResult(
-        verdicts, violations, pending, manifest_version,
+        verdicts, res.violations, pending, manifest_version,
         capped=cfg.max_violation_exemplars is not None,
         current_hist=cur_hist,
     )
@@ -664,7 +737,7 @@ def revalidate_with_feedback(
         tuple(r) for r in totals.select("partition_id", "n_rows").collect()
     ]
     part_rows = verdict_rows(
-        _count_grid(live_violations(flagged), capped=False),
+        _count_grid(live_violations(flagged)),
         totals_rows,
         has_catalog=has_catalog,
         cfg=cfg,
@@ -775,30 +848,21 @@ def preflight_estimate(
         sample = docs.sample(fraction=fraction, seed=seed)
     flags = stats_ops.conformance_exprs()
     proj = [v.cast("long").alias(k) for k, v in flags.items()]
-    ref = (
-        ReferentialCheck(spark, catalog, catalog_size_hint, cfg.salt_buckets)
-        if catalog is not None
-        else None
-    )
-    ref_udf = ref.udf_for(sample) if ref is not None else None
-    ref_in_agg = ref_udf is not None
-    if ref_in_agg:
-        proj.append(
-            (F.size(ref_udf(span_refs_column())) > 0)
-            .cast("long")
-            .alias("referential")
-        )
-    elif ref is not None:
-        # catalog and the sample's refs beyond broadcast: the salted
-        # anti-join runs on the SAMPLE's exploded refs only — fraction x
-        # the full cost
-        ref_joined = {
-            r.partition_id: r["count"]
-            for r in ref.orphan_doc(sample).groupBy("partition_id")
-            .count()
+    orphan_rows = {}
+    if catalog is not None:
+        # the sample's orphan groups: every shape runs on the SAMPLE's
+        # exploded refs only — fraction x the full cost
+        orphan_rows = {
+            r.partition_id: r.n
+            for r in ReferentialCheck(
+                spark, catalog, catalog_size_hint, cfg.salt_buckets
+            )
+            .orphan_doc(sample)
+            .groupBy("partition_id")
+            .agg(F.sum("n_rows").alias("n"))
             .collect()
         }
-    check_cols = list(flags) + (["referential"] if ref_in_agg else [])
+    check_cols = list(flags)
     # per-partition grid either way (metadata scale): rows mode sums it
     # globally, partitions mode needs the per-cluster counts for the CI
     grid = (
@@ -896,9 +960,9 @@ def preflight_estimate(
     ns = [int(r["__n"]) for r in grid]
     for name in check_cols:
         per_check[name] = ([int(r[name] or 0) for r in grid], ns)
-    if catalog is not None and not ref_in_agg:
+    if catalog is not None:
         per_check["referential"] = (
-            [int(ref_joined.get(r["partition_id"], 0)) for r in grid],
+            [int(orphan_rows.get(r["partition_id"], 0)) for r in grid],
             ns,
         )
     tier = "sampled" if mode == "rows" else "sampled_partitions"

@@ -2494,14 +2494,14 @@ def q_media_features(spark, sf_dir):
 
 def q_span_coherence(spark, sf_dir):
     """Interleaved-payload kind<->media_ref coherence — the 5th
-    conformance check (operators/stats.py::incoherent_span_filter; a
+    conformance check (operators/stats.py::INCOHERENT_SPANS_SQL; a
     text span must not carry a media_ref, a media span must) — applied
     to a deterministic 3-spans-per-doc synthesis from the flat corpus:
     kind and media_ref are drawn from independent integer hashes so a
     fixed fraction of spans is incoherent. The engine side builds REAL
     array<struct> spans and filters with the production predicate; the
     oracle replays the same arithmetic over an unnested cross join."""
-    from .operators.stats import incoherent_span_filter
+    from .operators.stats import INCOHERENT_SPANS_SQL
 
     d = _t(spark, sf_dir, "documents")
     spans = F.transform(
@@ -2527,7 +2527,7 @@ def q_span_coherence(spark, sf_dir):
         .select(
             "source",
             F.size("spans").alias("n_spans"),
-            F.size(F.filter("spans", incoherent_span_filter)).alias("n_bad"),
+            F.size(F.expr(INCOHERENT_SPANS_SQL)).alias("n_bad"),
         )
         .groupBy("source")
         .agg(

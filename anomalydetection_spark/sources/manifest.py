@@ -15,10 +15,12 @@ Re-expresses the reference's SQLite ``logs`` tracking table
   it, writes and fsyncs a private temp file and hard-links it to
   v{N+1}.json. The link is the commit point and the compare-and-swap:
   it is atomic, fails if the name exists, and never exposes a partial
-  file. CURRENT is then moved by os.rename, but it is only a hint:
-  readers roll forward from it while v{hint+1}.json exists, so a crash
-  anywhere in the commit leaves either version N or version N+1
-  current, never a manifest that refuses every later commit. Two
+  file. CURRENT is then written in place, but it is only a hint:
+  readers roll forward from it while v{hint+1}.json exists (a missing
+  or torn hint reads as 0), so a crash anywhere in the commit leaves
+  either version N or version N+1 current, never a manifest that
+  refuses every later commit. Each commit deletes the temp files of
+  writers older than itself, which could only lose the race. Two
   overlapping runs each merge into the latest committed state, so
   neither drops the other's records; a writer whose base went stale in
   between fails loudly instead of clobbering. The violations a run
@@ -44,21 +46,27 @@ from ..schema import local_frame
 SNAPSHOT_HASH_VERSION = 2
 
 
-def partition_snapshots(docs: DataFrame) -> DataFrame:
-    """(partition_id, snapshot_hash, n_rows) — one aggregation pass.
+# The snapshot hash, shared by ``partition_snapshots`` and the
+# validation pass's narrow projection (plans/pipeline.py): bit_xor of a
+# per-row xxhash64 over (doc_id, spans) — order-independent,
+# merge-associative (partial-agg friendly) and sensitive to any field
+# change. xxhash64 hashes structs/arrays natively — no JSON
+# serialization (which benchmarked ~5x slower and generates GC-hostile
+# string garbage at scale).
+ROW_HASH_SQL = "xxhash64(doc_id, spans)"
 
-    Content hash is bit_xor of per-row xxhash64 over (doc_id, spans):
-    order-independent, merge-associative (partial-agg friendly), and
-    sensitive to any field change. xxhash64 hashes structs/arrays
-    natively — no JSON serialization (which benchmarked ~5× slower and
-    generates GC-hostile string garbage at scale)."""
+
+def snapshot_hash_sql(row_hash: str) -> str:
+    """The aggregate that turns a partition's ``row_hash`` values into
+    its snapshot hash (hex string)."""
+    return f"conv(CAST(bit_xor({row_hash}) AS STRING), 10, 16)"
+
+
+def partition_snapshots(docs: DataFrame) -> DataFrame:
+    """(partition_id, snapshot_hash, n_rows) — one aggregation pass."""
     return docs.groupBy("partition_id").agg(
-        F.expr("bit_xor(xxhash64(doc_id, spans))").alias("_h"),
+        F.expr(snapshot_hash_sql(ROW_HASH_SQL)).alias("snapshot_hash"),
         F.count("*").alias("n_rows"),
-    ).select(
-        "partition_id",
-        F.conv(F.col("_h").cast("string"), 10, 16).alias("snapshot_hash"),
-        "n_rows",
     )
 
 
@@ -80,13 +88,17 @@ class Manifest:
     # ---- reads ----
 
     def current_version(self) -> int:
-        cur = os.path.join(self.path, "CURRENT")
+        # CURRENT is only a hint: missing, empty or torn (a crash inside
+        # its in-place write) it reads as 0, and the roll-forward below
+        # finds the committed version all the same
         v = 0
-        if os.path.exists(cur):
-            with open(cur) as f:
+        try:
+            with open(os.path.join(self.path, "CURRENT")) as f:
                 v = int(f.read().strip()[1:].split(".")[0])
+        except (FileNotFoundError, ValueError):
+            pass
         # a commit that crashed (or raced) after its link but before its
-        # CURRENT rename is committed all the same: roll forward
+        # hint write is committed all the same: roll forward
         while os.path.exists(os.path.join(self.path, f"v{v + 1}.json")):
             v += 1
         return v
@@ -134,28 +146,46 @@ class Manifest:
             json.dump(payload, f)
             f.flush()
             os.fsync(f.fileno())
+        target = os.path.join(self.path, fname)
         # the hard link IS the commit and the compare-and-swap: two
         # writers that both read version N race to link v{N+1}.json and
         # exactly one wins — the loser gets FileExistsError instead of
         # silently clobbering the winner's committed state — and the
-        # name only ever appears with its complete, fsynced payload
+        # name only ever appears with its complete, fsynced payload. A
+        # temp file gone before the link was swept by a newer commit
+        # (below), so its writer lost the race the same way.
         try:
-            os.link(tmp, os.path.join(self.path, fname))
-        except FileExistsError:
+            os.link(tmp, target)
+        except (FileExistsError, FileNotFoundError):
             raise RuntimeError(
                 f"concurrent manifest commit detected: {fname} already "
                 f"exists under {self.path} — another run committed from "
                 "the same base version (re-run against the new version)"
             ) from None
         finally:
-            os.unlink(tmp)
-        tmp_cur = os.path.join(self.path, f"_tmpcur_{uuid.uuid4().hex}")
-        with open(tmp_cur, "w") as f:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
+        self._sweep_temps(os.stat(target).st_mtime_ns)
+        with open(os.path.join(self.path, "CURRENT"), "w") as f:
             f.write(fname)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp_cur, os.path.join(self.path, "CURRENT"))
         return v
+
+    def _sweep_temps(self, committed_ns: int) -> None:
+        """Delete temp files older than a just-committed payload. Their
+        writers read their base before this commit's link, so each one
+        targets a version that now exists and can only lose its CAS;
+        a killed writer's temp would otherwise stay forever."""
+        for name in os.listdir(self.path):
+            if not name.startswith("_tmp"):
+                continue
+            p = os.path.join(self.path, name)
+            try:
+                if os.stat(p).st_mtime_ns < committed_ns:
+                    os.unlink(p)
+            except FileNotFoundError:
+                pass
 
     def stamp_stats(self, key: str, stats: dict, run_id: str) -> int:
         """Commit a new manifest version whose partition state is

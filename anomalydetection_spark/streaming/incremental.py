@@ -24,14 +24,12 @@ violations/metrics tables).
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ValidationConfig
-from ..operators import stats as stats_ops
 from ..operators.drift import collect_histogram
 from ..operators.referential import ReferentialCheck
 from ..plans.pipeline import drift_rows, validate_scope, verdict_rows
@@ -78,10 +76,13 @@ def stream_validate(
     only asserts WITHIN-batch uniqueness (cross-batch dup detection is
     the periodic batch pass over the manifest), so that check is named
     ``uniqueness_batch``. The referential check is built once for the
-    stream's lifetime (catalog size, key set or Bloom filter): a
-    micro-batch re-reads the catalog only beyond the broadcast cap, as
-    one semi-join scan of its key column against the batch's distinct
-    refs (the probe-side shape, operators/referential.py).
+    stream's lifetime (catalog size, Bloom filter); a micro-batch reads
+    only the catalog's key column — broadcast whole within the cap, else
+    one semi-join scan against the batch's distinct refs (the
+    probe-side shape, operators/referential.py). An empty micro-batch
+    ends at its first (discovery) action, and without
+    ``emit_violations`` no wide scan runs: the verdicts need only the
+    narrow pass.
 
     ``emit_violations``: also write the violation rows per micro-batch
     under ``output_dir/violations/batch_id=N`` (overwrite per batch id →
@@ -121,29 +122,25 @@ def stream_validate(
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
+        res = validate_scope(
+            batch,
+            ref,
+            cfg,
+            out_dir=(
+                os.path.join(violations_dir, f"batch_id={batch_id}")
+                if emit_violations
+                else None
+            ),
+            histogram=base_rows is not None,
+            emit=emit_violations,
+        )
+        if res is None:  # an empty micro-batch
             return
-        totals = batch.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
-        # the per-partition totals scan overlaps the validation core's scans
-        with ThreadPoolExecutor(max_workers=1) as helper:
-            fut_totals = helper.submit(totals.collect)
-            violations, grid = validate_scope(
-                batch,
-                batch,
-                ref,
-                cfg,
-                out_dir=(
-                    os.path.join(violations_dir, f"batch_id={batch_id}")
-                    if emit_violations
-                    else None
-                ),
-            )
-        violations.unpersist()
         rows = [
             ("uniqueness_batch", *r[1:]) if r[0] == "uniqueness" else r
             for r in verdict_rows(
-                grid,
-                sorted(tuple(r) for r in fut_totals.result()),
+                res.grid,
+                [(pid, res.partitions[pid].n_rows) for pid in res.pending],
                 has_catalog=ref is not None,
                 cfg=cfg,
             )
@@ -152,16 +149,8 @@ def stream_validate(
             # the batch reduces to a bounded (kind x bucket) histogram
             # before it is collected: per-trigger drift cost is a
             # map-side partial agg plus driver math on histogram rows
-            hist = stats_ops.length_histogram(
-                batch,
-                bins=cfg.drift.histogram_bins,
-                bin_width=cfg.drift.histogram_bin_width,
-            )
             rows += drift_rows(
-                collect_histogram(hist, ["kind"]),
-                base_rows,
-                cfg,
-                "drift_len_batch",
+                res.hist_rows, base_rows, cfg, "drift_len_batch"
             )
         # per-batch_id dir + overwrite = idempotent on micro-batch
         # replay, same as the violations sink: foreachBatch may re-run

@@ -267,16 +267,19 @@ def test_crash_before_commit_is_invisible(tmp_path):
 
 
 @pytest.mark.parametrize(
-    "crash_at", ["after_temp_write", "after_link", "before_current_rename"]
+    "crash_at", ["after_temp_write", "after_link", "before_current_write"]
 )
 def test_crash_inside_commit_never_wedges_the_manifest(
     tmp_path, monkeypatch, crash_at
 ):
     """A commit killed inside its own window — its temp file written,
-    its version file linked, or its CURRENT hint not yet moved — never
-    stops the next commit, and the final records equal a run that never
-    crashed. A crash after the link has committed: the next reader
-    rolls forward past the stale CURRENT hint."""
+    its version file linked, or its CURRENT hint not yet written —
+    never stops the next commit, and the final records equal a run that
+    never crashed. A crash after the link has committed: the next reader
+    rolls forward past the stale CURRENT hint. No ``_tmpcur_`` file ever
+    appears (the hint is written in place), and the next commit sweeps a
+    dead writer's temp file older than its own payload while a fresh
+    one — a live writer's — stays."""
 
     class Killed(Exception):
         pass
@@ -289,7 +292,8 @@ def test_crash_inside_commit_never_wedges_the_manifest(
 
     m = Manifest(str(tmp_path / "crashed"))
     m.commit_validated(r1, "r1", "t0")
-    link, rename = os.link, os.rename
+    link, real_open = os.link, open
+    current = os.path.join(m.path, "CURRENT")
 
     def link_after(src, dst):
         if crash_at == "after_temp_write":
@@ -298,25 +302,79 @@ def test_crash_inside_commit_never_wedges_the_manifest(
         if crash_at == "after_link":
             raise Killed
 
-    def rename_before(src, dst):
-        raise Killed
+    def open_before_current(path, mode="r", *args, **kwargs):
+        if path == current and "w" in mode and (
+            crash_at == "before_current_write"
+        ):
+            raise Killed
+        return real_open(path, mode, *args, **kwargs)
+
+    import builtins
 
     monkeypatch.setattr(os, "link", link_after)
-    if crash_at == "before_current_rename":
-        monkeypatch.setattr(os, "rename", rename_before)
+    monkeypatch.setattr(builtins, "open", open_before_current)
     with pytest.raises(Killed):
         m.commit_validated(r2, "r2", "t1")
-    monkeypatch.setattr(os, "link", link)
-    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.undo()
 
     committed = crash_at != "after_temp_write"
     assert Manifest(m.path).current_version() == (2 if committed else 1)
+    # a killed process's temp payload (its finally never ran), back-dated
+    # before the next commit's own, and a live writer's fresh one
+    stray, fresh = (
+        os.path.join(m.path, f"_tmp_{name}") for name in ("dead", "live")
+    )
+    for path in (stray, fresh):
+        with real_open(path, "w") as f:
+            f.write("{}")
+    os.utime(stray, (0, 0))
+    os.utime(fresh, (4e9, 4e9))
     # the next run commits, whatever the crash left behind
     v = Manifest(m.path).commit_validated(r2, "r2", "t1")
     assert v == (3 if committed else 2)
     assert Manifest(m.path).current_version() == v
     assert Manifest(m.path).load() == clean.load()
-    assert not [f for f in os.listdir(m.path) if f.startswith("_tmp_")]
+    left = [f for f in os.listdir(m.path) if f.startswith("_tmp")]
+    assert left == ["_tmp_live"], left
+
+
+def test_torn_current_hint_reads_as_zero_and_rolls_forward(tmp_path):
+    """CURRENT is only a hint: empty, unparsable or missing, the reader
+    rolls forward from version 0 to the last committed version."""
+    m = Manifest(str(tmp_path / "manifest"))
+    for pid in range(3):
+        m.commit_validated(
+            [{"partition_id": pid, "snapshot_hash": f"h{pid}"}], "r", "t"
+        )
+    current = os.path.join(m.path, "CURRENT")
+    for torn in ("", "v", "garbage"):
+        with open(current, "w") as f:
+            f.write(torn)
+        assert m.current_version() == 3
+    os.unlink(current)
+    assert m.current_version() == 3
+    assert sorted(m.load()) == ["0", "1", "2"]
+
+
+def test_swept_temp_fails_its_writer_as_a_lost_race(tmp_path, monkeypatch):
+    """A writer whose temp file a newer commit swept before its link
+    gets the concurrent-commit error, like any writer that lost the
+    race, and leaves nothing behind."""
+    m = Manifest(str(tmp_path / "manifest"))
+    m.commit_validated([{"partition_id": 0, "snapshot_hash": "h0"}], "r", "t")
+    link = os.link
+
+    def swept_before_link(src, dst):
+        os.unlink(src)
+        link(src, dst)
+
+    monkeypatch.setattr(os, "link", swept_before_link)
+    with pytest.raises(RuntimeError, match="concurrent manifest commit"):
+        m.commit_validated([{"partition_id": 1, "snapshot_hash": "h1"}],
+                           "r", "t")
+    monkeypatch.undo()
+    assert m.current_version() == 1
+    assert not [f for f in os.listdir(m.path) if f.startswith("_tmp")]
 
 
 def test_hash_scheme_upgrade_revalidates_explicitly(spark, docs, tmp_path):

@@ -554,6 +554,45 @@ def test_rowlocal_and_join_referential_paths_agree(
     assert verd(rowlocal) == verd(probe) == verd(legacy)
 
 
+def test_driver_grid_matches_count_grid(spark, docs, catalog, monkeypatch):
+    """The pass's verdict grid is driver math over the narrow pass's
+    collected rows; it equals ``_count_grid`` over the full violation
+    rows on the uncapped path, on the exemplar-capped path (whose rows
+    are a subset) and when the dup keys and orphan groups exceed the
+    broadcast cap and attach through a cached shuffle join — which also
+    writes the same rows."""
+    import dataclasses
+
+    import anomalydetection_spark.plans.pipeline as P
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.operators.referential import ReferentialCheck
+
+    ref = ReferentialCheck(spark, catalog)
+
+    def grid(res):
+        return {
+            p: {k: v for k, v in g.items() if k != "partition_id" and v}
+            for p, g in res.items()
+        }
+
+    def rows(res):
+        return sorted(map(str, res.violations.collect()))
+
+    full = P.validate_scope(docs, ref)
+    want = grid(P._count_grid(full.violations))
+    assert want and grid(full.grid) == want
+    capped = P.validate_scope(
+        docs, ref,
+        dataclasses.replace(DEFAULT_CONFIG, max_violation_exemplars=2),
+    )
+    assert grid(capped.grid) == want
+    assert capped.violations.count() < full.violations.count()
+    monkeypatch.setattr(P, "BROADCAST_MAX_CATALOG_ROWS", 0)
+    beyond = P.validate_scope(docs, ref)
+    assert grid(beyond.grid) == want
+    assert rows(beyond) == rows(full)
+
+
 def test_exemplar_cap_exact_verdicts_smaller_sink(spark, docs, catalog):
     """max_violation_exemplars: verdict rows are IDENTICAL to the
     uncapped run (counts come from window aggregates, not row counts),

@@ -59,42 +59,6 @@ def test_ann_topk_is_rank_limited(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_rowlocal_violations_scan_never_shuffles(spark, docs, catalog):
-    """The wide violations scan with a broadcastable catalog must be
-    shuffle-free: referential is a row-local Arrow membership UDF and
-    uniqueness attaches via broadcast — a SortMergeJoin or a non-
-    broadcast Exchange in this DAG means the wide scope is being
-    shuffled again (the round-1 scaling killer)."""
-    from anomalydetection_spark.operators.referential import (
-        collect_catalog_keys,
-        orphan_refs_rowlocal_udf,
-    )
-    from anomalydetection_spark.operators.uniqueness import duplicate_keys
-    from anomalydetection_spark.plans.pipeline import _all_violations
-
-    dups = duplicate_keys(docs, "doc_id")
-    udf = orphan_refs_rowlocal_udf(spark, collect_catalog_keys(catalog))
-    viol = _all_violations(docs, dups, None, orphan_udf=udf)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        viol.explain("formatted")
-    plan = buf.getvalue()
-    assert "ArrowEvalPython" in plan
-    assert "SortMergeJoin" not in plan
-    # the only exchanges allowed feed the dup-key broadcast side
-    import re
-
-    non_broadcast = [
-        ln for ln in plan.splitlines()
-        if re.search(r"Exchange (?!.*EXECUTOR_BROADCAST)", ln)
-        and "Exchange" in ln and "BroadcastExchange" not in ln
-        and "hashpartitioning" in ln
-    ]
-    # dup-key aggregation legitimately shuffles its narrow key column;
-    # nothing else may
-    assert len(non_broadcast) <= 1, non_broadcast
-
-
 def test_profile_default_plan_single_pass(spark):
     """The default (HLL) profiler plan must stay scan → partial agg →
     ONE exchange → final agg → stack: no Expand (the multi-column
@@ -109,41 +73,6 @@ def test_profile_default_plan_single_pass(spark):
     assert "Expand" not in plan
     assert plan.count("Exchange") <= 2  # plan tree + details listing
     assert "partial_" in plan
-
-
-def test_capped_violations_single_extra_exchange(spark, docs, catalog):
-    """Exemplar capping may add exactly ONE non-broadcast exchange over
-    the violation stream (the window on (check, partition_id)); the
-    wide scope itself must still reach the window without shuffling,
-    and all count columns must ride the same window exchange."""
-    from anomalydetection_spark.operators.referential import (
-        collect_catalog_keys,
-        orphan_refs_rowlocal_udf,
-    )
-    from anomalydetection_spark.operators.uniqueness import duplicate_keys
-    from anomalydetection_spark.plans.pipeline import (
-        _all_violations,
-        _cap_violations,
-    )
-
-    dups = duplicate_keys(docs, "doc_id")
-    udf = orphan_refs_rowlocal_udf(spark, collect_catalog_keys(catalog))
-    viol = _cap_violations(
-        _all_violations(docs, dups, None, orphan_udf=udf), 3
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        viol.explain("formatted")
-    plan = buf.getvalue()
-    non_broadcast = [
-        ln for ln in plan.splitlines()
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-        and "hashpartitioning" in ln
-    ]
-    # dup-key agg shuffle (narrow) + ONE window shuffle; nothing else
-    assert len(non_broadcast) <= 2, non_broadcast
-    window_lines = [ln for ln in plan.splitlines() if "Window" in ln]
-    assert window_lines, "expected a Window operator in the capped plan"
 
 
 def test_quality_filter_stays_jvm_side_single_agg(spark):
@@ -338,8 +267,9 @@ def test_segmented_contract_one_grouped_agg_pass(spark):
 
 
 def _executed_nodes(spark, after_eid: int) -> tuple[int, list]:
-    """(max executionId seen, [(node name, node desc, {metric: value})]
-    for every plan node of the executions with id > after_eid) from the
+    """(max executionId seen, [(node name, node desc, {metric: value},
+    executionId)] for every plan node of the executions with id >
+    after_eid) from the
     SQL status store. Watermarking by executionId (monotonic) keeps the
     window correct under the store's retained-executions eviction in a
     long suite run."""
@@ -349,11 +279,14 @@ def _executed_nodes(spark, after_eid: int) -> tuple[int, list]:
     ss = spark._jsparkSession.sharedState().statusStore()
     lst = ss.executionsList()
     max_eid, nodes = after_eid, []
-    for i in range(lst.size()):
+    # the list is in executionId order: walk back from the newest and
+    # stop at the watermark, so a late call in a long suite does not
+    # read every retained execution's plan graph over py4j
+    for i in reversed(range(lst.size())):
         eid = lst.apply(i).executionId()
-        max_eid = max(max_eid, eid)
         if eid <= after_eid:
-            continue
+            break
+        max_eid = max(max_eid, eid)
         vals = ss.executionMetrics(eid)
         nit = ss.planGraph(eid).allNodes().iterator()
         while nit.hasNext():
@@ -365,8 +298,16 @@ def _executed_nodes(spark, after_eid: int) -> tuple[int, list]:
                 v = vals.get(m.accumulatorId())
                 if v.isDefined():
                     metrics[m.name()] = str(v.get())
-            nodes.append((n.name(), n.desc(), metrics))
+            nodes.append((n.name(), n.desc(), metrics, eid))
     return max_eid, nodes
+
+
+def _last_execution_id(spark) -> int:
+    """The newest SQL executionId so far — the watermark a test takes
+    before the work whose executed plans it reads."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    lst = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return lst.apply(lst.size() - 1).executionId() if lst.size() else 0
 
 
 def _files_read(node) -> int:
@@ -405,26 +346,29 @@ def _marker_job_id(spark) -> int:
 
 
 # Spark jobs of the resumed manifest pass below (an adaptive-execution
-# shuffle query counts one job per query stage): the snapshot collect,
-# the dup-key, histogram, baseline and catalog reads, the staged wide
-# write, and ONE count-grid collect. Verdicts, rollup, drift and manifest
-# records are driver-side math over collected rows (with verdicts built
-# by Spark joins, windows and unions the same pass ran 35 jobs), so a
-# verdict tier that drifts back into Spark jobs fails this pin.
-RESUME_PASS_JOBS = 18
+# shuffle query counts one job per query stage): the narrow pass's
+# snapshot collect; the dup keys, the orphan pairs (with the catalog's
+# key-column broadcast) and the length histogram from its cache; the
+# baseline and catalog-size reads; and the staged wide write. Verdicts,
+# rollup, drift and manifest records are driver-side math over
+# collected rows — the verdict grid included — so a pass that drifts
+# back into a Spark job after the write fails this pin.
+RESUME_PASS_JOBS = 15
 
 
 def test_validation_pass_scan_budget(spark, tmp_path):
-    """The BASELINE.md scan budget, pinned by EXECUTED plans: the
-    no-manifest flagship pass scans the docs table exactly 4 times
-    (narrow dup-key scan, narrow per-partition totals, drift-histogram
-    scan, the one wide violations scan) — a 5th scan sneaking in fails
-    here, not in a 100 TB run. The cold-start MANIFEST pass must ALSO
-    be exactly 4: the round-5 trim fuses the snapshot-hash scan into
-    the concurrent window where it REPLACES the totals scan, so
-    recording lineage hashes costs no extra pass over the data.
-    A pass resumed from that manifest after two partitions changed
-    then starts exactly RESUME_PASS_JOBS Spark jobs."""
+    """The scan budget, pinned by EXECUTED plans: the no-manifest
+    flagship pass scans the docs table exactly twice — the cached
+    narrow pass, which feeds discovery, the dup keys, the orphans, the
+    conformance counts and the drift histogram, and the one wide
+    violations write — so a 3rd scan sneaking in fails here, not in a
+    100 TB run. The cold-start MANIFEST pass must ALSO be exactly 2:
+    the snapshot hashes ride the same narrow pass, so recording lineage
+    hashes costs no extra pass over the data. A pass resumed from that
+    manifest after two partitions changed then starts exactly
+    RESUME_PASS_JOBS Spark jobs and scans twice too (the fixtures
+    spread every partition over every file, so partition filters prune
+    no file)."""
     from anomalydetection_spark.fixtures import (
         generate_documents,
         generate_media_catalog,
@@ -449,27 +393,28 @@ def test_validation_pass_scan_budget(spark, tmp_path):
     )
     assert n_files > 0
 
-    seen, _ = _parquet_files_read(spark, 0)
+    seen = _last_execution_id(spark)
     res = run_validation(spark, docs, catalog=cat, baseline_hist=baseline)
     assert res.verdicts.count() > 0 and res.violations.count() > 0
     seen2, files = _parquet_files_read(spark, seen)
     spark.catalog.clearCache()
-    assert files == 4 * n_files, (
+    assert files == 2 * n_files, (
         f"no-manifest pass read {files} docs files = "
-        f"{files / n_files:.1f} scans (budget 4)"
+        f"{files / n_files:.1f} scans (budget 2)"
     )
 
     res2 = run_validation(
         spark, docs, catalog=cat, baseline_hist=baseline,
         manifest_dir=str(tmp_path / "m"), run_id="r1",
     )
-    assert res2.verdicts.count() > 0
-    _, files2 = _parquet_files_read(spark, seen2)
+    # without a violations_dir the wide scan runs on the first use
+    assert res2.verdicts.count() > 0 and res2.violations.count() > 0
+    seen3, files2 = _parquet_files_read(spark, seen2)
     spark.catalog.clearCache()
-    assert files2 == 4 * n_files, (
+    assert files2 == 2 * n_files, (
         f"cold-start manifest pass read {files2} docs files = "
-        f"{files2 / n_files:.1f} scans (budget 4: the snapshot-hash "
-        "scan must REPLACE the totals scan, not add one)"
+        f"{files2 / n_files:.1f} scans (budget 2: the snapshot hashes "
+        "ride the narrow pass, not a scan of their own)"
     )
 
     # resume: partitions 2 and 5 change (reversed spans → new hashes)
@@ -483,6 +428,7 @@ def test_validation_pass_scan_budget(spark, tmp_path):
         ).otherwise(F.col("spans")),
     ).write.parquet(v2_path)
     docs_v2 = spark.read.parquet(v2_path)
+    seen3, _ = _parquet_files_read(spark, seen3)  # the rewrite above
     before = _marker_job_id(spark)
     res3 = run_validation(
         spark, docs_v2, catalog=cat, baseline_hist=baseline,
@@ -490,23 +436,41 @@ def test_validation_pass_scan_budget(spark, tmp_path):
         violations_dir=str(tmp_path / "viol"), run_id="r2",
     )
     n_jobs = _marker_job_id(spark) - before - 1
+    _, files3 = _parquet_files_read(spark, seen3)
     spark.catalog.clearCache()
     assert res3.validated_partitions == [2, 5]
     assert n_jobs == RESUME_PASS_JOBS, (
         f"resumed pass ran {n_jobs} Spark jobs (pinned {RESUME_PASS_JOBS})"
     )
+    n_files_v2 = sum(1 for f in os.listdir(v2_path) if f.endswith(".parquet"))
+    assert files3 == 2 * n_files_v2, (
+        f"resumed pass read {files3} docs files = "
+        f"{files3 / n_files_v2:.1f} scans (budget 2)"
+    )
 
 
 # Spark jobs of one stream micro-batch over the fixture docs in a single
-# trigger, stream setup (catalog size, key collect) included, per
-# referential shape (operators/referential.py): the row-local UDF; the
-# probe-side UDF of a catalog beyond the broadcast cap, whose key set is
-# the catalog keys the batch's distinct refs name; and the salted
-# anti-join fallback, which also pays the probe-side guard's count of
-# the batch's distinct refs. The micro-batch runs the batch pass's size
-# guards: the dup keys (and, salted, the orphan aggregate) are cached
-# and counted before the wide write decides whether to broadcast them.
-STREAM_BATCH_JOBS = {"udf": 17, "probe": 20, "salted": 24}
+# trigger, stream setup (catalog size) included, per referential shape
+# (operators/referential.py): "udf" is the row-local shape, whose build
+# side is the whole catalog key column (it ran a Python UDF once); the
+# probe-side shape of a catalog beyond the broadcast cap, which collects
+# the batch's distinct refs and the catalog keys they name; and the
+# salted anti-join fallback. An empty micro-batch would end at its first
+# (discovery) collect, so no isEmpty job runs.
+STREAM_BATCH_JOBS = {"udf": 13, "probe": 18, "salted": 15}
+
+_PYTHON_EVAL = ("ArrowEvalPython", "BatchEvalPython")
+
+
+def _narrow_scans_without_text(nodes) -> list:
+    """Docs scan nodes whose ReadSchema prunes the spans to the
+    subfields the narrow pass reads — never ``text``."""
+    return [
+        n for n in nodes
+        if "Scan parquet" in n[0]
+        and "spans:array<struct<kind:string,media_ref:string,offset:int>>"
+        in n[1]
+    ]
 
 
 @pytest.mark.parametrize("shape", ["udf", "probe", "salted"])
@@ -515,9 +479,10 @@ def test_stream_microbatch_job_count(spark, docs, catalog, tmp_path,
     """A micro-batch runs the batch pass's validation core: its Spark
     job count is pinned like the resumed pass's, so per-trigger work
     that drifts back in (a catalog re-scan, a second wide scan) fails
-    here. The probe-side micro-batch's executed plans hold no
-    sort-merge join, and read the catalog's key column exactly once,
-    under a broadcast left-semi join."""
+    here. On the row-local and probe-side shapes no executed plan holds
+    a Python evaluation node. The probe-side micro-batch's executed
+    plans hold no sort-merge join, and read the catalog's key column
+    exactly once, under a broadcast left-semi join."""
     import anomalydetection_spark.operators.referential as R
     from anomalydetection_spark.streaming.incremental import stream_validate
 
@@ -527,7 +492,7 @@ def test_stream_microbatch_job_count(spark, docs, catalog, tmp_path,
         monkeypatch.setattr(R, "PROBE_MAX_DISTINCT_REFS", 0)
     inp = str(tmp_path / "in")
     docs.coalesce(1).write.parquet(inp)
-    seen, _ = _executed_nodes(spark, 0)
+    seen = _last_execution_id(spark)
     before = _marker_job_id(spark)
     q = stream_validate(
         spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"),
@@ -541,9 +506,12 @@ def test_stream_microbatch_job_count(spark, docs, catalog, tmp_path,
         f"{shape} micro-batch ran {n_jobs} Spark jobs "
         f"(pinned {STREAM_BATCH_JOBS[shape]})"
     )
-    if shape != "probe":
+    if shape == "salted":
         return
     _, nodes = _executed_nodes(spark, seen)
+    assert not [n for n in nodes if n[0] in _PYTHON_EVAL]
+    if shape != "probe":
+        return
     assert not [n for n in nodes if "SortMergeJoin" in n[0]]
     key_scans = [
         n for n in nodes
@@ -555,3 +523,113 @@ def test_stream_microbatch_job_count(spark, docs, catalog, tmp_path,
     assert sum(map(_files_read, key_scans)) == catalog_files
     assert [n for n in nodes if n[0] == "BroadcastHashJoin"
             and "LeftSemi" in n[1]]
+
+
+def _wide_write_nodes(spark, after_eid: int) -> list:
+    """The executed plan nodes of the one execution after ``after_eid``
+    that writes files — the wide violations scan."""
+    _, nodes = _executed_nodes(spark, after_eid)
+    (eid,) = {n[3] for n in nodes if "InsertIntoHadoopFsRelation" in n[0]}
+    return [n for n in nodes if n[3] == eid]
+
+
+def _row_exchanges(nodes) -> list:
+    """Shuffle exchanges (not broadcasts) among ``nodes``."""
+    return [n for n in nodes if n[0] == "Exchange"]
+
+
+def test_rowlocal_violations_scan_never_shuffles(
+    spark, docs, catalog, tmp_path, monkeypatch
+):
+    """The wide violations scan of ``validate_scope`` is shuffle-free on
+    the row-local and the probe-side referential shapes: the dup keys
+    and the orphan groups attach as broadcast local relations, and no
+    Python evaluation node runs in any of the pass's executed plans. A
+    SortMergeJoin or a shuffle Exchange in the write means the wide
+    scope is being shuffled again (the round-1 scaling killer). The
+    narrow pass, without a manifest's snapshot hashes, reads the spans
+    pruned to the subfields its checks use — never their text."""
+    import anomalydetection_spark.operators.referential as R
+    from anomalydetection_spark.plans.pipeline import validate_scope
+
+    for shape in ("row-local", "probe-side"):
+        if shape == "probe-side":
+            monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", 1000)
+        seen = _last_execution_id(spark)
+        res = validate_scope(
+            docs, R.ReferentialCheck(spark, catalog),
+            out_dir=str(tmp_path / shape),
+        )
+        assert res.grid and res.violations.count() > 0
+        _, nodes = _executed_nodes(spark, seen)
+        assert not [n for n in nodes if n[0] in _PYTHON_EVAL], shape
+        # no manifest, so no snapshot hash: the narrow pass reads no text
+        assert _narrow_scans_without_text(nodes), shape
+        write = _wide_write_nodes(spark, seen)
+        assert not [n for n in write if "SortMergeJoin" in n[0]], shape
+        assert not _row_exchanges(write), shape
+        joins = [n for n in write if n[0] == "BroadcastHashJoin"]
+        assert len(joins) == 2, [n[1] for n in joins]  # dup keys + orphans
+
+
+def test_capped_violations_single_extra_exchange(
+    spark, docs, catalog, tmp_path
+):
+    """Exemplar capping adds exactly ONE shuffle exchange to the wide
+    write — the window on (check, partition_id) over the violation
+    stream; the wide scope itself still reaches it through broadcast
+    joins only, and no count window rides along (the verdict counts are
+    computed before the write)."""
+    import dataclasses
+
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.operators.referential import ReferentialCheck
+    from anomalydetection_spark.plans.pipeline import validate_scope
+
+    cfg = dataclasses.replace(DEFAULT_CONFIG, max_violation_exemplars=3)
+    seen = _last_execution_id(spark)
+    validate_scope(
+        docs, ReferentialCheck(spark, catalog), cfg,
+        out_dir=str(tmp_path / "viol"),
+    )
+    write = _wide_write_nodes(spark, seen)
+    assert not [n for n in write if "SortMergeJoin" in n[0]]
+    (window_exchange,) = _row_exchanges(write)
+    assert "hashpartitioning(check" in window_exchange[1]
+    (window,) = [n for n in write if n[0] == "Window"]
+    assert "row_number()" in window[1] and "count(" not in window[1]
+
+
+# py4j round trips to BUILD (not run) one pass's wide violation plan,
+# warm: the SQL-string plan takes ~70, the Column-chain build it replaced
+# took 972 (0.33-0.40 s against 0.17 s of driver time).
+WIDE_PLAN_PY4J_CALLS = 80
+
+
+def test_wide_plan_build_py4j_round_trips(spark, docs):
+    """Building the wide violation plan stays cheap on the driver: a
+    counting wrapper on the gateway client's ``send_command`` bounds
+    its py4j round trips, so a return to per-expression Column
+    construction fails here."""
+    from anomalydetection_spark.plans.pipeline import _all_violations
+
+    dups = spark.createDataFrame([("doc1", 2)], "doc_id string, dup_cnt long")
+    orphans = spark.createDataFrame(
+        [("doc1", 0, 1, ["m1"])],
+        "doc_id string, partition_id int, row_fp long,"
+        " orphan_refs array<string>",
+    )
+    _all_violations(docs, dups, orphans)  # first-use py4j lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        _all_violations(docs, dups, orphans)
+    finally:
+        del client.send_command
+    assert 0 < len(calls) <= WIDE_PLAN_PY4J_CALLS, len(calls)

@@ -89,64 +89,157 @@ def test_drain_templates_generalize_monotonically(lines):
             assert b == a or b == WILDCARD
 
 
-ref_str = st.text(
-    alphabet=st.characters(whitelist_categories=("Ll", "Nd")),
-    min_size=0,
-    max_size=6,
+_REFS = [None, "", "m1", "m2", "m3"]
+_span = st.one_of(
+    st.none(),
+    st.fixed_dictionaries({
+        "kind": st.sampled_from([None, "text", "image"]),
+        "text": st.just("t"),
+        "media_ref": st.sampled_from(_REFS),
+        "offset": st.sampled_from([None, 0, 1, 2]),
+    }),
+)
+_row = st.tuples(
+    st.sampled_from(["a", "b", "c", "d"]),          # doc_id
+    st.sampled_from([None, 0, 1]),                  # k2: a nullable key part
+    st.one_of(st.none(), st.lists(_span, max_size=4)),
+    st.integers(min_value=0, max_value=2),          # partition_id
 )
 
 
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.lists(st.one_of(st.none(), ref_str), max_size=6),
-        ),
-        max_size=200,
-    ),
-    st.lists(ref_str, max_size=30),
-)
-# pinned counterexamples from the id-keyed catalog-cache bug (fixed by
-# building the Arrow value_set once per task in the UDF closure): the
-# crash was address-reuse-dependent, so the exact inputs that surfaced
-# it stay as permanent anchors
-@example(rows=[["ɣ", "0"], ["0"]], catalog=[]).via("discovered failure")
-@example(
-    rows=[
-        [""],
-        [None, None, "", None, None, "ἔƅ5ɧɥħ"],
-        [None, None, "", None, None, "ἔƅ5ɧɥħ"],
-        None,
-        None,
-        [],
-        [None, None, "", None, None, "ţĭſɥ"],
-        None,
-        None,
-        None,
-        None,
-        ["𝟻ɖæὢÿɨ"],
+@st.composite
+def _tables(draw):
+    rows = draw(st.lists(_row, min_size=1, max_size=10))
+    # exact-duplicate rows, besides the same-id rows the draw makes
+    rows += draw(st.lists(st.sampled_from(rows), max_size=3))
+    catalog = draw(st.lists(st.sampled_from(_REFS), max_size=4))
+    pending = draw(st.sets(st.integers(min_value=0, max_value=2), min_size=1))
+    return rows, catalog, sorted(pending)
+
+
+def _reference_grid(rows, catalog, pending):
+    """Per-row Python oracle: partition → check → violating rows, and
+    the (doc_id, partition_id, detail) multiset of referential rows.
+    Uniqueness is over every row on (doc_id, k2), where a null part
+    never matches; the other checks cover the pending rows only."""
+    from collections import Counter
+
+    keys = Counter((d, k) for d, k, _, _ in rows if k is not None)
+    cat = {c for c in catalog if c is not None}
+    grid = {p: Counter() for p in pending}
+    ref_rows = Counter()
+    for doc_id, k2, spans, pid in rows:
+        if pid not in grid:
+            continue
+        g = grid[pid]
+        g["uniqueness"] += k2 is not None and keys[(doc_id, k2)] > 1
+        live = [sp for sp in spans or [] if sp is not None]
+        orphans = sorted({
+            sp["media_ref"] for sp in live
+            if sp["media_ref"] is not None and sp["media_ref"] not in cat
+        })
+        if orphans:
+            g["referential"] += 1
+            ref_rows[(doc_id, pid, "orphan_refs=" + ",".join(orphans))] += 1
+        offs = [None if sp is None else sp["offset"] for sp in spans or []]
+        g["null_spans"] += spans is None
+        g["empty_spans"] += spans == []
+        g["offset_monotonicity"] += any(
+            a is not None and b is not None and not b > a
+            for a, b in zip(offs, offs[1:])
+        )
+        g["null_span_kind"] += any(
+            sp is None or sp["kind"] is None for sp in spans or []
+        )
+        g["span_coherence"] += any(
+            sp["kind"] is not None
+            and (sp["kind"] == "text") == (sp["media_ref"] is not None)
+            for sp in live
+        )
+    return grid, ref_rows
+
+
+def _sp(kind, ref, offset=0):
+    return {"kind": kind, "text": "t", "media_ref": ref, "offset": offset}
+
+
+@settings(max_examples=8, deadline=None, derandomize=True)
+@given(_tables())
+# every case at once: a repeated orphan ref and a null span in one row;
+# a same-key row with differing refs in a partition left unvalidated;
+# a "" ref and an exact-duplicate row under a null key part; an
+# incoherent, non-monotone row; null and empty spans
+@example(table=(
+    [
+        ("a", 0, [_sp("image", "m2"), _sp("image", "m2", 1), None], 0),
+        ("a", 0, [_sp("image", "m1")], 1),
+        ("b", None, [_sp("image", "")], 0),
+        ("b", None, [_sp("image", "")], 0),
+        ("c", 1, [_sp("text", "m3", 2), _sp("image", None, 1)], 2),
+        ("c", 1, None, 2),
+        ("d", 0, [], 0),
     ],
-    catalog=["ȅșéṣ𑇑ĭ", "ǥőȃȭűǒ", "", "", "êǫ", "ſ9ɩ", "ţĭſɥ", "чǜůǎæⴚ"],
-).via("discovered failure")
-def test_orphan_kernel_matches_python_reference(rows, catalog):
-    """The Arrow orphan kernel must agree with a per-row Python
-    reference for arbitrary ref lists — null rows, null ELEMENTS
-    (unprojected media_refs ride through since the JVM side is a bare
-    transform now), empties, and duplicates (deduped in-kernel)."""
-    import pyarrow as pa
+    ["m1", None],
+    [0, 2],
+))
+def test_validate_scope_grid_matches_row_reference(spark, table):
+    """The live path on drawn tables: ``validate_scope``'s driver grid
+    (conformance counts from the narrow pass, uniqueness from the dup
+    keys' partition lists, referential from the orphan pairs grouped per
+    physical row) equals a per-row Python reference and ``_count_grid``
+    over the full violation rows, whose referential details name each
+    row's own sorted orphans. The draws mix "" refs, null elements and
+    null spans, repeated refs, duplicate doc_ids with differing refs,
+    exact-duplicate rows, a composite key with a null part, and a
+    resumed scope (only some partitions pending)."""
+    from collections import Counter
+    from dataclasses import replace
 
-    from anomalydetection_spark.operators.referential import _orphan_kernel
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.operators.referential import ReferentialCheck
+    from anomalydetection_spark.plans.pipeline import (
+        _count_grid,
+        validate_scope,
+    )
 
-    refs = pa.array(rows, type=pa.list_(pa.string()))
-    keys = np.sort(np.asarray(sorted(set(catalog)), dtype=object))
-    out = _orphan_kernel(refs, keys).to_pylist()
-    cat = set(catalog)
-    expect = [
-        sorted({v for v in (row or []) if v is not None and v not in cat})
-        for row in rows
-    ]
-    assert out == expect
+    rows, catalog, pending = table
+    docs = spark.createDataFrame(
+        rows,
+        "doc_id string, k2 int, spans array<struct<kind:string,"
+        "text:string,media_ref:string,offset:int>>, partition_id int",
+    )
+    cat = spark.createDataFrame([(c,) for c in catalog], "media_ref string")
+    res = validate_scope(
+        docs,
+        ReferentialCheck(spark, cat),
+        replace(DEFAULT_CONFIG, unique_key=["doc_id", "k2"]),
+        pending_of=lambda parts: [
+            p.partition_id for p in parts if p.partition_id in pending
+        ],
+    )
+    present = {r[3] for r in rows}
+    if not present & set(pending):
+        assert res is None
+        return
+    want, want_ref_rows = _reference_grid(rows, catalog, pending)
+    want = {p: want[p] for p in res.pending}
+    assert res.pending == sorted(present & set(pending))
+    got = {
+        p: Counter({k: v for k, v in g.items() if v})
+        for p, g in res.grid.items()
+    }
+    assert got == want
+    full = _count_grid(res.violations)
+    assert {
+        p: Counter({k: v for k, v in full.get(p, {}).items()
+                    if k != "partition_id" and v})
+        for p in res.pending
+    } == want
+    assert Counter(
+        (r.doc_id, r.partition_id, r.detail)
+        for r in res.violations.filter("check = 'referential'").collect()
+    ) == want_ref_rows
+    res.violations.unpersist()
 
 
 def test_t_quantile_expansion_accuracy():

@@ -148,10 +148,11 @@ def test_complete_catalog_passes(spark, docs):
 
 def test_referential_check_builds_bloom_once(spark, docs, catalog,
                                              monkeypatch):
-    """Beyond the broadcast cap the shared referential check is the
-    salted anti-join, and beyond the Bloom threshold its prefilter is
-    built ONCE per check however many scopes it probes; its per-doc
-    orphan aggregate flags exactly the docs the plain anti-join does."""
+    """Beyond the broadcast cap and the probe-side guard the shared
+    referential check is the salted anti-join, and beyond the Bloom
+    threshold its prefilter is built ONCE per check however many scopes
+    it probes; its per-doc orphan aggregate flags exactly the docs the
+    plain anti-join does."""
     import anomalydetection_spark.operators.referential as R
 
     builds = []
@@ -161,9 +162,10 @@ def test_referential_check_builds_bloom_once(spark, docs, catalog,
         lambda *a, **k: builds.append(1) or real_build(*a, **k),
     )
     monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", 100)
+    monkeypatch.setattr(R, "PROBE_MAX_DISTINCT_REFS", 0)
     monkeypatch.setattr(R, "BLOOM_MIN_CATALOG_ROWS", 100)
     ref = R.ReferentialCheck(spark, catalog).build()
-    assert ref.udf is None and ref.bloom is not None
+    assert ref.bloom is not None and len(builds) == 1
     got = {r.doc_id for r in ref.orphan_doc(docs).collect()}
     ref.orphan_doc(docs.filter(F.col("partition_id") < 4)).count()
     assert len(builds) == 1
