@@ -18,7 +18,7 @@ both histograms are collected to the driver and ONE kernel
 bounded by bin width; exact small-data KS is cross-checked in tests),
 JSD, chi-squared and the per-bucket PSI contributions in plain Python,
 summing in ascending bucket order so every score is deterministic. The
-DataFrame functions below are collect → kernel → ``createDataFrame``
+DataFrame functions below are collect → kernel → ``schema.local_frame``
 wrappers over it; the temporal rules further down stay JVM-side.
 """
 
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import VERDICTS_DDL
+from ..schema import VERDICTS_DDL, local_frame
 
 EPS = 1e-6
 
@@ -130,7 +130,7 @@ def _drift_frame(
         [T.StructField(k, current.schema[k].dataType) for k in keys] + fields
     )
     rows = [(*key, *vals) for key, st in stats.items() for vals in row_fn(st)]
-    return current.sparkSession.createDataFrame(rows, schema)
+    return local_frame(current.sparkSession, rows, schema)
 
 
 def _stat_frame(current, baseline, keys, bucket_col, stat):
@@ -303,7 +303,8 @@ def drift_verdicts(
     thresholds are given — all four statistics derive from the SAME
     bounded histogram pair in one kernel pass, never another table
     scan."""
-    return current_hist.sparkSession.createDataFrame(
+    return local_frame(
+        current_hist.sparkSession,
         drift_verdict_rows(
             collect_histogram(current_hist, keys),
             collect_histogram(baseline_hist, keys),

@@ -5,17 +5,18 @@ Engine generalization of the reference's metadata joins (J1-J4,
 ``spans.media_ref`` must exist in the media catalog; violating docs are
 emitted with their full original span sequence (span-sequence equality
 invariant); per-partition verdicts come from the pipeline's count grid.
-``ReferentialCheck`` is the one builder of the machinery below for the
-batch pass, the pre-flight and the stream.
+``ReferentialCheck.orphans`` is the one shape chooser below: the batch
+pass, the pre-flight and the stream (all through
+``plans/pipeline.py::validate_scope``) and ``orphan_refs`` take their
+join shape from it.
 
 The check's input is a scope's exploded refs (``ref_pairs``): one
 (doc_id, partition_id, row_fp, media_ref) pair per distinct non-null
 ref of a row, where ``row_fp = xxhash64(spans.media_ref)`` keeps
 duplicate doc_ids with differing refs apart. The orphan pairs are the
 pairs a left-anti join finds no catalog key for, grouped back per
-physical row — on the driver by the validation pass
-(plans/pipeline.py), by ``orphan_groups`` in Spark beyond the broadcast
-cap and in the pre-flight.
+physical row — on the driver by ``validate_scope``, by ``orphan_groups``
+in Spark beyond the broadcast cap.
 
 Scale design — the check stays in the JVM, and its broadcast side is
 the smaller of the two:
@@ -120,87 +121,6 @@ def collect_catalog_keys(catalog: DataFrame, col: str = "media_ref"):
     return np.sort(keys.astype(object, copy=False))
 
 
-def _anti_join(
-    pairs: DataFrame,
-    catalog: DataFrame,
-    n: int,
-    salt_buckets: int = 8,
-    bloom: tuple | None = None,
-) -> DataFrame:
-    """The ``pairs`` whose media_ref is missing from ``catalog`` (``n``
-    rows), behind the Bloom prefilter ``bloom`` when given: its
-    negatives are definite orphans, and only its positives take the
-    exact join. Within the broadcast cap that join is map-side, against
-    the broadcast key column (no reducer exists, so no skew to salt);
-    beyond it, a salted sort-merge anti-join — the catalog side is
-    replicated ``salt_buckets`` ways so a hot media_ref spreads across
-    reducers."""
-    definite_orphans = None
-    if bloom is not None:
-        mc = might_contain_udf(pairs.sparkSession, *bloom)
-        pairs = pairs.withColumn("_maybe", mc(F.col("media_ref")))
-        definite_orphans = pairs.filter(~F.col("_maybe")).drop("_maybe")
-        pairs = pairs.filter(F.col("_maybe")).drop("_maybe")
-    if n <= BROADCAST_MAX_CATALOG_ROWS:
-        out = pairs.join(
-            F.broadcast(catalog.select("media_ref")), "media_ref", "left_anti"
-        )
-    else:
-        salted_left = pairs.withColumn(
-            "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets))
-        )
-        salted_right = catalog.select("media_ref").crossJoin(
-            F.broadcast(
-                pairs.sparkSession.range(salt_buckets).select(
-                    F.col("id").cast("int").alias("_salt")
-                )
-            )
-        )
-        out = salted_left.join(
-            salted_right, ["media_ref", "_salt"], "left_anti"
-        ).drop("_salt")
-    if definite_orphans is not None:
-        out = definite_orphans.unionByName(out)
-    return out
-
-
-def orphan_refs(
-    docs: DataFrame,
-    catalog: DataFrame,
-    spark: SparkSession | None = None,
-    use_bloom: bool | None = None,
-    catalog_size_hint: int | None = None,
-    fpp: float = 0.01,
-    salt_buckets: int = 8,
-    bloom: tuple | None = None,
-    row_fingerprint: bool = False,
-) -> DataFrame:
-    """(doc_id, partition_id, media_ref) pairs whose ref is missing from
-    the catalog (plus ``row_fp`` when ``row_fingerprint`` — see
-    ``ref_pairs``), each once per doc.
-
-    ``use_bloom=None`` (auto): build the explicit Bloom prefilter only
-    when the catalog exceeds ``BLOOM_MIN_CATALOG_ROWS``. ``bloom``: a
-    prebuilt ``(bits, k, m)`` from ``build_bloom``, so a catalog probed
-    repeatedly pays the build once. ``catalog_size_hint`` skips the
-    catalog ``count()``."""
-    n = catalog_size_hint if catalog_size_hint is not None else catalog.count()
-    if bloom is None and spark is not None and (
-        use_bloom or (use_bloom is None and n > BLOOM_MIN_CATALOG_ROWS)
-    ):
-        bloom = build_bloom(catalog, "media_ref", n, fpp)
-    pairs = ref_pairs(docs)
-    if not row_fingerprint:
-        pairs = pairs.drop("row_fp")
-    # dedupe AFTER the join: orphan survivors are the tiny set
-    dedup_cols = ["doc_id", "media_ref"] + (
-        ["row_fp"] if row_fingerprint else []
-    )
-    return _anti_join(pairs, catalog, n, salt_buckets, bloom).dropDuplicates(
-        dedup_cols
-    )
-
-
 def orphan_groups(orphans: DataFrame) -> DataFrame:
     """Orphan pairs → one row per (doc_id, partition_id, row_fp) group:
     ``orphan_refs`` (sorted distinct) and ``n_rows``, the physical rows
@@ -260,7 +180,11 @@ class ReferentialCheck:
         ``most``, when known, bounds the number of pairs."""
         if self.n <= BROADCAST_MAX_CATALOG_ROWS:
             log.info("referential: row-local")
-            return _anti_join(pairs, self.catalog, self.n)
+            return pairs.join(
+                F.broadcast(self.catalog.select("media_ref")),
+                "media_ref",
+                "left_anti",
+            )
         # one bounded collect: one row past the ceiling tells "too many"
         # without a separate count, and the refs go back to the JVM as an
         # Arrow-backed local relation, so their broadcast starts no job.
@@ -271,13 +195,7 @@ class ReferentialCheck:
             refs = refs.limit(PROBE_MAX_DISTINCT_REFS + 1)
         refs = refs.toArrow()
         if refs.num_rows > PROBE_MAX_DISTINCT_REFS:
-            log.info(
-                "referential: %s",
-                "salted+bloom" if self.bloom is not None else "salted",
-            )
-            return _anti_join(
-                pairs, self.catalog, self.n, self.salt_buckets, self.bloom
-            )
+            return self._salted(pairs)
         present = (
             self.catalog.select("media_ref")
             .join(
@@ -299,13 +217,66 @@ class ReferentialCheck:
             "left_anti",
         )
 
+    def _salted(self, pairs: DataFrame) -> DataFrame:
+        """The salted sort-merge anti-join: the catalog side replicated
+        ``salt_buckets`` ways so a hot media_ref spreads across
+        reducers, behind the Bloom prefilter when the catalog has one —
+        its negatives are definite orphans, and only its positives take
+        the exact join."""
+        log.info(
+            "referential: %s",
+            "salted+bloom" if self.bloom is not None else "salted",
+        )
+        definite_orphans = None
+        if self.bloom is not None:
+            mc = might_contain_udf(self.spark, *self.bloom)
+            pairs = pairs.withColumn("_maybe", mc(F.col("media_ref")))
+            definite_orphans = pairs.filter(~F.col("_maybe")).drop("_maybe")
+            pairs = pairs.filter(F.col("_maybe")).drop("_maybe")
+        salted_left = pairs.withColumn(
+            "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(self.salt_buckets))
+        )
+        salted_right = self.catalog.select("media_ref").crossJoin(
+            F.broadcast(
+                self.spark.range(self.salt_buckets).select(
+                    F.col("id").cast("int").alias("_salt")
+                )
+            )
+        )
+        out = salted_left.join(
+            salted_right, ["media_ref", "_salt"], "left_anti"
+        ).drop("_salt")
+        if definite_orphans is not None:
+            out = definite_orphans.unionByName(out)
+        return out
+
     def build(self) -> "ReferentialCheck":
         """Run the one-time catalog work now instead of on first use."""
         if self.n > BROADCAST_MAX_CATALOG_ROWS:
             _ = self.bloom
         return self
 
-    def orphan_doc(self, docs: DataFrame) -> DataFrame:
-        """``orphan_groups`` of ``docs``: (doc_id, partition_id, row_fp,
-        orphan_refs, n_rows) per physical-row group with an orphan."""
-        return orphan_groups(self.orphans(ref_pairs(docs)))
+
+def orphan_refs(
+    docs: DataFrame,
+    catalog: DataFrame,
+    spark: SparkSession | None = None,
+    salt_buckets: int = 8,
+    catalog_size_hint: int | None = None,
+    row_fingerprint: bool = False,
+) -> DataFrame:
+    """(doc_id, partition_id, media_ref) pairs whose ref is missing from
+    the catalog (plus ``row_fp`` when ``row_fingerprint`` — see
+    ``ref_pairs``), each once per doc: ``ReferentialCheck.orphans`` of
+    the docs' ``ref_pairs``, so the shape is the pass's.
+    ``catalog_size_hint`` skips the catalog ``count()``."""
+    ref = ReferentialCheck(
+        spark or docs.sparkSession, catalog, catalog_size_hint, salt_buckets
+    )
+    pairs = ref.orphans(ref_pairs(docs))
+    if not row_fingerprint:
+        pairs = pairs.drop("row_fp")
+    # dedupe AFTER the join: orphan survivors are the tiny set
+    return pairs.dropDuplicates(
+        ["doc_id", "media_ref"] + (["row_fp"] if row_fingerprint else [])
+    )

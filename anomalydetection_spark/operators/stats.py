@@ -18,7 +18,7 @@ codegen, map-side partial agg) — no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -95,29 +95,15 @@ CONF_DETAIL_SQL = "concat_ws(',', {})".format(
 )
 
 
-def conformance_exprs() -> dict:
-    """Every CONF_CHECKS name → its boolean Column (``CONF_SQL``)."""
-    return {name: F.expr(pred) for name, pred in CONF_SQL.items()}
-
-
-def conformance_detail() -> Column:
-    """The violation rows' detail string (``CONF_DETAIL_SQL``)."""
-    return F.expr(CONF_DETAIL_SQL)
-
-
 def conformance_violations(docs: DataFrame) -> DataFrame:
     """Exact violating doc rows for the conformance checks, with the
     original span sequence verbatim (span-sequence equality invariant).
 
     Flags are row-local → computed inline, no join (a self-join on
     doc_id would fan out across planted duplicate ids)."""
-    return (
-        docs.select(
-            "doc_id", "partition_id", "spans",
-            conformance_detail().alias("detail"),
-        )
-        .filter(F.col("detail") != "")
-    )
+    return docs.selectExpr(
+        "doc_id", "partition_id", "spans", f"{CONF_DETAIL_SQL} AS detail"
+    ).filter("detail != ''")
 
 
 def hll_pairwise_overlap(df: DataFrame, group_col: str, value_col: str) -> DataFrame:

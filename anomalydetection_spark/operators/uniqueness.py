@@ -19,10 +19,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def key_present_sql(cols: list[str]) -> str:
+    """SQL predicate: no part of the key is null. A key with a null part
+    equals no other key (SQL equality), so it is never a duplicate —
+    the rule of ``duplicate_keys``, the pass's dup keys and their
+    equi-join attach."""
+    return " AND ".join(f"`{c}` IS NOT NULL" for c in cols)
+
+
 def duplicate_keys(df: DataFrame, key="doc_id") -> DataFrame:
     """Keys appearing more than once → (key..., dup_cnt). ``key`` may
     be one column name or a list (composite key) — the plan is the same
-    single partial-agg groupBy either way.
+    single partial-agg groupBy either way. A key with a null part is
+    never a duplicate (``key_present_sql``).
 
     Single groupBy: Spark's map-side partial aggregation IS the salted
     two-phase scheme — a key duplicated millions of times collapses to
@@ -36,6 +45,7 @@ def duplicate_keys(df: DataFrame, key="doc_id") -> DataFrame:
     cols = [key] if isinstance(key, str) else list(key)
     return (
         df.select(*cols)
+        .filter(key_present_sql(cols))
         .groupBy(*cols)
         .agg(F.count("*").alias("dup_cnt"))
         .filter(F.col("dup_cnt") > 1)

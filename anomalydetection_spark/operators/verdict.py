@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schema import VERDICTS_DDL, VERDICTS_SCHEMA
+from ..schema import VERDICTS_DDL, VERDICTS_SCHEMA, local_frame
 
 
 def _greedy_group(pdf: pd.DataFrame, text_col: str, ratio_threshold: float,
@@ -132,6 +132,6 @@ def global_verdict(partition_verdicts: DataFrame) -> DataFrame:
     up to one table-level row per check (partition_id = null) —
     collect → ``rollup_rows`` → local DataFrame."""
     rows = partition_verdicts.select(*VERDICTS_SCHEMA.names).collect()
-    return partition_verdicts.sparkSession.createDataFrame(
-        rollup_rows(rows), VERDICTS_DDL
+    return local_frame(
+        partition_verdicts.sparkSession, rollup_rows(rows), VERDICTS_DDL
     )

@@ -1,7 +1,7 @@
 """End-to-end validation pipeline: the engine's analog of the
 reference's per-file poll loop (/root/reference/main.py:136-275) →
 ensemble pass (:277-357), restructured for Spark. ``validate_scope`` is
-the validation core the batch pass and every stream micro-batch share:
+the core the batch pass, every stream micro-batch and the pre-flight share:
 
   ONE cached narrow projection of the key scope (key columns, doc_id,
   partition_id, the conformance detail string, the row hash when a
@@ -42,6 +42,8 @@ run's ``_staged_<run_id>`` directory is left behind.
 
 from __future__ import annotations
 
+import hashlib
+import math
 import os
 from collections import Counter
 
@@ -64,7 +66,7 @@ from ..operators.referential import (
     ref_pairs,
 )
 from ..operators.stats import CONF_CHECKS, CONF_DETAIL_SQL
-from ..operators.uniqueness import duplicate_keys
+from ..operators.uniqueness import duplicate_keys, key_present_sql
 from ..operators.verdict import rollup_rows
 from ..schema import VERDICTS_DDL, local_frame
 from ..sources.manifest import ROW_HASH_SQL, Manifest, snapshot_hash_sql
@@ -306,12 +308,11 @@ def _local(spark: SparkSession, tbl):
 
 def _dup_keys(narrow: DataFrame, key_cols: list[str], n_rows: int, cached):
     """(attach frame, broadcast?, partition_id → duplicate rows) of the
-    duplicated ``key_cols`` values of the ``n_rows`` key-scope rows. A
-    key with a null part never matches in the attach's equi-join, so it
-    is never a duplicate. A frame cached beyond the cap is appended to
-    ``cached``."""
+    duplicated ``key_cols`` values of the ``n_rows`` key-scope rows (a
+    key with a null part is never one: ``key_present_sql``). A frame cached
+    beyond the cap is appended to ``cached``."""
     agg = (
-        narrow.filter(" AND ".join(f"`{c}` IS NOT NULL" for c in key_cols))
+        narrow.filter(key_present_sql(key_cols))
         .groupBy(*key_cols)
         .agg(
             F.count("*").alias("dup_cnt"),
@@ -410,8 +411,9 @@ def validate_scope(
     emit: bool = True,
     mark=None,
 ) -> ScopeResult | None:
-    """The validation core of the batch pass and of every stream
-    micro-batch. ``docs`` is the key scope: duplicate ``cfg.unique_key``
+    """The validation core of the batch pass, of every stream
+    micro-batch and of the pre-flight's sampled tier (``emit=False``).
+    ``docs`` is the key scope: duplicate ``cfg.unique_key``
     values are detected over all of it (for an incremental pass the full
     table, so pairs straddling validated and pending partitions stay
     visible) and attributed within the validated scope, its partitions
@@ -766,6 +768,68 @@ def revalidate_with_feedback(
     )
 
 
+def _wilson(x: int, n: int, z: float) -> tuple[float, float]:
+    """Wilson score interval of ``x`` hits in ``n`` draws at the normal
+    quantile ``z``; total ignorance (0, 1) when ``n`` is 0."""
+    if n == 0:
+        return (0.0, 1.0)
+    p = x / n
+    denom = 1 + z * z / n
+    center = (p + z * z / (2 * n)) / denom
+    half = z * math.sqrt(p * (1 - p) / n + z * z / (4 * n * n)) / denom
+    # at x=0 center and half are mathematically EQUAL (both z²/2n/denom)
+    # but the sqrt path rounds a few ulps low, leaving a spurious +4e-19
+    # lower bound above the observed rate 0.0 — pin the exact endpoints
+    lo = 0.0 if x == 0 else max(0.0, center - half)
+    hi = 1.0 if x == n else min(1.0, center + half)
+    return (lo, hi)
+
+
+def _t_quantile(z: float, nu: int) -> float:
+    """Student-t quantile from its normal counterpart via the standard
+    asymptotic expansion in 1/nu (within 0.1% for nu >= 9, ~3-4% low at
+    nu = 3; callers must not use it below nu = 3 — t_1(99%) is 63.7 and
+    no expansion around z reaches it). Needed because a cluster sample
+    of m partitions estimates variance on m-1 dof — with m=4 the honest
+    99% multiplier is ~5.8, not 2.58; the normal quantile would make
+    small-m CIs confidently wrong."""
+    if nu < 3:
+        return float("inf")
+    z3, z5, z7 = z ** 3, z ** 5, z ** 7
+    return (
+        z
+        + (z3 + z) / (4 * nu)
+        + (5 * z5 + 16 * z3 + 3 * z) / (96 * nu * nu)
+        + (3 * z7 + 19 * z5 + 17 * z3 - 15 * z) / (384 * nu ** 3)
+    )
+
+
+def _cluster_ci(
+    xs: list[int], ns: list[int], n_clusters: int, z: float
+) -> tuple[float, float]:
+    """Ratio-estimator CI for a cluster (whole-partition) sample of m of
+    ``n_clusters`` clusters, with finite-population correction (collapses
+    to the exact value at fraction=1) and a Student-t multiplier on m-1
+    dof for the between-partition variance estimate."""
+    n_tot, x_tot, m = sum(ns), sum(xs), len(ns)
+    if n_tot == 0:
+        return (0.0, 1.0)
+    p = x_tot / n_tot
+    if m == n_clusters and m >= 1:
+        return (p, p)       # census: fpc would zero the variance
+    if m < 4:
+        # 1-3 sampled clusters = 0-2 variance dof: a 99%-level t
+        # multiplier is 9.9-63.7x the normal one — no useful bound.
+        # Report total ignorance; the zero-tolerance sighting rule
+        # still fires, everything else is honestly inconclusive.
+        return (0.0, 1.0)
+    nbar = n_tot / m
+    s2 = sum((x - p * n) ** 2 for x, n in zip(xs, ns)) / (m - 1)
+    var = max(0.0, (1 - m / n_clusters) * s2 / (m * nbar * nbar))
+    half = _t_quantile(z, m - 1) * math.sqrt(var)
+    return (max(0.0, p - half), min(1.0, p + half))
+
+
 def preflight_estimate(
     spark: SparkSession,
     docs: DataFrame,
@@ -779,8 +843,8 @@ def preflight_estimate(
 ) -> DataFrame:
     """Sampled pre-flight estimate: would a full validation pass
     pass its gates? At 10^12 docs you want this answer from a
-    ``fraction`` of the wide-column work before committing the full
-    pass — the 100 TB analog of a dry run.
+    ``fraction`` of the pass's work before committing the full pass —
+    the 100 TB analog of a dry run.
 
     Two tiers, matched to what each check actually costs:
 
@@ -788,14 +852,17 @@ def preflight_estimate(
       (a dup pair survives a p-sample with probability p²), but the
       dup-key scan only reads the KEY column — cheap at any scale —
       so it runs exact over the full table.
-    * **sampled** — the wide-column checks (conformance families +
-      referential), which dominate full-pass cost; per-check verdict
-      is ``fail`` if the confidence interval's floor clears the gate,
-      ``pass`` if its ceiling stays under, else ``inconclusive`` (run
-      the full pass / raise the fraction). For zero-tolerance gates
-      any sampled sighting is definitive: the sample is a subset of
-      the table, so an observed orphan proves a violation exists —
-      no statistics needed for ``fail``.
+    * **sampled** — the five conformance checks and referential,
+      counted by the pass's own core on the sample
+      (``validate_scope(sample, ..., emit=False)``: its narrow pass,
+      which reads only ``spans.kind/media_ref/offset``, and its
+      referential shape), so a sampled count means what the pass's
+      does. Per-check verdict is ``fail`` if the confidence interval's
+      floor clears the gate, ``pass`` if its ceiling stays under, else
+      ``inconclusive`` (run the full pass / raise the fraction). For
+      zero-tolerance gates any sampled sighting is definitive: the
+      sample is a subset of the table, so an observed orphan proves a
+      violation exists — no statistics needed for ``fail``.
 
     Two sampling ``mode``s, matched to what a sample costs at scale:
 
@@ -817,9 +884,6 @@ def preflight_estimate(
     (check, tier, n_evaluated, n_violations, rate, ci_lo, ci_hi,
     gate, verdict). Deterministic under (fraction, seed, mode).
     """
-    import hashlib
-    import math
-
     if mode not in ("rows", "partitions"):
         raise ValueError(f"mode must be 'rows' or 'partitions': {mode!r}")
 
@@ -830,15 +894,15 @@ def preflight_estimate(
         dups.agg(F.coalesce(F.sum("dup_cnt"), F.lit(0))).first()[0]
     )
 
-    # --- sampled wide tier: one scan, every flag in one agg ---
-    n_clusters_total = None
+    # --- sampled tier: the pass's core on the sample ---
+    n_clusters = None
     if mode == "partitions":
         all_pids = sorted(
             r.partition_id
             for r in docs.select("partition_id").distinct().collect()
         )
-        n_clusters_total = len(all_pids)
-        m = max(1, math.ceil(fraction * n_clusters_total))
+        n_clusters = len(all_pids)
+        m = max(1, math.ceil(fraction * n_clusters))
         chosen = sorted(
             all_pids,
             key=lambda p: hashlib.md5(f"{seed}:{p}".encode()).hexdigest(),
@@ -846,104 +910,28 @@ def preflight_estimate(
         sample = docs.filter(F.col("partition_id").isin(chosen))
     else:
         sample = docs.sample(fraction=fraction, seed=seed)
-    flags = stats_ops.conformance_exprs()
-    proj = [v.cast("long").alias(k) for k, v in flags.items()]
-    orphan_rows = {}
-    if catalog is not None:
-        # the sample's orphan groups: every shape runs on the SAMPLE's
-        # exploded refs only — fraction x the full cost
-        orphan_rows = {
-            r.partition_id: r.n
-            for r in ReferentialCheck(
-                spark, catalog, catalog_size_hint, cfg.salt_buckets
-            )
-            .orphan_doc(sample)
-            .groupBy("partition_id")
-            .agg(F.sum("n_rows").alias("n"))
-            .collect()
-        }
-    check_cols = list(flags)
-    # per-partition grid either way (metadata scale): rows mode sums it
-    # globally, partitions mode needs the per-cluster counts for the CI
-    grid = (
-        sample.select("partition_id", *proj)
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("__n"),
-            *[F.sum(k).alias(k) for k in check_cols],
-        )
-        .collect()
+    ref = (
+        ReferentialCheck(spark, catalog, catalog_size_hint, cfg.salt_buckets)
+        if catalog is not None
+        else None
     )
-    n_sample = sum(int(r["__n"]) for r in grid)
+    res = validate_scope(sample, ref, cfg, emit=False)
+    # per-partition counts either way (metadata scale): rows mode sums
+    # them, partitions mode needs the per-cluster counts for the CI
+    parts = res.partitions if res is not None else {}
+    ns = [parts[p].n_rows for p in parts]
+    per_check = {
+        name: [parts[p][name] for p in parts] for name in CONF_CHECKS
+    }
+    if ref is not None:
+        per_check["referential"] = [
+            res.grid[p]["referential"] for p in parts
+        ]
+    n_sample = sum(ns)
 
     gates = check_gates(cfg)
-
-    def _wilson(x: int, n: int) -> tuple[float, float]:
-        if n == 0:
-            return (0.0, 1.0)
-        z = confidence_z
-        p = x / n
-        denom = 1 + z * z / n
-        center = (p + z * z / (2 * n)) / denom
-        half = (
-            z * math.sqrt(p * (1 - p) / n + z * z / (4 * n * n)) / denom
-        )
-        # at x=0 center and half are mathematically EQUAL (both
-        # z²/2n/denom) but the sqrt path rounds a few ulps low,
-        # leaving a spurious +4e-19 lower bound above the observed
-        # rate 0.0 — pin the exact endpoints
-        lo = 0.0 if x == 0 else max(0.0, center - half)
-        hi = 1.0 if x == n else min(1.0, center + half)
-        return (lo, hi)
-
-    def _t_quantile(z: float, nu: int) -> float:
-        """Student-t quantile from its normal counterpart via the
-        standard asymptotic expansion in 1/nu (within 0.1% for nu >= 9,
-        ~3-4% low at nu = 3; callers must not use it below nu = 3 —
-        t_1(99%) is 63.7 and no expansion around z reaches it).
-        Needed because a cluster sample of m partitions estimates
-        variance on m-1 dof — with m=4 the honest 99% multiplier is
-        ~5.8, not 2.58; the normal quantile would make small-m CIs
-        confidently wrong."""
-        if nu < 3:
-            return float("inf")
-        z3, z5, z7 = z ** 3, z ** 5, z ** 7
-        return (
-            z
-            + (z3 + z) / (4 * nu)
-            + (5 * z5 + 16 * z3 + 3 * z) / (96 * nu * nu)
-            + (3 * z7 + 19 * z5 + 17 * z3 - 15 * z) / (384 * nu ** 3)
-        )
-
-    def _cluster_ci(xs: list[int], ns: list[int]) -> tuple[float, float]:
-        """Ratio-estimator CI for a cluster (whole-partition) sample of
-        m of M clusters, with finite-population correction (collapses
-        to the exact value at fraction=1) and a Student-t multiplier on
-        m-1 dof for the between-partition variance estimate."""
-        n_tot, x_tot, m = sum(ns), sum(xs), len(ns)
-        if n_tot == 0:
-            return (0.0, 1.0)
-        p = x_tot / n_tot
-        if m == n_clusters_total and m >= 1:
-            return (p, p)       # census: fpc would zero the variance
-        if m < 4:
-            # 1-3 sampled clusters = 0-2 variance dof: a 99%-level t
-            # multiplier is 9.9-63.7x the normal one — no useful bound.
-            # Report total ignorance; the zero-tolerance sighting rule
-            # still fires, everything else is honestly inconclusive.
-            return (0.0, 1.0)
-        nbar = n_tot / m
-        s2 = sum((x - p * n) ** 2 for x, n in zip(xs, ns)) / (m - 1)
-        var = max(
-            0.0,
-            (1 - m / n_clusters_total) * s2 / (m * nbar * nbar),
-        )
-        half = _t_quantile(confidence_z, m - 1) * math.sqrt(var)
-        return (max(0.0, p - half), min(1.0, p + half))
-
-    rows = []
     exact_rate = n_dup_docs / n_total if n_total else 0.0
-    rows.append(
+    rows = [
         (
             "uniqueness",
             "exact",
@@ -955,23 +943,14 @@ def preflight_estimate(
             gates["uniqueness"],
             "fail" if exact_rate > gates["uniqueness"] else "pass",
         )
-    )
-    per_check: dict[str, tuple[list[int], list[int]]] = {}
-    ns = [int(r["__n"]) for r in grid]
-    for name in check_cols:
-        per_check[name] = ([int(r[name] or 0) for r in grid], ns)
-    if catalog is not None:
-        per_check["referential"] = (
-            [int(orphan_rows.get(r["partition_id"], 0)) for r in grid],
-            ns,
-        )
+    ]
     tier = "sampled" if mode == "rows" else "sampled_partitions"
-    for name, (xs, ns_) in per_check.items():
+    for name, xs in per_check.items():
         x = sum(xs)
         if mode == "rows":
-            lo, hi = _wilson(x, n_sample)
+            lo, hi = _wilson(x, n_sample, confidence_z)
         else:
-            lo, hi = _cluster_ci(xs, ns_)
+            lo, hi = _cluster_ci(xs, ns, n_clusters, confidence_z)
         gate = gates[name]
         if x > 0 and gate == 0.0:
             verdict = "fail"       # sample ⊆ table: sighting is proof

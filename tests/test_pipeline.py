@@ -682,6 +682,35 @@ def test_preflight_estimate(spark, docs, catalog, expected):
     assert sorted(map(tuple, pf2.collect())) == sorted(map(tuple, pf.collect()))
 
 
+def test_preflight_null_key_part_is_no_duplicate(spark):
+    """A composite key with a null part equals no other key: two
+    ("a", null) rows are not duplicates, in the pass or in the
+    pre-flight's exact tier, so both count the two ("b", "x") rows."""
+    import dataclasses
+
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.plans.pipeline import preflight_estimate
+
+    spans = [("text", "hi", None, 0)]
+    docs = spark.createDataFrame(
+        [("a", None, spans, 0), ("a", None, spans, 0),
+         ("b", "x", spans, 0), ("b", "x", spans, 1)],
+        "doc_id string, src string, spans array<struct<kind:string,"
+        "text:string,media_ref:string,offset:int>>, partition_id int",
+    )
+    cfg = dataclasses.replace(DEFAULT_CONFIG, unique_key=["doc_id", "src"])
+    (table,) = [
+        r for r in run_validation(spark, docs, cfg=cfg).verdicts.collect()
+        if r.check == "uniqueness" and r.partition_id is None
+    ]
+    pf = {
+        r.check: r
+        for r in preflight_estimate(spark, docs, fraction=1.0, cfg=cfg)
+        .collect()
+    }
+    assert pf["uniqueness"].n_violations == table.n_violations == 2
+
+
 def test_preflight_partition_mode(spark, docs, catalog, expected):
     """Cluster-sampled pre-flight: the plan prunes to the chosen
     partition set (the scale point — unsampled files never open), the

@@ -191,14 +191,19 @@ def test_validate_scope_grid_matches_row_reference(spark, table):
     row's own sorted orphans. The draws mix "" refs, null elements and
     null spans, repeated refs, duplicate doc_ids with differing refs,
     exact-duplicate rows, a composite key with a null part, and a
-    resumed scope (only some partitions pending)."""
+    resumed scope (only some partitions pending). The pre-flight census
+    (``mode="partitions"``, ``fraction=1.0``) runs the same core on the
+    whole table, so its sampled counts are the oracle's totals and its
+    exact tier the oracle's duplicate rows."""
     from collections import Counter
     from dataclasses import replace
 
     from anomalydetection_spark.config import DEFAULT_CONFIG
     from anomalydetection_spark.operators.referential import ReferentialCheck
+    from anomalydetection_spark.operators.stats import CONF_CHECKS
     from anomalydetection_spark.plans.pipeline import (
         _count_grid,
+        preflight_estimate,
         validate_scope,
     )
 
@@ -209,15 +214,36 @@ def test_validate_scope_grid_matches_row_reference(spark, table):
         "text:string,media_ref:string,offset:int>>, partition_id int",
     )
     cat = spark.createDataFrame([(c,) for c in catalog], "media_ref string")
+    cfg = replace(DEFAULT_CONFIG, unique_key=["doc_id", "k2"])
+    present = {r[3] for r in rows}
+
+    # the pre-flight census (every partition sampled) runs the same core:
+    # each sampled count is the oracle's total over the whole table, and
+    # the exact tier counts the oracle's duplicate rows
+    census = {
+        r.check: r
+        for r in preflight_estimate(
+            spark, docs, catalog=cat, fraction=1.0, mode="partitions",
+            cfg=cfg,
+        ).collect()
+    }
+    totals = sum(
+        _reference_grid(rows, catalog, sorted(present))[0].values(), Counter()
+    )
+    assert census.pop("uniqueness").n_violations == totals["uniqueness"]
+    assert {c: r.n_violations for c, r in census.items()} == {
+        c: totals[c] for c in (*CONF_CHECKS, "referential")
+    }
+    assert {r.n_evaluated for r in census.values()} == {len(rows)}
+
     res = validate_scope(
         docs,
         ReferentialCheck(spark, cat),
-        replace(DEFAULT_CONFIG, unique_key=["doc_id", "k2"]),
+        cfg,
         pending_of=lambda parts: [
             p.partition_id for p in parts if p.partition_id in pending
         ],
     )
-    present = {r[3] for r in rows}
     if not present & set(pending):
         assert res is None
         return
@@ -243,23 +269,11 @@ def test_validate_scope_grid_matches_row_reference(spark, table):
 
 
 def test_t_quantile_expansion_accuracy():
-    """The 1/nu expansion tracks known Student-t quantiles within ~2%
-    for nu>=3 and converges to z for large nu; monotone decreasing in
-    nu (more clusters -> tighter multiplier)."""
-    from anomalydetection_spark.plans.pipeline import preflight_estimate  # noqa: F401
-    # access the inner helper through a tiny reimplementation guard:
-    # the function is defined inline; replicate the call path via the
-    # module-level math — instead pin through the public API below.
-    import math
-
-    def t_quantile(z, nu):
-        z3, z5, z7 = z ** 3, z ** 5, z ** 7
-        return (
-            z
-            + (z3 + z) / (4 * nu)
-            + (5 * z5 + 16 * z3 + 3 * z) / (96 * nu * nu)
-            + (3 * z7 + 19 * z5 + 17 * z3 - 15 * z) / (384 * nu ** 3)
-        )
+    """The pre-flight's 1/nu expansion tracks known Student-t quantiles
+    within ~2% for nu>=3 and converges to z for large nu; monotone
+    decreasing in nu (more clusters -> tighter multiplier); below nu=3
+    it gives no bound."""
+    from anomalydetection_spark.plans.pipeline import _t_quantile
 
     # scipy-free pins: known two-sided t quantiles
     known = {
@@ -269,12 +283,13 @@ def test_t_quantile_expansion_accuracy():
         (1.96, 30): 2.042,
     }
     for (z, nu), t_true in known.items():
-        got = t_quantile(z, nu)
+        got = _t_quantile(z, nu)
         tol = 0.04 if nu == 3 else 0.005
         assert abs(got - t_true) / t_true < tol, (z, nu, got, t_true)
-    seq = [t_quantile(2.5758, nu) for nu in (3, 5, 10, 50, 1000)]
+    seq = [_t_quantile(2.5758, nu) for nu in (3, 5, 10, 50, 1000)]
     assert seq == sorted(seq, reverse=True)
     assert abs(seq[-1] - 2.5758) < 0.01
+    assert _t_quantile(2.5758, 2) == float("inf")
 
 
 @settings(max_examples=60, deadline=None)

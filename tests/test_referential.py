@@ -25,26 +25,55 @@ def _expected_orphan_pairs(docs, catalog):
     }
 
 
-def test_orphans_exact_with_bloom(spark, docs, catalog):
-    exp = _expected_orphan_pairs(docs, catalog)
-    got = {
-        r.media_ref
-        for r in orphan_refs(docs, catalog, spark, use_bloom=True)
-        .select("media_ref")
-        .distinct()
-        .collect()
+def _forced(monkeypatch, bloom: bool):
+    """Force ``ReferentialCheck`` onto its salted shape on the fixture
+    catalog — a broadcast cap and a probe-side guard below its size —
+    with or without the Bloom prefilter."""
+    import anomalydetection_spark.operators.referential as R
+
+    monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", 100)
+    monkeypatch.setattr(R, "PROBE_MAX_DISTINCT_REFS", 0)
+    monkeypatch.setattr(
+        R, "BLOOM_MIN_CATALOG_ROWS", 100 if bloom else 10**9
+    )
+    return R
+
+
+def _orphan_pairs(ref, docs) -> set:
+    from anomalydetection_spark.operators.referential import ref_pairs
+
+    return {
+        (r.doc_id, r.row_fp, r.media_ref)
+        for r in ref.orphans(ref_pairs(docs)).collect()
     }
+
+
+def test_orphans_exact_with_bloom(spark, docs, catalog, monkeypatch):
+    """The salted+bloom shape finds exactly the refs the catalog lacks:
+    the prefilter drops no orphan, and the exact join removes its false
+    positives."""
+    R = _forced(monkeypatch, bloom=True)
+    ref = R.ReferentialCheck(spark, catalog)
+    assert ref.bloom is not None
+    got = {m for _, _, m in _orphan_pairs(ref, docs)}
+    exp = _expected_orphan_pairs(docs, catalog)
     assert got == exp
     # sanity: the planted-missing modulus actually shows up
     assert any(int(m[1:]) % MISSING_REF_MOD == 7 for m in exp)
 
 
-def test_orphans_exact_without_bloom(spark, docs, catalog):
-    with_b = orphan_refs(docs, catalog, spark, use_bloom=True)
-    without_b = orphan_refs(docs, catalog, spark, use_bloom=False)
-    a = {(r.doc_id, r.media_ref) for r in with_b.collect()}
-    b = {(r.doc_id, r.media_ref) for r in without_b.collect()}
-    assert a == b
+def test_orphans_exact_without_bloom(spark, docs, catalog, monkeypatch):
+    """The salted shape with and without the Bloom prefilter yields the
+    same orphan pairs as the row-local shape."""
+    import anomalydetection_spark.operators.referential as R
+
+    rowlocal = _orphan_pairs(R.ReferentialCheck(spark, catalog), docs)
+    _forced(monkeypatch, bloom=True)
+    with_b = _orphan_pairs(R.ReferentialCheck(spark, catalog), docs)
+    _forced(monkeypatch, bloom=False)
+    ref = R.ReferentialCheck(spark, catalog)
+    assert ref.bloom is None
+    assert rowlocal and with_b == _orphan_pairs(ref, docs) == rowlocal
 
 
 def test_no_false_positives_on_clean_refs(spark, docs, catalog):
@@ -113,26 +142,17 @@ def test_bloom_tree_merge_matches_single_partition(spark, catalog):
     assert bits_many.any()  # non-trivial filter
 
 
-def test_prebuilt_bloom_matches_inline_build(spark, docs, catalog):
-    """A bloom built once and passed in (the streaming-reuse path) gives
-    exactly the same orphans as the per-call build."""
-    from anomalydetection_spark.functions.bloom import build_bloom
-
-    n = catalog.count()
-    pre = build_bloom(catalog, "media_ref", n)
-    a = {
-        (r.doc_id, r.media_ref)
-        for r in orphan_refs(
-            docs, catalog, spark, use_bloom=True, catalog_size_hint=n
-        ).collect()
-    }
-    b = {
-        (r.doc_id, r.media_ref)
-        for r in orphan_refs(
-            docs, catalog, spark, bloom=pre, catalog_size_hint=n
-        ).collect()
-    }
-    assert a == b
+def test_prebuilt_bloom_matches_inline_build(spark, docs, catalog,
+                                             monkeypatch):
+    """A check whose Bloom filter was built up front (``build()``, the
+    stream's reuse path) gives exactly the orphans of one that builds
+    it on first use."""
+    R = _forced(monkeypatch, bloom=True)
+    pre = R.ReferentialCheck(spark, catalog).build()
+    assert "bloom" in vars(pre)
+    lazy = R.ReferentialCheck(spark, catalog)
+    assert "bloom" not in vars(lazy)
+    assert _orphan_pairs(pre, docs) == _orphan_pairs(lazy, docs)
 
 
 def test_complete_catalog_passes(spark, docs):
@@ -151,27 +171,58 @@ def test_referential_check_builds_bloom_once(spark, docs, catalog,
     """Beyond the broadcast cap and the probe-side guard the shared
     referential check is the salted anti-join, and beyond the Bloom
     threshold its prefilter is built ONCE per check however many scopes
-    it probes; its per-doc orphan aggregate flags exactly the docs the
-    plain anti-join does."""
+    it probes; its orphan pairs flag exactly the docs the row-local
+    shape does."""
     import anomalydetection_spark.operators.referential as R
 
+    want = {d for d, _, _ in _orphan_pairs(R.ReferentialCheck(spark, catalog),
+                                           docs)}
     builds = []
     real_build = R.build_bloom
     monkeypatch.setattr(
         R, "build_bloom",
         lambda *a, **k: builds.append(1) or real_build(*a, **k),
     )
-    monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", 100)
-    monkeypatch.setattr(R, "PROBE_MAX_DISTINCT_REFS", 0)
-    monkeypatch.setattr(R, "BLOOM_MIN_CATALOG_ROWS", 100)
+    _forced(monkeypatch, bloom=True)
     ref = R.ReferentialCheck(spark, catalog).build()
     assert ref.bloom is not None and len(builds) == 1
-    got = {r.doc_id for r in ref.orphan_doc(docs).collect()}
-    ref.orphan_doc(docs.filter(F.col("partition_id") < 4)).count()
+    got = {d for d, _, _ in _orphan_pairs(ref, docs)}
+    _orphan_pairs(ref, docs.filter(F.col("partition_id") < 4))
     assert len(builds) == 1
-    want = {
-        r.doc_id
-        for r in orphan_refs(docs, catalog, spark, use_bloom=False).collect()
-    }
     assert got == want
 
+
+def test_orphan_refs_takes_the_pass_shape(spark, docs, catalog, monkeypatch,
+                                          caplog):
+    """``orphan_refs`` and the pass's core (``validate_scope``) take
+    their join shape from the same ``ReferentialCheck.orphans``, so with
+    the cap constants forced they log the same shape: row-local,
+    probe-side (with the same ref counts) and salted+bloom."""
+    import logging
+
+    import anomalydetection_spark.operators.referential as R
+    from anomalydetection_spark.plans.pipeline import validate_scope
+
+    def shapes():
+        out = []
+        for fn in (
+            lambda: orphan_refs(docs, catalog, spark).count(),
+            lambda: validate_scope(
+                docs, R.ReferentialCheck(spark, catalog), emit=False
+            ),
+        ):
+            caplog.clear()
+            with caplog.at_level(logging.INFO, logger=R.__name__):
+                fn()
+            (msg,) = [
+                r.getMessage() for r in caplog.records if r.name == R.__name__
+            ]
+            out.append(msg)
+        return out
+
+    assert shapes() == ["referential: row-local"] * 2
+    monkeypatch.setattr(R, "BROADCAST_MAX_CATALOG_ROWS", catalog.count() - 1)
+    probe, scope = shapes()
+    assert probe == scope and probe.startswith("referential: probe-side (")
+    _forced(monkeypatch, bloom=True)
+    assert shapes() == ["referential: salted+bloom"] * 2
